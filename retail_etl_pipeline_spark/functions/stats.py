@@ -21,8 +21,7 @@ is one group's rows, never the banned empty-partitionBy shape.
 Property-tested against exact-fraction/float Python oracles in
 ``tests/test_stats_kernels.py`` and ``tests/test_r6_kernels.py``;
 exercised end-to-end by the registered inequality/drift/survival
-queries and the round-6 staged surface (``registry_next.py``) with
-their DuckDB twins.
+queries in ``queries/`` with their DuckDB twins.
 """
 
 from __future__ import annotations
@@ -1629,113 +1628,3 @@ def brown_forsythe(
         .otherwise(F.lit(None).cast("double"))
         .alias("f_stat"),
     )
-
-
-def cochran_armitage(
-    df: DataFrame, flag_col: str, score_col: str
-) -> DataFrame:
-    """One-row Cochran–Armitage trend test: "does the event RATE move
-    monotonically across ordered groups?" — the binary-outcome member
-    of the ordered-alternative family next to
-    :func:`jonckheere_terpstra` (which orders a continuous response).
-    ``flag_col`` is the boolean event, ``score_col`` the integer group
-    score w (the statistic is invariant under shifting all scores, so a
-    calendar year works directly).
-
-    With per-group totals n_i and event counts r_i, N = Σn_i,
-    R = Σr_i:  T = Σ w_i·(r_i − n_i·R/N)  and
-    Var(T) = (R/N)(1 − R/N)·(Σ w_i²·n_i − (Σ w_i·n_i)²/N); the
-    standardized z = T/√Var(T) is assembled from the five EXACT
-    DECIMAL(38,0)/HUGEINT sums (N, R, Σwn, Σwr, Σw²n) as
-    z = (N·Σwr − R·Σwn) / √(R·(N−R)·(N·Σw²n − (Σwn)²)/N): every
-    subtraction happens in exact integers (no float cancellation), the
-    double conversion touches only final factors, and the expression is
-    textually mirrored on both engines, then rounded through round6.
-
-    Plan: one (score)-keyed partial-aggregate pass over the fact rows,
-    one |G|-bounded global aggregate, one-row output
-    (n_groups, n_total, n_events, z). z is NULL when there are <2
-    groups, R = 0, R = N, or all scores equal (Var = 0)."""
-    dec = "decimal(38,0)"
-    per = df.groupBy(F.col(score_col).cast("bigint").alias("w")).agg(
-        F.count(F.lit(1)).cast(dec).alias("n_i"),
-        F.sum(F.when(F.col(flag_col), 1).otherwise(0))
-        .cast(dec)
-        .alias("r_i"),
-    )
-    wdec = F.col("w").cast(dec)
-    zero = F.lit(0).cast(dec)
-    g = per.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.coalesce(F.sum("n_i"), zero).cast(dec).alias("n"),
-        F.coalesce(F.sum("r_i"), zero).cast(dec).alias("r"),
-        F.coalesce(F.sum(wdec * F.col("n_i")), zero).cast(dec).alias("swn"),
-        F.coalesce(F.sum(wdec * F.col("r_i")), zero).cast(dec).alias("swr"),
-        F.coalesce(F.sum(wdec * wdec * F.col("n_i")), zero)
-        .cast(dec)
-        .alias("sw2n"),
-    )
-    num = (F.col("n") * F.col("swr") - F.col("r") * F.col("swn")).cast(dec)
-    varnum = (
-        F.col("n") * F.col("sw2n") - F.col("swn") * F.col("swn")
-    ).cast(dec)
-    z = num.cast("double") / F.sqrt(
-        F.col("r").cast("double")
-        * (F.col("n") - F.col("r")).cast("double")
-        * varnum.cast("double")
-        / F.col("n").cast("double")
-    )
-    ok = (
-        (F.col("k") > 1)
-        & (F.col("r") > 0)
-        & (F.col("r") < F.col("n"))
-        & (varnum > 0)
-    )
-    return g.select(
-        F.col("k").alias("n_groups"),
-        F.col("n").cast("bigint").alias("n_total"),
-        F.col("r").cast("bigint").alias("n_events"),
-        F.when(ok, round6(z))
-        .otherwise(F.lit(None).cast("double"))
-        .alias("z"),
-    )
-
-
-#: Oracle twin of :func:`cochran_armitage`; expects a CTE named ``vals``
-#: with columns (flag BOOLEAN, w BIGINT) to be prepended by the caller.
-COCHRAN_ARMITAGE_SQL = """
-per AS (
-  SELECT w, CAST(COUNT(*) AS HUGEINT) AS n_i,
-         CAST(SUM(CASE WHEN flag THEN 1 ELSE 0 END) AS HUGEINT) AS r_i
-  FROM vals GROUP BY w
-),
-g AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(COALESCE(SUM(n_i), 0) AS HUGEINT) AS n,
-         CAST(COALESCE(SUM(r_i), 0) AS HUGEINT) AS r,
-         CAST(COALESCE(SUM(CAST(w AS HUGEINT) * n_i), 0) AS HUGEINT)
-           AS swn,
-         CAST(COALESCE(SUM(CAST(w AS HUGEINT) * r_i), 0) AS HUGEINT)
-           AS swr,
-         CAST(COALESCE(SUM(CAST(w AS HUGEINT) * w * n_i), 0) AS HUGEINT)
-           AS sw2n
-  FROM per
-),
-calc AS (
-  SELECT k, n, r,
-         n * swr - r * swn AS num,
-         n * sw2n - swn * swn AS varnum
-  FROM g
-)
-SELECT k AS n_groups,
-       CAST(n AS BIGINT) AS n_total,
-       CAST(r AS BIGINT) AS n_events,
-       CASE WHEN k > 1 AND r > 0 AND r < n AND varnum > 0
-            THEN CAST(round(CAST(
-                   CAST(num AS DOUBLE)
-                     / sqrt(CAST(r AS DOUBLE) * CAST(n - r AS DOUBLE)
-                            * CAST(varnum AS DOUBLE) / CAST(n AS DOUBLE))
-                 AS DECIMAL(30,12)), 6) AS DOUBLE)
-       END AS z
-FROM calc
-"""

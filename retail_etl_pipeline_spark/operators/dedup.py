@@ -110,7 +110,6 @@ shingles AS (
 )"""
 
 
-_GRAM_SQL = " || ' ' || ".join(f"t[i+{j}]" for j in range(SHINGLE_N))
 SHINGLES_CTE = shingles_cte_sql(SHINGLE_N)
 
 
@@ -1028,500 +1027,3 @@ def prefix_filter_neardup(
         .distinct()
     )
     return jaccard_verify_candidates(sh, cand, PREFIX_JACCARD_THRESHOLD)
-
-
-# ---------------------------------------------------------------------------
-# exact-substring (aligned-span) dedup — the suffix-array family
-# ---------------------------------------------------------------------------
-#
-# Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
-# Better") dedups on long EXACT token spans shared between documents —
-# a different signal from set-based Jaccard (which ignores order) and
-# from boilerplate DF (which ignores pairing). The suffix-array build
-# is re-expressed relationally: positional shingles form an inverted
-# index, matches between two documents land on anti-diagonals
-# (pos_a - pos_b constant), and a shared span of length L is a run of
-# L-n+1 consecutive matches on one diagonal — a gaps-and-islands count,
-# no suffix array materialized.
-#
-# Scale: text never shuffles (positions + 60-bit fingerprints only);
-# the self-join is bounded by the rare-shingle cap (a shingle occurring
-# c times contributes c^2 matches, so df_cap bounds candidate volume
-# the way LSH bands do — and dropping common shingles only SHORTENS
-# detected runs, never invents one: conservative in the safe
-# direction); islands need one window partitioned by (pair, diagonal),
-# keys that are near-unique by construction.
-
-#: a shingle occurring more than this many times corpus-wide is dropped
-#: from the span index (common grams pair quadratically and carry no
-#: pair-specific signal — the same reason suffix-array pipelines handle
-#: high-frequency spans out of band)
-SPAN_DF_CAP = 16
-#: report/dedup threshold: a shared exact run of >= this many TOKENS
-MIN_SPAN_TOKENS = 20
-
-
-def positional_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """(doc_id, pos, sh) — every word ``n``-gram instance with its
-    0-based start position and 60-bit fingerprint (the positional twin
-    of :func:`shingles`, which dedups instances away). lead() windows
-    for the gram build, same rationale as shingles()."""
-    from pyspark.sql import Window
-
-    toks = docs.select(
-        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    tail = [F.lead("tok", j).over(w) for j in range(1, n)]
-    return (
-        toks.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", F.col("tok"), *tail).alias("gram"),
-            tail[-1].alias("_last"),
-        )
-        .where(F.col("_last").isNotNull())
-        .select("doc_id", "pos", fingerprint64(F.col("gram")).alias("sh"))
-    )
-
-
-def aligned_span_pairs(
-    docs: DataFrame, n: int = SHINGLE_N, df_cap: int = SPAN_DF_CAP
-) -> DataFrame:
-    """(doc_a, doc_b, longest_span) for every document pair sharing at
-    least one rare shingle: longest_span is the longest EXACT shared
-    token run (in tokens, = longest diagonal island + n - 1).
-
-    The tokenize+window+md5 pass is pinned once (consumed by the rare
-    filter and both join sides); everything downstream shuffles only
-    (doc, pos, fp) triples."""
-    ps = positional_shingles(docs, n).localCheckpoint(eager=True)
-    rare = (
-        ps.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") <= df_cap)
-        .select("sh")
-    )
-    pr = ps.join(rare, "sh")
-    a = pr.select(
-        F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "sh"
-    )
-    b = pr.select(
-        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"),
-        F.col("sh").alias("sh_b"),
-    )
-    m = a.join(
-        b,
-        (F.col("sh") == F.col("sh_b")) & (F.col("doc_a") < F.col("doc_b")),
-    ).select(
-        "doc_a", "doc_b", "pa", (F.col("pa") - F.col("pb")).alias("diag")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
-    isl = m.select(
-        "doc_a", "doc_b", "diag",
-        (F.col("pa") - F.row_number().over(w)).alias("grp"),
-    )
-    runs = isl.groupBy("doc_a", "doc_b", "diag", "grp").agg(
-        (F.count(F.lit(1)) + F.lit(n - 1)).cast("bigint").alias("span")
-    )
-    return runs.groupBy("doc_a", "doc_b").agg(
-        F.max("span").alias("longest_span")
-    )
-
-
-def exact_substring_pairs(
-    docs: DataFrame,
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> DataFrame:
-    """Document pairs sharing an exact token run of >= ``min_span``
-    tokens — the Lee et al. dedup worklist, longest overlap first."""
-    return (
-        aligned_span_pairs(docs, n, df_cap)
-        .where(F.col("longest_span") >= min_span)
-        .orderBy(F.desc("longest_span"), "doc_a", "doc_b")
-    )
-
-
-def substring_dedup_keep(
-    docs: DataFrame,
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> DataFrame:
-    """Kept documents after exact-substring dedup: a doc is DROPPED iff
-    some LOWER-id doc shares an exact run of >= ``min_span`` tokens
-    (the same greedy keep-lowest-id rule as semdedup_keep — one
-    broadcast anti-join, no connected components)."""
-    dropped = (
-        aligned_span_pairs(docs, n, df_cap)
-        .where(F.col("longest_span") >= min_span)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    return (
-        docs.join(dropped, "doc_id", "left_anti")
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    )
-
-
-def source_span_overlap_matrix(
-    docs: DataFrame,
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> DataFrame:
-    """Cross-feed exact-overlap monitor: for every (unordered) source
-    pair, how many document pairs share a >= ``min_span``-token exact
-    run and the longest such run — the table that catches one feed
-    mirroring another (or an eval set leaking into a train feed) at
-    the span level rather than the set level."""
-    pairs = aligned_span_pairs(docs, n, df_cap).where(
-        F.col("longest_span") >= min_span
-    )
-    src = docs.select("doc_id", "source")
-    joined = (
-        pairs.join(
-            src.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("source").alias("sa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            src.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("source").alias("sb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            F.least("sa", "sb").alias("source_lo"),
-            F.greatest("sa", "sb").alias("source_hi"),
-            "longest_span",
-        )
-    )
-    return (
-        joined.groupBy("source_lo", "source_hi")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.max("longest_span").alias("max_span"),
-        )
-        .orderBy("source_lo", "source_hi")
-    )
-
-
-def _span_ctes(n: int, df_cap: int) -> str:
-    """The shared oracle chain d -> ps -> rare -> pr -> m -> isl ->
-    runs -> best (doc_a, doc_b, longest_span)."""
-    gram = " || ' ' || ".join(f"t[i+{j}]" for j in range(n))
-    return f"""d AS (
-  SELECT doc_id, {TOKENS_SQL.format(c='text')} AS t FROM documents
-),
-ps AS (
-  SELECT doc_id, i AS pos, {fingerprint64_sql(f"({gram})")} AS sh
-  FROM d, unnest(range(1, len(t) - {n - 2})) AS r(i)
-),
-rare AS (SELECT sh FROM ps GROUP BY sh HAVING COUNT(*) <= {df_cap}),
-pr AS (SELECT ps.* FROM ps JOIN rare USING (sh)),
-m AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa,
-         a.pos - b.pos AS diag
-  FROM pr a JOIN pr b ON a.sh = b.sh AND a.doc_id < b.doc_id
-),
-isl AS (
-  SELECT doc_a, doc_b, diag, pa,
-         pa - ROW_NUMBER() OVER (
-           PARTITION BY doc_a, doc_b, diag ORDER BY pa
-         ) AS grp
-  FROM m
-),
-runs AS (
-  SELECT doc_a, doc_b, CAST(COUNT(*) + {n - 1} AS BIGINT) AS span
-  FROM isl GROUP BY doc_a, doc_b, diag, grp
-),
-best AS (
-  SELECT doc_a, doc_b, MAX(span) AS longest_span
-  FROM runs GROUP BY 1, 2
-)"""
-
-
-def exact_substring_pairs_sql(
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> str:
-    return f"""
-WITH {_span_ctes(n, df_cap)}
-SELECT doc_a, doc_b, longest_span
-FROM best WHERE longest_span >= {min_span}
-ORDER BY longest_span DESC, doc_a, doc_b
-"""
-
-
-def substring_dedup_keep_sql(
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> str:
-    return f"""
-WITH {_span_ctes(n, df_cap)},
-dropped AS (
-  SELECT DISTINCT doc_b AS doc_id FROM best
-  WHERE longest_span >= {min_span}
-)
-SELECT doc_id, source FROM documents
-WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-ORDER BY doc_id
-"""
-
-
-def source_span_overlap_matrix_sql(
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> str:
-    return f"""
-WITH {_span_ctes(n, df_cap)},
-hits AS (
-  SELECT LEAST(da.source, db.source) AS source_lo,
-         GREATEST(da.source, db.source) AS source_hi,
-         longest_span
-  FROM best
-  JOIN documents da ON best.doc_a = da.doc_id
-  JOIN documents db ON best.doc_b = db.doc_id
-  WHERE longest_span >= {min_span}
-)
-SELECT source_lo, source_hi,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       MAX(longest_span) AS max_span
-FROM hits GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-
-def exact_span_removal_stats(
-    docs: DataFrame,
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> DataFrame:
-    """Per-document accounting for exact-substring REMOVAL (the Lee et
-    al. cut applied, not just detected): every >= ``min_span``-token
-    aligned run is removed from the HIGHER-id document of its pair
-    (keep-one-copy, the same deterministic keep-lowest rule as the
-    keep queries), and the report is (doc_id, n_tokens, n_removed,
-    kept_ratio) over ALL documents.
-
-    The covered-position explode runs only for over-threshold runs
-    (rare by construction) and dedups before counting — the same
-    bounded-explode shape as boilerplate_removal_stats, but span/pair-
-    exact instead of DF-based."""
-    from pyspark.sql import Window
-
-    from .text import token_count
-
-    ps = positional_shingles(docs, n).localCheckpoint(eager=True)
-    rare = (
-        ps.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") <= df_cap)
-        .select("sh")
-    )
-    pr = ps.join(rare, "sh")
-    a = pr.select(
-        F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "sh"
-    )
-    b = pr.select(
-        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"),
-        F.col("sh").alias("sh_b"),
-    )
-    m = a.join(
-        b,
-        (F.col("sh") == F.col("sh_b")) & (F.col("doc_a") < F.col("doc_b")),
-    ).select(
-        "doc_a", "doc_b", "pa", (F.col("pa") - F.col("pb")).alias("diag")
-    )
-    w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
-    isl = m.select(
-        "doc_a", "doc_b", "diag", "pa",
-        (F.col("pa") - F.row_number().over(w)).alias("grp"),
-    )
-    runs = (
-        isl.groupBy("doc_a", "doc_b", "diag", "grp")
-        .agg(
-            (F.count(F.lit(1)) + F.lit(n - 1)).cast("bigint").alias("span"),
-            (F.min("pa") - F.col("diag")).alias("start_b"),
-        )
-        .where(F.col("span") >= min_span)
-    )
-    covered = (
-        runs.select(
-            F.col("doc_b").alias("doc_id"),
-            F.explode(
-                F.sequence(
-                    F.col("start_b"),
-                    F.col("start_b") + F.col("span") - 1,
-                )
-            ).alias("p"),
-        )
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_removed"))
-    )
-    base = docs.select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens")
-    )
-    return (
-        base.join(covered, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.coalesce("n_removed", F.lit(0)).cast("bigint").alias(
-                "n_removed"
-            ),
-            (
-                (
-                    F.col("n_tokens") - F.coalesce("n_removed", F.lit(0))
-                ).cast("double")
-                / F.col("n_tokens")
-            ).alias("kept_ratio"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def exact_span_removal_stats_sql(
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> str:
-    return f"""
-WITH {_span_ctes(n, df_cap)},
-long_runs AS (
-  SELECT doc_b, MIN(pa) - diag AS start_b,
-         CAST(COUNT(*) + {n - 1} AS BIGINT) AS span
-  FROM isl GROUP BY doc_a, doc_b, diag, grp
-  HAVING COUNT(*) + {n - 1} >= {min_span}
-),
-cov AS (
-  SELECT DISTINCT doc_b AS doc_id, start_b + j.j AS p
-  FROM long_runs, unnest(range(0, CAST(span AS INTEGER))) AS j(j)
-),
-rem AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_removed FROM cov GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(len(t) AS BIGINT) AS n_tokens,
-       CAST(COALESCE(n_removed, 0) AS BIGINT) AS n_removed,
-       CAST(len(t) - COALESCE(n_removed, 0) AS DOUBLE) / len(t)
-         AS kept_ratio
-FROM d LEFT JOIN rem ON d.doc_id = rem.doc_id
-ORDER BY d.doc_id
-"""
-
-
-def split_span_contamination(
-    docs: DataFrame,
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> DataFrame:
-    """Span-level split-leakage audit: for every CROSS-split pair of
-    the train/val/test assignment (``corpus.split_assignment``), how
-    many document pairs share an exact >= ``min_span``-token run, how
-    many distinct documents on each side are implicated, and the
-    longest run — the order-sensitive companion to the MinHash-cluster
-    split_leakage_audit: paraphrase-level leakage shows there, literal
-    copied passages show HERE even when the documents' overall shingle
-    sets are dissimilar.
-
-    Returns (split_lo, split_hi, n_pairs, n_docs_lo, n_docs_hi,
-    max_span); split names canonicalize lexicographically and the
-    implicated-doc counts follow the canonical side. Within-split pairs
-    are excluded — those are substring_dedup_keep's business, not
-    leakage. Plan: the shared aligned-span chain plus one
-    (doc -> split) projection joined twice, then a 3-row-bounded
-    aggregate."""
-    # lazy import: corpus.py imports from this module at load time
-    from .corpus import split_assignment
-
-    pairs = aligned_span_pairs(docs, n, df_cap).where(
-        F.col("longest_span") >= min_span
-    )
-    sp = docs.select("doc_id", split_assignment().alias("split"))
-    j = (
-        pairs.join(
-            sp.select(
-                F.col("doc_id").alias("doc_a"), F.col("split").alias("sa")
-            ),
-            "doc_a",
-        )
-        .join(
-            sp.select(
-                F.col("doc_id").alias("doc_b"), F.col("split").alias("sb")
-            ),
-            "doc_b",
-        )
-        .where(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("split_lo"),
-            F.greatest("sa", "sb").alias("split_hi"),
-            F.when(F.col("sa") <= F.col("sb"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("doc_lo"),
-            F.when(F.col("sa") <= F.col("sb"), F.col("doc_b"))
-            .otherwise(F.col("doc_a"))
-            .alias("doc_hi"),
-            "longest_span",
-        )
-    )
-    return (
-        j.groupBy("split_lo", "split_hi")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.countDistinct("doc_lo").cast("bigint").alias("n_docs_lo"),
-            F.countDistinct("doc_hi").cast("bigint").alias("n_docs_hi"),
-            F.max("longest_span").alias("max_span"),
-        )
-        .orderBy("split_lo", "split_hi")
-    )
-
-
-def split_span_contamination_sql(
-    min_span: int = MIN_SPAN_TOKENS,
-    n: int = SHINGLE_N,
-    df_cap: int = SPAN_DF_CAP,
-) -> str:
-    from .corpus import SPLIT_CASE_SQL
-
-    return f"""
-WITH {_span_ctes(n, df_cap)},
-sp AS (
-  SELECT doc_id, {SPLIT_CASE_SQL} AS split FROM documents
-),
-hits AS (
-  SELECT LEAST(sa.split, sb.split) AS split_lo,
-         GREATEST(sa.split, sb.split) AS split_hi,
-         CASE WHEN sa.split <= sb.split THEN best.doc_a
-              ELSE best.doc_b END AS doc_lo,
-         CASE WHEN sa.split <= sb.split THEN best.doc_b
-              ELSE best.doc_a END AS doc_hi,
-         longest_span
-  FROM best
-  JOIN sp sa ON best.doc_a = sa.doc_id
-  JOIN sp sb ON best.doc_b = sb.doc_id
-  WHERE longest_span >= {min_span} AND sa.split != sb.split
-)
-SELECT split_lo, split_hi,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       CAST(COUNT(DISTINCT doc_lo) AS BIGINT) AS n_docs_lo,
-       CAST(COUNT(DISTINCT doc_hi) AS BIGINT) AS n_docs_hi,
-       MAX(longest_span) AS max_span
-FROM hits GROUP BY 1, 2
-ORDER BY 1, 2
-"""

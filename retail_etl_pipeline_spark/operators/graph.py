@@ -234,15 +234,6 @@ def pagerank_topk(
     )
 
 
-def copurchase_pagerank(
-    lineitem: DataFrame, iterations: int = 5, k: int = 20
-) -> DataFrame:
-    """Top-k parts by co-purchase PageRank over a freshly built edge
-    list (registry feeds :func:`pagerank_topk` the shared materialized
-    relation instead)."""
-    return pagerank_topk(copurchase_edges(lineitem), iterations, k)
-
-
 def pagerank_oracle_sql(iterations: int = 5, k: int = 20) -> str:
     """Unrolled-CTE DuckDB twin of the exact fixed-point recurrence.
     (Recursive CTEs can't aggregate in the recursive member, so the

@@ -579,224 +579,3 @@ WHERE cum <= budget_tokens
 GROUP BY 1, 2, 3
 ORDER BY ranked.source
 """
-
-
-#: per-source quota for the deterministic stratified sample (fixture
-#: sources hold ~25 docs each, so 12 exercises both the cut and the
-#: keep-all-of-a-small-source edge once a source dips under quota)
-STRAT_SAMPLE_PER_SOURCE = 12
-
-
-def stratified_sample_by_source(
-    docs: DataFrame, per_source: int = STRAT_SAMPLE_PER_SOURCE
-) -> DataFrame:
-    """Deterministic stratified downsample: keep the ``per_source``
-    documents with the smallest md5-hash priority within EACH source —
-    the fixed-quota-per-feed sampling step a training-data pipeline
-    runs to cap any one crawl's share, replayable because the priority
-    is a pure hash of the doc id (no RNG state, same contract as
-    documents_weighted_sample / dsir_gumbel_topk).
-
-    Returns (source, doc_id, sample_rank) with sample_rank 1..quota in
-    priority order. Plan: one projection + one rank-over-source window
-    that Spark rewrites to WindowGroupLimit (per-partition top-k
-    push-down — no source's full document list is ever sorted or
-    materialized), so the cost at 100 TB is a streaming top-``quota``
-    per source, not a per-source sort."""
-    from pyspark.sql.window import Window
-
-    pr = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))),
-            1,
-            FP_HEX_DIGITS,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    w = Window.partitionBy("source").orderBy(
-        F.asc("priority"), F.asc("doc_id")
-    )
-    return (
-        docs.select("source", "doc_id", pr.alias("priority"))
-        .withColumn("sample_rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("sample_rank") <= per_source)
-        .select("source", "doc_id", "sample_rank")
-        .orderBy("source", "sample_rank")
-    )
-
-
-def stratified_sample_by_source_sql(
-    per_source: int = STRAT_SAMPLE_PER_SOURCE,
-) -> str:
-    return f"""
-WITH pr AS (
-  SELECT source, doc_id,
-         CAST(('0x' || substring(
-                 md5('strat:' || CAST(doc_id AS VARCHAR)),
-                 1, {FP_HEX_DIGITS})) AS BIGINT) AS priority
-  FROM documents
-),
-rk AS (
-  SELECT source, doc_id,
-         CAST(row_number() OVER (PARTITION BY source
-                                 ORDER BY priority, doc_id) AS BIGINT)
-           AS sample_rank
-  FROM pr
-)
-SELECT source, doc_id, sample_rank
-FROM rk WHERE sample_rank <= {per_source}
-ORDER BY source, sample_rank
-"""
-
-
-def _doc_bigram_counts(docs: DataFrame) -> DataFrame:
-    """(doc_id, a, b, c): exact per-document adjacent-bigram counts via
-    the lead()-window shingle pattern (no position self-join). The one
-    tokenize+window pass feeds both the corpus bigram model and the
-    per-doc terms, so it is checkpointed like _doc_token_counts."""
-    from pyspark.sql.window import Window
-
-    toks = docs.select(
-        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bi = toks.select(
-        "doc_id",
-        F.col("tok").alias("a"),
-        F.lead("tok").over(w).alias("b"),
-    ).where(F.col("b").isNotNull())
-    return (
-        bi.groupBy("doc_id", "a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-
-
-_DOC_BIGRAM_COUNTS_SQL = f"""
-btoks AS (
-  SELECT doc_id, unnest({TOKENS_SQL.format(c='text')}) AS tok,
-         unnest(range(len({TOKENS_SQL.format(c='text')}))) AS pos
-  FROM documents
-),
-bg AS (
-  SELECT doc_id, tok AS a,
-         lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS b
-  FROM btoks
-),
-dbg AS (
-  SELECT doc_id, a, b, CAST(COUNT(*) AS BIGINT) AS c
-  FROM bg WHERE b IS NOT NULL GROUP BY 1, 2, 3
-)"""
-
-
-def bigram_logprob_quality(docs: DataFrame) -> DataFrame:
-    """Per-document cross-entropy (nats/bigram) under the corpus-trained
-    add-1 CONDITIONAL bigram LM — the next n-gram step of the CCNet
-    quality signal above :func:`unigram_logprob_quality`: p(b|a) =
-    (c(ab) + 1) / (c(a·) + V), where c(a·) counts bigrams whose context
-    is ``a`` and V is the distinct-token vocabulary over bigram
-    positions. Fluent token ORDER now matters: a doc built from common
-    words in rare arrangements scores badly here while the unigram
-    model cannot see it.
-
-    Returns (doc_id, n_bigrams, xent2); documents with fewer than two
-    tokens have no bigrams and are absent by construction. xent2 =
-    (Σ c·ln(c(a·) + V) − Σ c·ln(c(ab) + 1)) / n_bigrams, folded in ONE
-    pass over the doc's bigram set sorted by (a, b) — both engines add
-    the same doubles in the same order — then rounded through round6.
-
-    Plan: one tokenize+lead pass (checkpointed), a (doc, bigram)-level
-    join against the |bigram vocab| model (bucketable at any corpus
-    size), a broadcast context-count join, one grouped fold. Nothing
-    shuffles raw text."""
-    dbg = _doc_bigram_counts(docs)
-    model = dbg.groupBy("a", "b").agg(
-        F.sum("c").cast("bigint").alias("cab")
-    )
-    ctx = model.groupBy("a").agg(F.sum("cab").cast("bigint").alias("ca"))
-    vocab = (
-        model.select(F.col("a").alias("w"))
-        .union(model.select(F.col("b").alias("w")))
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("bigint").alias("v"))
-    )
-    terms = (
-        dbg.join(model, ["a", "b"])
-        .join(ctx, "a")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "doc_id",
-            "a",
-            "b",
-            "c",
-            (
-                F.col("c").cast("double")
-                * (
-                    F.log((F.col("ca") + F.col("v")).cast("double"))
-                    - F.log((F.col("cab") + 1).cast("double"))
-                )
-            ).alias("term"),
-        )
-    )
-    return (
-        terms.groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_bigrams"),
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("a"), F.col("b"), F.col("term"))
-                    )
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["term"],
-            ).alias("s"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            round6(
-                F.col("s") / F.col("n_bigrams").cast("double")
-            ).alias("xent2"),
-        )
-    )
-
-
-BIGRAM_LOGPROB_QUALITY_SQL = f"""
-WITH {_DOC_BIGRAM_COUNTS_SQL},
-model AS (
-  SELECT a, b, CAST(SUM(c) AS BIGINT) AS cab FROM dbg GROUP BY a, b
-),
-ctx AS (
-  SELECT a, CAST(SUM(cab) AS BIGINT) AS ca FROM model GROUP BY a
-),
-bvocab AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS v
-  FROM (SELECT a AS w FROM model UNION SELECT b AS w FROM model)
-),
-bterms AS (
-  SELECT dbg.doc_id, dbg.a, dbg.b, dbg.c,
-         CAST(dbg.c AS DOUBLE)
-           * (ln(CAST(ca + v AS DOUBLE)) - ln(CAST(cab + 1 AS DOUBLE)))
-           AS term
-  FROM dbg
-  JOIN model ON dbg.a = model.a AND dbg.b = model.b
-  JOIN ctx ON dbg.a = ctx.a, bvocab
-),
-bx AS (
-  SELECT doc_id,
-         CAST(SUM(c) AS BIGINT) AS n_bigrams,
-         list_reduce(
-           list_transform(
-             list(struct_pack(a := bterms.a, b := bterms.b,
-                              term := term)
-                  ORDER BY bterms.a, bterms.b),
-             x -> x.term),
-           (p, q) -> p + q) AS s
-  FROM bterms GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams,
-       {_ROUND6_SQL.format(x='s / CAST(n_bigrams AS DOUBLE)')} AS xent2
-FROM bx
-"""

@@ -1792,15 +1792,6 @@ def _pq_trained_ctes(iters: int) -> tuple[list[str], str]:
     return ctes, fin
 
 
-def embedding_pq_codes_lloyd_sql(train_iters: int = 1) -> str:
-    ctes, _ = _pq_trained_ctes(train_iters)
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body}
-SELECT vec_id, label, pq_code FROM codes
-"""
-
-
 def ann_pq_adc_topk_lloyd_sql(
     query_id: int = 0, k: int = TOP_K, train_iters: int = 1
 ) -> str:
@@ -3625,418 +3616,4 @@ SELECT cf.cell,
 FROM cells_fin cf JOIN codes c ON cf.vec_id = c.vec_id
 GROUP BY cf.cell
 ORDER BY cf.cell
-"""
-
-
-def ivf_cell_quality(emb: DataFrame, iters: int = 1) -> DataFrame:
-    """Coarse-quantizer quality census: per Lloyd cell, the population
-    and the mean squared L2 distance of members to their centroid (the
-    within-cell scatter faiss reports as quantizer imbalance/distortion
-    — rising mean_dist2 on a rebuild means the coarse quantizer no
-    longer fits the corpus; pairs with ivfpq16_index_stats' code
-    census).
-
-    Scale: the assignment is the usual pure projection over inlined
-    centroid literals; per-member distance is an expression; the
-    roll-up is one |cells|-row aggregate. Parity: each distance is
-    rounded onto DECIMAL(20,6) BEFORE summing (exact distributive sum,
-    order-free at any cell size), and the mean divides the exact sum
-    as a double."""
-    vecs = _vectors(emb)
-    cells, cents = _lloyd_refined_cells(vecs, iters)
-    cids = sorted(cents)
-    cent_mat = F.array(*[_dbl_arr_lit(cents[c]) for c in cids])
-    cid_arr = F.array(*[F.lit(c).cast("bigint") for c in cids])
-    cv = F.element_at(
-        cent_mat, F.array_position(cid_arr, F.col("cell")).cast("int")
-    )
-    d2 = (
-        dot(F.col("v"), F.col("v"))
-        - 2 * dot(F.col("v"), cv)
-        + dot(cv, cv)
-    )
-    d2_dec = F.round(d2.cast("decimal(20,9)"), 6).cast("decimal(20,6)")
-    return (
-        cells.select("cell", d2_dec.alias("d2"))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-            F.sum("d2").alias("s"),
-        )
-        .select(
-            "cell",
-            "n_vectors",
-            _round6(F.col("s").cast("double") / F.col("n_vectors")).alias(
-                "mean_dist2"
-            ),
-        )
-        .orderBy("cell")
-    )
-
-
-def ivf_cell_quality_sql(iters: int = 1) -> str:
-    """Oracle twin: the lloyd-cells chain, per-member 3-term L2^2 to
-    the assigned centroid, DECIMAL(20,6)-rounded before the sum."""
-    ctes = _lloyd_cells_ctes(iters)
-    body = ",\n".join(ctes)
-    d2 = (
-        f"{_DOT_SQL.format(a='cf.v', b='cf.v')}"
-        f" - 2 * {_DOT_SQL.format(a='cf.v', b=f'c.cv{iters}')}"
-        f" + {_DOT_SQL.format(a=f'c.cv{iters}', b=f'c.cv{iters}')}"
-    )
-    return f"""
-WITH {body},
-per AS (
-  SELECT cf.cell,
-         CAST(round(CAST({d2} AS DECIMAL(20,9)), 6) AS DECIMAL(20,6))
-           AS d2
-  FROM cells_fin cf JOIN cents{iters} c ON cf.cell = c.cid
-)
-SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       {_ROUND6_SQL.format(x='CAST(SUM(d2) AS DOUBLE) / COUNT(*)')}
-         AS mean_dist2
-FROM per GROUP BY cell ORDER BY cell
-"""
-
-
-# ---------------------------------------------------------------------------
-# Residual IVF-PQ: the true faiss IndexIVFPQ encoding. Plain IVF-PQ above
-# quantizes RAW vectors, so every codebook entry spends bits describing
-# where the cell already sits in space; encoding the RESIDUAL
-# r = v - centroid(cell(v)) instead centers every cell's population at the
-# origin and the 16 bytes describe only the within-cell offset — the
-# standard accuracy upgrade at identical storage and scan cost (Jegou et
-# al. 2011 §IV.B, the coarse+fine quantizer composition). Query side, the
-# LUT is built per PROBED cell from the query's own residual against that
-# cell, so candidates from different probe cells are scored in their own
-# frames — exactly faiss's per-list ADC tables.
-# ---------------------------------------------------------------------------
-
-
-def _residual_vectors(cells: DataFrame, cents: dict) -> DataFrame:
-    """(vec_id, label, v, cell) with ``v`` replaced by the residual
-    v − centroid(cell): centroids fold to one 2-D plan-constant literal
-    indexed by the row's cell, the subtraction is a zip_with projection
-    — a pure map pass, no join, at any corpus size."""
-    cids = sorted(cents)
-    cent_mat = F.array(*[_dbl_arr_lit(cents[c]) for c in cids])
-    cid_arr = F.array(*[F.lit(c).cast("bigint") for c in cids])
-    idx = F.array_position(cid_arr, F.col("cell"))
-    centv = F.element_at(cent_mat, idx.cast("int"))
-    rv = F.zip_with(F.col("v"), centv, lambda a, b: a - b)
-    return cells.select("vec_id", "label", rv.alias("v"), "cell")
-
-
-def ann_ivfpq16_residual_topk(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-    train_iters: int = 1,
-) -> DataFrame:
-    """IVF-PQ16 over RESIDUAL encoding — faiss IndexIVFPQ proper: PQ16
-    books train on (v − cell centroid) so the 16 bytes/vector spend
-    their precision on within-cell structure, and each probed cell
-    scores its candidates against the query's residual IN THAT CELL
-    (per-cell LUT, a CASE over ``nprobe`` folded constant tables).
-    Same scan shape as :func:`ann_ivfpq16_topk`: probe-cell filter on
-    the codes scan, 16 lookups per candidate, TakeOrdered — the
-    accuracy upgrade costs nothing at serve time."""
-    vecs = _vectors(emb)
-    cells, cents = _lloyd_refined_cells(vecs, iters=iters)
-    resid = _residual_vectors(cells, cents).select(
-        "vec_id", "label", "v"
-    )
-    books = _pq8_family_books(resid, train_iters, PQ16_M, PQ16_DIMS)
-    # r10: the residual relation already carries the cell id — keep it
-    # through the pack projection instead of re-joining the cells
-    # relation on vec_id (one corpus scan + a join exchange saved)
-    codes = _pq16_pack(
-        _residual_vectors(cells, cents), books, keep=("cell",)
-    )
-    qv = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv, cents, nprobe)
-    adc = None
-    for c in probe_cells:
-        qr = [qv[i] - cents[c][i] for i in range(len(qv))]
-        lut = _pq_query_lut(qr, books, PQ16_M, PQ16_DIMS)
-        branch = _adc_expr(lut, PQ16_M)
-        adc = (
-            F.when(F.col("cell") == c, branch)
-            if adc is None
-            else adc.when(F.col("cell") == c, branch)
-        )
-    return (
-        codes
-        .where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
-        )
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_ivfpq16_residual_topk_sql(
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-    train_iters: int = 1,
-) -> str:
-    """Oracle twin: lloyd chain -> residual relation ``er`` (cells_fin
-    joined to the final centroids) -> the PQ16 chain pointed at ``er``
-    -> per-probed-cell query residual slices -> per-cell LUT join on
-    (cell, s, j)."""
-    m, d = PQ16_M, PQ16_DIMS
-    ctes = _lloyd_cells_ctes(iters)
-    fincents, fincv = f"cents{iters}", f"cv{iters}"
-    ctes.append(
-        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-        f" vec_id = {query_id} AND rn <= {nprobe})"
-    )
-    ctes.append(
-        "er AS (\n"
-        "  SELECT cf.vec_id, cf.label,\n"
-        "         list_transform(range(len(cf.v)),\n"
-        f"                        i -> cf.v[i + 1] - cn.{fincv}[i + 1])"
-        " AS v\n"
-        f"  FROM cells_fin cf JOIN {fincents} cn ON cn.cid = cf.cell\n)"
-    )
-    pq_ctes, fin = _pq8_ctes(
-        train_iters, m=m, d=d, include_e=False, e_name="er"
-    )
-    ctes.extend(pq_ctes)
-    ctes.append(
-        "qres AS (\n"
-        "  SELECT qc.cell,\n"
-        "         list_transform(range(len(q.v)),\n"
-        f"                        i -> q.v[i + 1] - cn.{fincv}[i + 1])"
-        " AS v\n"
-        f"  FROM (SELECT v FROM e WHERE vec_id = {query_id}) q,\n"
-        f"       qcells qc JOIN {fincents} cn ON cn.cid = qc.cell\n)"
-    )
-    ctes.append(
-        "qsubs AS (\n"
-        f"  SELECT cell, s, v[s * {d} + 1 : s * {d} + {d}] AS vs\n"
-        f"  FROM qres, unnest(range({m})) AS r(s)\n)"
-    )
-    wcols = _pq_word_cols(m)
-    unwraps = ",\n".join(
-        f"         CASE WHEN {c} < 0 THEN CAST({c} AS HUGEINT) + {_TWO64}"
-        f"\n              ELSE CAST({c} AS HUGEINT) END AS up{w}"
-        for w, c in enumerate(wcols)
-    )
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body},
-rlut AS (
-  SELECT qs.cell, c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c JOIN qsubs qs ON qs.s = c.s
-),
-cands AS (
-  SELECT cf.vec_id, cf.cell
-  FROM cells_fin cf JOIN qcells USING (cell)
-  WHERE cf.vec_id != {query_id}
-),
-unwrapped AS (
-  SELECT codes.vec_id, codes.label, cands.cell,
-{unwraps}
-  FROM codes JOIN cands ON codes.vec_id = cands.vec_id
-),
-unpacked AS (
-  SELECT u.vec_id, u.label, u.cell, m.s,
-         CAST(((CASE m.w WHEN 0 THEN u.up0 ELSE u.up1 END) // m.mult)
-              % {PQ8_K} AS BIGINT) AS j
-  FROM unwrapped u CROSS JOIN mults m
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(rlut.dist) AS adc
-  FROM unpacked JOIN rlut ON unpacked.cell = rlut.cell
-                         AND unpacked.s = rlut.s AND unpacked.j = rlut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
-
-
-# ---------------------------------------------------------------------------
-# IVF recall census: the offline recall harness AS A QUERY. tools/
-# ann_recall.py measures recall in a driver script; a 100 TB serving
-# stack wants the same number as a scheduled relational job — pick a
-# deterministic query sample, compute exact top-k truth, replay the IVF
-# probe at several nprobe settings, and report recall@k per setting.
-# Cost is |Q| x corpus for the truth pass (the standard price of an
-# offline recall sweep — Q is a bounded sample, so the pass is linear in
-# the corpus) plus |Q| x nprobe/|cells| x corpus for the probes.
-# ---------------------------------------------------------------------------
-
-#: deterministic recall-census query sample (avoids the LSH plane /
-#: centroid constant rows; present at every fixture SF)
-RECALL_QIDS = (3, 97, 151, 233, 301, 403)
-
-#: probe settings swept by the census
-RECALL_NPROBES = (1, 2, 4)
-
-
-def ivf_recall_census(
-    emb: DataFrame,
-    qids: tuple[int, ...] = RECALL_QIDS,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobes: tuple[int, ...] = RECALL_NPROBES,
-) -> DataFrame:
-    """Measured recall@k of the Lloyd-IVF probe per nprobe setting:
-    (nprobe, n_queries, topk, hits, recall_ppm), one row per swept
-    nprobe — the number that decides the nprobe/cost trade-off, as an
-    engine query instead of a measurement script.
-
-    Truth is exact round6-cosine top-k per sampled query (rank ties
-    break on vec_id); the probe replays the SAME driver-side centroid
-    ranking every IVF variant serves with (`_probe_cells`), inlined as
-    a bounded (qid, cell, prank) relation; recall_ppm is exact integer
-    arithmetic (hits·10⁶ div (|Q|·k)) — no float anywhere in the
-    output. The census is a strict superset check: candidates at
-    nprobe p are a subset of p+1's, so recall_ppm is monotone in
-    nprobe by construction (unit-tested)."""
-    from pyspark.sql.window import Window
-
-    spark = emb.sparkSession
-    vecs = _vectors(emb)
-    cells, cents = _lloyd_refined_cells(vecs, iters=iters)
-    qdf = F.broadcast(
-        vecs.where(F.col("vec_id").isin(*qids)).select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-        )
-    )
-    cosv = _round6(cosine(F.col("v"), F.col("qv")))
-    wt = Window.partitionBy("qid").orderBy(
-        F.desc("cosv"), F.asc("vec_id")
-    )
-    truth = (
-        vecs.crossJoin(qdf)
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosv.alias("cosv"))
-        .withColumn("rn", F.row_number().over(wt))
-        .where(F.col("rn") <= k)
-        .select("qid", "vec_id")
-    )
-    maxp = max(nprobes)
-    probe_rows = [
-        (q, c, r + 1)
-        for q in qids
-        for r, c in enumerate(
-            _probe_cells(_query_vec(vecs, q), cents, maxp)
-        )
-    ]
-    probes = spark.createDataFrame(
-        probe_rows, "qid long, cell long, prank int"
-    )
-    np_df = spark.createDataFrame(
-        [(int(p),) for p in nprobes], "nprobe int"
-    )
-    wc = Window.partitionBy("nprobe", "qid").orderBy(
-        F.desc("cosv"), F.asc("vec_id")
-    )
-    cand_top = (
-        np_df.join(probes, probes.prank <= np_df.nprobe)
-        .join(cells.select("vec_id", "v", "cell"), "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(qdf, "qid")
-        .select("nprobe", "qid", "vec_id", cosv.alias("cosv"))
-        .withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= k)
-    )
-    nq = len(qids)
-    hits = (
-        cand_top.join(truth, ["qid", "vec_id"])
-        .groupBy("nprobe")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("h"))
-    )
-    return (
-        np_df.join(hits, "nprobe", "left")
-        .select(
-            F.col("nprobe").cast("bigint").alias("nprobe"),
-            F.lit(nq).cast("bigint").alias("n_queries"),
-            F.lit(k).cast("bigint").alias("topk"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("bigint").alias("hits"),
-            F.expr(
-                f"CAST(coalesce(h, 0) * 1000000 div {nq * k} AS BIGINT)"
-            ).alias("recall_ppm"),
-        )
-        .orderBy("nprobe")
-    )
-
-
-def ivf_recall_census_sql(
-    qids: tuple[int, ...] = RECALL_QIDS,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobes: tuple[int, ...] = RECALL_NPROBES,
-) -> str:
-    """Oracle twin: truth/probe/candidate chain over the shared lloyd
-    CTEs; the probe relation reads scored_fin's per-vector cell ranking
-    (the relational form of the driver-side `_probe_cells`)."""
-    qid_list = ", ".join(str(q) for q in qids)
-    np_rows = ", ".join(f"({int(p)})" for p in nprobes)
-    nq = len(qids)
-    ctes = _lloyd_cells_ctes(iters)
-    body = ",\n".join(ctes)
-    cos = _ROUND6_SQL.format(x=_COS_SQL.format(a="cf.v", b="qe.qv"))
-    tcos = _ROUND6_SQL.format(x=_COS_SQL.format(a="c.v", b="qe.qv"))
-    return f"""
-WITH {body},
-qe AS (
-  SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qid_list})
-),
-truthp AS (
-  SELECT qe.qid, c.vec_id, {tcos} AS cosv,
-         row_number() OVER (
-           PARTITION BY qe.qid ORDER BY {tcos} DESC, c.vec_id ASC
-         ) AS rn
-  FROM e c, qe
-  WHERE c.vec_id != qe.qid
-),
-truth AS (SELECT qid, vec_id FROM truthp WHERE rn <= {k}),
-probes AS (
-  SELECT vec_id AS qid, cid AS cell, rn AS prank
-  FROM scored_fin WHERE vec_id IN ({qid_list})
-),
-np AS (SELECT * FROM (VALUES {np_rows}) AS t(nprobe)),
-candp AS (
-  SELECT np.nprobe, p.qid, cf.vec_id, {cos} AS cosv,
-         row_number() OVER (
-           PARTITION BY np.nprobe, p.qid
-           ORDER BY {cos} DESC, cf.vec_id ASC
-         ) AS rn
-  FROM np
-  JOIN probes p ON p.prank <= np.nprobe
-  JOIN cells_fin cf ON cf.cell = p.cell
-  JOIN qe ON qe.qid = p.qid
-  WHERE cf.vec_id != p.qid
-),
-candtop AS (SELECT nprobe, qid, vec_id FROM candp WHERE rn <= {k}),
-hits AS (
-  SELECT nprobe, CAST(COUNT(*) AS BIGINT) AS h
-  FROM candtop JOIN truth USING (qid, vec_id)
-  GROUP BY nprobe
-),
-fin_census AS (
-  SELECT CAST(np.nprobe AS BIGINT) AS nprobe,
-         CAST({nq} AS BIGINT) AS n_queries,
-         CAST({k} AS BIGINT) AS topk,
-         CAST(COALESCE(h, 0) AS BIGINT) AS hits,
-         CAST(CAST(COALESCE(h, 0) AS HUGEINT) * 1000000
-              // {nq * k} AS BIGINT) AS recall_ppm
-  FROM np LEFT JOIN hits ON np.nprobe = hits.nprobe
-)
-SELECT * FROM fin_census ORDER BY nprobe
 """

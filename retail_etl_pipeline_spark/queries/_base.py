@@ -45,6 +45,10 @@ ORACLES: dict[str, str] = {}
 
 def _register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
+        # a silent dict overwrite would shadow a registered query and its
+        # oracle record would quietly test the wrong implementation
+        if name in QUERIES:
+            raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

@@ -1,74 +1,39 @@
-"""Round-6 query surface: 24 (query, oracle) pairs built during round 5,
-REGISTERED into ``registry.QUERIES`` since round 6 via the merge at the
-end of ``registry.py`` (``_merge_round6_surface``).
+"""Registry part11 (round 6): stratified inequality, survival and drift.
 
-History: the driver's CORRECTNESS window checks ~50 queries per round
-and the round-5 rotation already fronted 46 never-checked entries
-(DEVNOTES "window math"), so these were staged here during round 5 —
-fully implemented on the round-5 prep kernels (``functions/stats.py``,
-``functions/ordered.py``), oracle-paired, and parity-tested at sf0.001
-on every suite run (``tests/test_registry_next_parity.py``) — and
-merged into the driver-facing registry at round-6 start. The module
-keeps its own dicts so the parity tests and the merge guard can see
-exactly which names belong to this batch.
+Sections:
+- Theil between/within decomposition, Atkinson (e=1, e=2) and weighted
+  Gini of customer/supplier spend,
+- Mann-Whitney U (overall, per nation, z-form), Kolmogorov-Smirnov and
+  CUSUM drift tests on daily/store/nation revenue,
+- Kaplan-Meier second-order survival, median survival and Greenwood
+  confidence bands per segment, lapsed-customer counts,
+- ABC-class migration matrix, chained Laspeyres price index, regional
+  HHI trend, stockout streak histogram,
+- multi-touch purchase attribution (first/last/linear/U-shaped), the
+  event-type Markov steady state and basket brand entropy.
 
-Same alignment rules as ``registry.py`` (aliases identical on both
+Same alignment rules as the other parts (aliases identical on both
 sides, DECIMAL-hop money rounding, HUGEINT ``//`` for exact integer
-division in DuckDB, deterministic tie-breaks).
+division in DuckDB, deterministic tie-breaks). Registration ORDER is
+load-bearing (the correctness rotation in ``__spark_entry__.queries()``
+walks QUERIES in insertion order) — append only, never reorder
+(tests/test_rotation_guard.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .operators import behavior as bh
-from .operators import fixtures_adapter as fx
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
+from ..operators import behavior as bh
+from ..operators import fixtures_adapter as fx
+from ._base import _register
+from .part8_seasonality_streaks import _SPEND_CTE, _spend
 
 
-def _stage(name: str, oracle: str):
-    def deco(fn: QueryFn) -> QueryFn:
-        # the round-5 gotcha: a same-name re-registration silently
-        # overwrites the dict entry (DEVNOTES) — fail loudly instead.
-        # registry._merge_round6_surface guards the cross-module case.
-        if name in QUERIES:
-            raise ValueError(f"duplicate staged query name: {name}")
-        QUERIES[name] = fn
-        ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-# shared with registry.py's customer-spend family (duplicated here so the
-# staging module stays import-independent; the round-6 move dedupes it)
-_SPEND_CTE = """
-spend AS (
-  SELECT o_custkey,
-         CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,6))), 2) * 100
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-)"""
-
-
-def _spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = fx._read(spark, sf_dir, "orders")
-    return o.groupBy("o_custkey").agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(30,6)")), 2) * 100)
-        .cast("bigint")
-        .alias("cents")
-    )
-
-
-@_stage(
+@_register(
     "nation_spend_theil_decomposition",
     f"""
 WITH {_SPEND_CTE.strip()},
@@ -136,7 +101,7 @@ def nation_spend_theil_decomposition(
     tests/test_r6_kernels.py). Scale: one row-level join of customers
     to the 25-row nation sums (AQE-broadcast), one 1-row total
     broadcast, three bounded aggregations — no window, no self-join."""
-    from .functions.stats import theil_decomposition
+    from ..functions.stats import theil_decomposition
 
     o = _spend(spark, sf_dir)
     c = fx._read(spark, sf_dir, "customer")
@@ -155,7 +120,7 @@ def nation_spend_theil_decomposition(
     )
 
 
-@_stage(
+@_register(
     "customer_spend_atkinson",
     f"""
 WITH {_SPEND_CTE.strip()},
@@ -190,14 +155,14 @@ def customer_spend_atkinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly), zero-holder → exactly 1, all-zero → NULL, [0,1) bound and
     float-mirror parity property-tested. Scale: one hash aggregation,
     one 1-row select — the cheapest query in the inequality family."""
-    from .functions.stats import atkinson_index
+    from ..functions.stats import atkinson_index
 
     return atkinson_index(_spend(spark, sf_dir), "cents").select(
         F.col("n").alias("n_customers"), "atkinson"
     )
 
 
-@_stage(
+@_register(
     "lineitem_revenue_mwu",
     """
 WITH vals AS (
@@ -238,7 +203,7 @@ def lineitem_revenue_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement identity are property-tested). Scale: identical plan
     family to the KS query — per-value counts bound every stage after
     the first aggregation."""
-    from .functions.stats import mann_whitney_u2
+    from ..functions.stats import mann_whitney_u2
 
     li = fx._read(spark, sf_dir, "lineitem")
     vals = li.select(
@@ -262,7 +227,7 @@ def lineitem_revenue_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "daily_revenue_cusum_days",
     """
 WITH daily AS (
@@ -314,7 +279,7 @@ def daily_revenue_cusum_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation. Property-tested against the textbook recursion in
     tests/test_r6_kernels.py. Scale: stages after the daily rollup are
     bounded by distinct days."""
-    from .functions.stats import with_cusum
+    from ..functions.stats import with_cusum
 
     o = fx._read(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
@@ -345,7 +310,7 @@ def daily_revenue_cusum_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "segment_second_order_km",
     """
 WITH ranked AS (
@@ -438,7 +403,7 @@ def segment_second_order_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-customer window, one broadcast of the 1-row max date, one
     (segment, duration) aggregation — all later stages bounded by
     segments × distinct durations."""
-    from .functions.stats import kaplan_meier_by
+    from ..functions.stats import kaplan_meier_by
 
     o = fx._read(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("dd"), "o_orderkey"
@@ -467,7 +432,7 @@ def segment_second_order_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kaplan_meier_by(life, ["segment"])
 
 
-@_stage(
+@_register(
     "part_abc_migration_matrix",
     """
 WITH d AS (
@@ -535,7 +500,7 @@ def part_abc_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum·20 ≤ total·19 is B). Scale: one conditional scan of lineitem
     per year (filter-pruned), |parts|-bounded running sums, a
     |parts|-sized full outer join, and a ≤16-cell output."""
-    from .functions.ordered import with_running_sum
+    from ..functions.ordered import with_running_sum
 
     li = fx._read(spark, sf_dir, "lineitem")
     net = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
@@ -584,7 +549,7 @@ def part_abc_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "part_price_index_chained",
     """
 WITH per AS (
@@ -756,7 +721,7 @@ def part_price_index_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "segment_lapsed_customers",
     """
 WITH o AS (
@@ -844,7 +809,7 @@ def segment_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "stockout_streak_histogram",
     f"""
 WITH {fx.INVENTORY_CTE.strip()},
@@ -912,7 +877,7 @@ def stockout_streak_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "region_hhi_trend",
     """
 WITH rev AS (
@@ -945,7 +910,7 @@ def region_hhi_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-year query with a wider (and still tiny) output. Scale:
     lineitem⋈supplier shuffles on suppkey, nation/region broadcast,
     the trend table is |regions|×|years| rows."""
-    from .functions.stats import hhi_ppm
+    from ..functions.stats import hhi_ppm
 
     li = fx._read(spark, sf_dir, "lineitem")
     su = fx._read(spark, sf_dir, "supplier")
@@ -989,7 +954,7 @@ def region_hhi_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "segment_median_survival",
     """
 WITH ranked AS (
@@ -1068,7 +1033,7 @@ def segment_median_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-stable; segments whose curve never reaches 0.5 drop out (none
     do at the fixture scales). Plan adds one 5-row aggregation to the
     stratified-KM plan."""
-    from .functions.stats import kaplan_meier_by, km_median_survival
+    from ..functions.stats import kaplan_meier_by, km_median_survival
 
     o = fx._read(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("dd"), "o_orderkey"
@@ -1099,7 +1064,7 @@ def segment_median_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-@_stage(
+@_register(
     "nation_revenue_ks",
     """
 WITH vals AS (
@@ -1162,7 +1127,7 @@ def nation_revenue_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     unstratified kernel is unit-tested in tests/test_r6_kernels.py.
     Scale: lineitem⋈supplier shuffles on suppkey, nation broadcast,
     then everything is bounded by nations × distinct values."""
-    from .functions.stats import ks_statistic_by
+    from ..functions.stats import ks_statistic_by
 
     li = fx._read(spark, sf_dir, "lineitem")
     su = fx._read(spark, sf_dir, "supplier")
@@ -1199,7 +1164,7 @@ def nation_revenue_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "store_revenue_cusum_breaches",
     """
 WITH daily AS (
@@ -1260,7 +1225,7 @@ def store_revenue_cusum_breaches(
     property-tested in tests/test_r6_kernels.py. Scale: everything
     after the daily rollup is bounded by stores × days, and per-task
     window state is one store's day series."""
-    from .functions.stats import with_cusum_by
+    from ..functions.stats import with_cusum_by
 
     li = fx._read(spark, sf_dir, "lineitem")
     daily = li.groupBy(
@@ -1327,7 +1292,7 @@ def store_revenue_cusum_breaches(
     )
 
 
-@_stage(
+@_register(
     "nation_revenue_mwu",
     """
 WITH vals AS (
@@ -1372,7 +1337,7 @@ def nation_revenue_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     unstratified kernel unit-tested. Scale: identical plan family to
     the stratified KS — bounded by nations × distinct cents values
     after the first aggregation."""
-    from .functions.stats import mann_whitney_u2_by
+    from ..functions.stats import mann_whitney_u2_by
 
     li = fx._read(spark, sf_dir, "lineitem")
     su = fx._read(spark, sf_dir, "supplier")
@@ -1408,7 +1373,7 @@ def nation_revenue_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "purchase_attribution_last_touch",
     f"""
 WITH {fx.EVENTS_STREAM_CTE.strip()},
@@ -1455,7 +1420,7 @@ def purchase_attribution_last_touch(
     return bh.attribute_last_touch(fx.events_stream(spark, sf_dir))
 
 
-@_stage(
+@_register(
     "purchase_attribution_linear",
     f"""
 WITH {fx.EVENTS_STREAM_CTE.strip()},
@@ -1513,7 +1478,7 @@ def purchase_attribution_linear(
     return bh.attribute_linear(fx.events_stream(spark, sf_dir))
 
 
-@_stage(
+@_register(
     "event_type_steady_state",
     bh.markov_oracle_sql(fx.EVENTS_STREAM_CTE, iterations=5),
 )
@@ -1533,7 +1498,7 @@ def event_type_steady_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bh.markov_power_iteration(ev, iterations=5)
 
 
-@_stage(
+@_register(
     "lineitem_revenue_mwu_z",
     """
 WITH vals AS (
@@ -1594,7 +1559,7 @@ def lineitem_revenue_mwu_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction, identically on both sides). Float-mirror parity and
     the zero-variance/empty-side NULL cases are property-tested in
     tests/test_r6_kernels.py."""
-    from .functions.stats import mann_whitney_z
+    from ..functions.stats import mann_whitney_z
 
     li = fx._read(spark, sf_dir, "lineitem")
     vals = li.select(
@@ -1619,7 +1584,7 @@ def lineitem_revenue_mwu_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@_register(
     "supplier_revenue_weighted_gini",
     """
 WITH rev AS (
@@ -1666,7 +1631,7 @@ def supplier_revenue_weighted_gini(
     and integer weights equal the replicated multiset (both
     property-tested). Scale: one lineitem aggregation to |suppliers|
     rows, the two-level running sum, one scalar agg."""
-    from .functions.stats import gini_weighted_ppm
+    from ..functions.stats import gini_weighted_ppm
 
     li = fx._read(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_suppkey").agg(
@@ -1690,7 +1655,7 @@ def supplier_revenue_weighted_gini(
     )
 
 
-@_stage(
+@_register(
     "purchase_attribution_u_shaped",
     f"""
 WITH {fx.EVENTS_STREAM_CTE.strip()},
@@ -1740,7 +1705,7 @@ def purchase_attribution_u_shaped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """U-shaped (position-based) attribution — the third standard model
-    beside the staged last-touch and linear pair: the FIRST touch in a
+    beside the last-touch and linear pair: the FIRST touch in a
     purchase's 7-day window earns 40%, the LAST 40%, the middles split
     the remaining 20% (single-touch 100%, two-touch 50/50). Credit is
     exact integer ppm (the middle split is floor division — a
@@ -1756,7 +1721,7 @@ def purchase_attribution_u_shaped(
     return bh.attribute_u_shaped(fx.events_stream(spark, sf_dir))
 
 
-@_stage(
+@_register(
     "purchase_attribution_first_touch",
     f"""
 WITH {fx.EVENTS_STREAM_CTE.strip()},
@@ -1808,7 +1773,7 @@ def purchase_attribution_first_touch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """First-touch attribution — the acquisition-credit twin of the
-    staged last-touch model (which channel STARTED the journey that
+    last-touch model (which channel STARTED the journey that
     converted, vs which closed it): each purchase credited to the
     earliest qualifying touch in its 7-day window, 'none' when no
     touch qualifies. Kernel:
@@ -1820,7 +1785,7 @@ def purchase_attribution_first_touch(
     return bh.attribute_first_touch(fx.events_stream(spark, sf_dir))
 
 
-@_stage(
+@_register(
     "customer_spend_atkinson2",
     f"""
 WITH {_SPEND_CTE.strip()},
@@ -1847,21 +1812,21 @@ FROM agg
 )
 def customer_spend_atkinson2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atkinson index at aversion ε=2 of customer lifetime spend — the
-    harmonic-mean sibling of the staged ε=1 query: A₂ = 1 −
+    harmonic-mean sibling of the ε=1 query: A₂ = 1 −
     harmonic/mean weights the smallest spenders hardest, so A₂ ≥ A₁
     always (the generalized-mean inequality; property-tested). Kernel:
     :func:`.functions.stats.atkinson2_index` — per-customer reciprocals
     are doubles of exact integers decimal-rounded at 18 places (cents
     ≥ 1 → 1/x ≤ 1) and summed exactly; one double ratio at the end
     through the scale-6 hop. Same one-aggregation plan as ε=1."""
-    from .functions.stats import atkinson2_index
+    from ..functions.stats import atkinson2_index
 
     return atkinson2_index(_spend(spark, sf_dir), "cents").select(
         F.col("n").alias("n_customers"), "atkinson2"
     )
 
 
-@_stage(
+@_register(
     "segment_km_confidence_bands",
     """
 WITH ranked AS (
@@ -1960,7 +1925,7 @@ def segment_km_confidence_bands(
     identical expression on both engines over identical S/se inputs
     (clamp ordering and terminal-zero behavior unit-tested). Plan:
     adds two projections to the stratified-KM plan — no new shuffle."""
-    from .functions.stats import kaplan_meier_by, km_confidence_bands
+    from ..functions.stats import kaplan_meier_by, km_confidence_bands
 
     o = fx._read(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("dd"), "o_orderkey"
@@ -1989,7 +1954,7 @@ def segment_km_confidence_bands(
     return km_confidence_bands(kaplan_meier_by(life, ["segment"]))
 
 
-@_stage(
+@_register(
     "basket_brand_entropy",
     """
 WITH items AS (

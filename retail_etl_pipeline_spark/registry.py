@@ -17,42 +17,11 @@ Alignment rules (SURVEY.md §5, FIXTURES.md):
 
 from __future__ import annotations
 
-# The registrations live in queries/part*.py (split round 7 — the
-# monolith crossed 10k lines); this module remains the public face:
-# importing it populates QUERIES/ORACLES in the ORIGINAL order
-# (queries/__init__.py imports parts in sequence; order is
-# load-bearing for the driver correctness rotation).
+# The registrations live in queries/part*.py, each one made by
+# queries._base._register (the only registration path); this module is
+# the public face: importing it populates QUERIES/ORACLES in the
+# ORIGINAL order (queries/__init__.py imports parts in sequence; order
+# is load-bearing for the correctness rotation in
+# __spark_entry__.queries()).
 from .queries._base import ORACLES, QUERIES, QueryFn  # noqa: F401
 from . import queries  # noqa: F401  (registration side effects)
-
-
-# Round-6 surface: the 24 queries staged in registry_next.py during round 5
-# (attribution quartet, KM/Greenwood survival family, MWU/CUSUM/KS drift,
-# Atkinson/weighted-Gini/Theil inequality, Markov steady-state, ABC
-# migration, chained Laspeyres, HHI trend, basket entropy, stockout
-# streaks, lapsed customers).  They were held out of this registry while
-# the driver's ~50-query CORRECTNESS window drained the round-5 backlog
-# (registry_next.py module doc); round 6 registers them by merging the
-# staging dicts here rather than duplicating 2k lines of source.  The
-# implementations, oracle pairs, and their sf0.001 parity tests
-# (tests/test_registry_next_parity.py) are unchanged.
-# ---------------------------------------------------------------------------
-
-
-def _merge_round6_surface() -> None:
-    from . import registry_next as _r6
-
-    for _name in _r6.QUERIES:
-        # same loud-failure contract as registry_next._stage: a silent
-        # dict overwrite here would shadow a registered query with a
-        # same-named staged one (or vice versa) and the oracle record
-        # would quietly test the wrong implementation.
-        if _name in QUERIES:
-            raise ValueError(
-                f"round-6 merge collision with registered query: {_name}"
-            )
-        QUERIES[_name] = _r6.QUERIES[_name]
-        ORACLES[_name] = _r6.ORACLES[_name]
-
-
-_merge_round6_surface()

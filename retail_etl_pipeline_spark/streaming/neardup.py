@@ -72,7 +72,6 @@ _PAIRS_PART_SCHEMA = "doc_a long, doc_b long, batch_id int"
 _SHINGLE_STORE_SCHEMA = (
     "doc_id long, shs array<long>, n_sh long, batch_id int"
 )
-_QUALITY_STORE_SCHEMA = "doc_id long, quality_score double, batch_id int"
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:

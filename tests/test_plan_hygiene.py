@@ -603,23 +603,6 @@ def test_no_partial_unbounded_following_frames_anywhere(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_round6_batch_is_registered():
-    """The round-6 batch (registry_next.py) is merged into the main
-    registry (registry._merge_round6_surface), so the repo-wide plan
-    locks above cover it; this guard pins the merge itself — every
-    staged name present, oracle-paired, and collision-free."""
-    from retail_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from retail_etl_pipeline_spark.registry_next import (
-        ORACLES as R6_ORACLES,
-        QUERIES as R6_QUERIES,
-    )
-
-    for name in R6_QUERIES:
-        assert name in QUERIES, name
-        assert QUERIES[name] is R6_QUERIES[name], name
-        assert ORACLES.get(name) == R6_ORACLES[name], name
-
-
 def test_runtime_bloom_filter_injected_on_selective_shuffle_join(
     spark, sf_dir
 ):

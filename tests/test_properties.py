@@ -288,6 +288,12 @@ def test_snapshot_diff_partitioning_invariance(spark):
         "pareto_customers",
         "rfm_segments",
         "incremental_weekly_rollup",
+        "supplier_revenue_weighted_gini",   # two-level prefix sum offsets
+        "store_revenue_cusum_breaches",     # partitioned prefix sum + min
+        "daily_revenue_cusum_days",         # two-level sum THEN two-level min
+        "nation_revenue_ks",                # partitioned ecdf-gap cumsum
+        "event_type_steady_state",          # iterative fixed-point joins
+        "part_abc_migration_matrix",        # two independent running sums
     ],
 )
 def test_results_identical_across_shuffle_parallelism(spark, sf_dir, name):
@@ -295,8 +301,9 @@ def test_results_identical_across_shuffle_parallelism(spark, sf_dir, name):
     these queries' results must be IDENTICAL at 3 and 24 shuffle
     partitions — decimal sums, two-level rank offsets, and merge
     partials are all order/partitioning-independent by construction.
-    These five are exactly where partitioning-dependence would hide
-    (money sums, global rank decomposition, run-merge)."""
+    These are exactly where partitioning-dependence would hide (money
+    sums, global rank decomposition, run-merge, two-level prefix
+    sums/mins, partitioned cumulative windows, fixed-point loops)."""
     from retail_etl_pipeline_spark.registry import QUERIES
 
     old = spark.conf.get("spark.sql.shuffle.partitions")

@@ -342,194 +342,6 @@ def test_ivfpq16_index_stats_census_invariants(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-10 second-session kernels: Cochran-Armitage, stratified sample,
-# bigram-LM quality — independent references, never their own oracles
-# ---------------------------------------------------------------------------
-
-
-def _ca(spark, rows):
-    """rows: list of (flag, w)."""
-    from retail_etl_pipeline_spark.functions.stats import cochran_armitage
-
-    df = spark.createDataFrame(rows, "flag boolean, w long")
-    return cochran_armitage(df, "flag", "w").collect()[0]
-
-
-def test_cochran_armitage_matches_float_brute_force(spark):
-    """z must match the textbook float formula computed independently in
-    Python on a small asymmetric table."""
-    import math
-
-    # group w -> (n, r): rate clearly rising with w
-    table = {0: (40, 4), 1: (35, 9), 2: (30, 14), 3: (25, 17)}
-    rows = []
-    for w, (n, r) in table.items():
-        rows += [(True, w)] * r + [(False, w)] * (n - r)
-    got = _ca(spark, rows)
-    n_tot = sum(n for n, _ in table.values())
-    r_tot = sum(r for _, r in table.values())
-    p = r_tot / n_tot
-    t = sum(w * (r - n * p) for w, (n, r) in table.items())
-    var = (
-        p
-        * (1 - p)
-        * (
-            sum(w * w * n for w, (n, _) in table.items())
-            - sum(w * n for w, (n, _) in table.items()) ** 2 / n_tot
-        )
-    )
-    z_ref = t / math.sqrt(var)
-    assert got["n_groups"] == 4
-    assert got["n_total"] == n_tot and got["n_events"] == r_tot
-    assert got["z"] == pytest.approx(z_ref, abs=1e-6)
-    assert got["z"] > 3  # the planted trend is strong
-
-
-def test_cochran_armitage_shift_invariant_and_sign(spark):
-    """Shifting every score by a constant leaves z unchanged (the
-    centered statistic); reversing the score order flips the sign."""
-    table = {5: (30, 3), 6: (30, 10), 7: (30, 18)}
-    rows = []
-    for w, (n, r) in table.items():
-        rows += [(True, w)] * r + [(False, w)] * (n - r)
-    base = _ca(spark, rows)["z"]
-    shifted = _ca(spark, [(f, w + 1000) for f, w in rows])["z"]
-    flipped = _ca(spark, [(f, -w) for f, w in rows])["z"]
-    assert shifted == base
-    assert flipped == pytest.approx(-base, abs=1e-6)
-
-
-def test_cochran_armitage_degenerate_cases(spark):
-    """z is NULL when every row is an event, no row is, there is one
-    group, or the input is empty — never a divide-by-zero."""
-    one_group = [(True, 3), (False, 3), (False, 3)]
-    assert _ca(spark, one_group)["z"] is None
-    all_events = [(True, 0), (True, 1), (True, 2)]
-    assert _ca(spark, all_events)["z"] is None
-    no_events = [(False, 0), (False, 1)]
-    assert _ca(spark, no_events)["z"] is None
-    empty = spark.createDataFrame([], "flag boolean, w long")
-    from retail_etl_pipeline_spark.functions.stats import cochran_armitage
-
-    row = cochran_armitage(empty, "flag", "w").collect()[0]
-    assert row["z"] is None and row["n_total"] == 0
-
-
-def test_stratified_sample_quota_and_determinism(spark):
-    """Each source yields min(quota, |source|) rows, ranks are 1..k
-    dense, a small source keeps everything, and the sample is identical
-    across runs (pure hash priority)."""
-    from retail_etl_pipeline_spark.operators import selection as sel
-
-    rows = [(i, f"t{i}", "big") for i in range(30)] + [
-        (100 + i, f"t{i}", "tiny") for i in range(3)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, source string"
-    )
-    out = sel.stratified_sample_by_source(docs, per_source=5).collect()
-    by_src: dict[str, list] = {}
-    for r in out:
-        by_src.setdefault(r["source"], []).append(r)
-    assert len(by_src["big"]) == 5
-    assert sorted(r["sample_rank"] for r in by_src["big"]) == [1, 2, 3, 4, 5]
-    assert len(by_src["tiny"]) == 3  # under quota: keep all
-    again = sel.stratified_sample_by_source(docs, per_source=5).collect()
-    assert [tuple(r) for r in out] == [tuple(r) for r in again]
-
-
-def test_bigram_quality_sees_token_order(spark):
-    """A document whose words are common but whose ORDER is novel must
-    score strictly worse (higher xent2) than a same-vocabulary document
-    in the dominant order — the signal unigram xent cannot produce."""
-    from retail_etl_pipeline_spark.operators import selection as sel
-
-    corpus = [(i, "alpha beta gamma delta", "s") for i in range(9)]
-    corpus.append((9, "delta gamma beta alpha", "s"))
-    docs = spark.createDataFrame(
-        corpus, "doc_id long, text string, source string"
-    )
-    out = {
-        r["doc_id"]: r["xent2"]
-        for r in sel.bigram_logprob_quality(docs).collect()
-    }
-    assert len(out) == 10
-    assert out[9] > out[0] + 0.5
-    # unigram xent is blind to the reordering: identical scores
-    uni = {
-        r["doc_id"]: r["xent"]
-        for r in sel.unigram_logprob_quality(docs).collect()
-    }
-    assert uni[9] == uni[0]
-
-
-def test_bigram_quality_hand_computed(spark):
-    """Tiny corpus checked against the add-1 conditional model computed
-    by hand in Python floats."""
-    import math
-
-    from retail_etl_pipeline_spark.operators import selection as sel
-
-    docs = spark.createDataFrame(
-        [(0, "a b a b", "s"), (1, "a b c", "s")],
-        "doc_id long, text string, source string",
-    )
-    # corpus bigrams: doc0: (a,b)x2 (b,a)x1; doc1: (a,b) (b,c)
-    cab = {("a", "b"): 3, ("b", "a"): 1, ("b", "c"): 1}
-    ca = {"a": 3, "b": 2}
-    v = 3  # tokens a, b, c
-    def xent(bigrams):
-        n = len(bigrams)
-        s = sum(
-            math.log(ca[a] + v) - math.log(cab[(a, b)] + 1)
-            for a, b in bigrams
-        )
-        return s / n
-
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["xent2"])
-        for r in sel.bigram_logprob_quality(docs).collect()
-    }
-    assert got[0][0] == 3 and got[1][0] == 2
-    assert got[0][1] == pytest.approx(
-        xent([("a", "b"), ("b", "a"), ("a", "b")]), abs=1e-6
-    )
-    assert got[1][1] == pytest.approx(
-        xent([("a", "b"), ("b", "c")]), abs=1e-6
-    )
-
-
-def test_ivf_recall_census_monotone_and_bounded(spark):
-    """Candidates at nprobe p are a subset of p+1's, so recall must be
-    non-decreasing in nprobe and bounded by 1.0; hits never exceed
-    |Q| x k."""
-    emb = fx._read(spark, SF0001, "embeddings")
-    rows = sorted(
-        (r["nprobe"], r["hits"], r["recall_ppm"])
-        for r in sim.ivf_recall_census(emb).collect()
-    )
-    assert [p for p, _, _ in rows] == [1, 2, 4]
-    cap = len(sim.RECALL_QIDS) * sim.TOP_K
-    last = -1
-    for _, h, ppm in rows:
-        assert 0 <= h <= cap
-        assert ppm >= last
-        last = ppm
-        assert ppm <= 1_000_000
-
-
-def test_residual_ivfpq_shares_scan_shape_with_plain(spark):
-    """The residual variant's output schema and probe-filter shape match
-    ann_ivfpq16_topk (same serving cost); the rankings may differ (the
-    point of residual encoding)."""
-    emb = fx._read(spark, SF0001, "embeddings")
-    plain = sim.ann_ivfpq16_topk(emb)
-    resid = sim.ann_ivfpq16_residual_topk(emb)
-    assert plain.columns == resid.columns
-    assert resid.count() == sim.TOP_K
-
-
-# ---------------------------------------------------------------------------
 # r10 optimization round: the vectorized quantization kernels
 # (similarity._js_np_udf / _cell_np_udf) replaced the interpreted
 # higher-order-function argmin/argmax in every PQ/IVF assignment path.

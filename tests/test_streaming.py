@@ -433,62 +433,6 @@ def test_stream_dedup_within_watermark(spark):
         q.stop()
 
 
-def test_transform_with_state_totals_match_batch(spark, sf_dir):
-    """The modern-API (transformWithStateInPandas + RocksDB store) totals
-    agree with the batch groupBy — same contract the applyInPandasWithState
-    form is held to above. Requires protobuf (the state-server protocol);
-    skipped where pyspark's optional streaming extra isn't installed."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server needs protobuf",
-    )
-    from retail_etl_pipeline_spark.streaming import stateful_v2 as sv2
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", sv2.ROCKSDB_PROVIDER
-    )
-    try:
-        events = st.stream_events(spark, sf_dir)
-        q = st.run_available_now(
-            sv2.stateful_user_totals_v2(events),
-            "user_totals_v2",
-            output_mode="update",
-        )
-        try:
-            got = spark.table("user_totals_v2")
-            expected = (
-                fx.events_stream(spark, sf_dir)
-                .groupBy("user_id")
-                .agg(
-                    F.count(F.lit(1)).alias("exp_n"),
-                    F.sum("value").alias("exp_total"),
-                )
-            )
-            joined = got.join(expected, "user_id")
-            assert joined.where(F.col("n_events") != F.col("exp_n")).count() == 0
-            # double accumulation order differs between the processor and
-            # the batch agg — compare within float tolerance
-            assert (
-                joined.where(
-                    F.abs(F.col("total_value") - F.col("exp_total")) > 1e-6
-                ).count()
-                == 0
-            )
-            assert got.count() == expected.count()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
 def test_streaming_incremental_state_equals_batch(spark, sf_dir):
     """Batch and streaming share ONE merge algebra: a foreachBatch sink
     that folds each micro-batch's partials into a parquet state table
@@ -1381,55 +1325,6 @@ def test_dedup_pipeline_fold_verify_refutes_band_collisions(
         ).collect()
     }
     assert labels == {(1, 1), (2, 1)}
-    shutil.rmtree(base, ignore_errors=True)
-
-
-def test_streaming_contamination_fold_equals_batch(spark, sf_dir):
-    """The incremental contamination fold (streaming/contamination.py)
-    must converge to EXACTLY the batch eval_contamination_lsh output no
-    matter how the corpus was micro-batched — including the retroactive
-    case (an eval doc arriving AFTER training docs it collides with),
-    which the doc_id%3 batch split guarantees exercises since eval ids
-    (doc_id%20==0) scatter across all three batches."""
-    from retail_etl_pipeline_spark.operators import corpus as cpx
-    from retail_etl_pipeline_spark.streaming import contamination as ct
-
-    docs = fx._read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = os.path.join(TMP, "contam_incr")
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        ct.stream_contamination(
-            stream, os.path.join(base, "state"), os.path.join(base, "hits")
-        )
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    streamed = {
-        tuple(r)
-        for r in ct.read_contamination(
-            spark, os.path.join(base, "hits")
-        ).collect()
-    }
-    batch = {
-        tuple(r) for r in cpx.eval_contamination_lsh(docs).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 0
-    spark.catalog.clearCache()  # eval_contamination_lsh persists bands
     shutil.rmtree(base, ignore_errors=True)
 
 

@@ -214,7 +214,6 @@ def main(argv: list[str]) -> int:
         ),
         "ann_opq16_adc_topk": sim.ann_opq16_adc_topk,
         "ann_ivfpq16_topk": sim.ann_ivfpq16_topk,
-        "ann_ivfpq16_residual_topk": sim.ann_ivfpq16_residual_topk,
         "ann_pq16_rerank_topk": sim.ann_pq16_rerank_topk,
         "ann_ivfpq16_rerank_topk": sim.ann_ivfpq16_rerank_topk,
     }

@@ -216,11 +216,6 @@ SHOW = {
         "the bounded distinct-duration relation — the survival product "
         "never materializes a one-task window."
     ),
-}
-
-#: round-6 batch queries (built in registry_next.py, registered into the
-#: main registry at round-6 start) whose plan shape is the point.
-SHOW_STAGED = {
     "store_revenue_cusum_breaches": (
         "Per-store CUSUM via the prefix identity C = S - min(0, "
         "min-prefix S): ONE FileScan, one daily two-phase aggregate, "
@@ -301,33 +296,11 @@ def main() -> None:
         "AQE may further improve them at runtime.",
         "",
     ]
-    from retail_etl_pipeline_spark.registry_next import (
-        QUERIES as STAGED_QUERIES,
-    )
-
     for name, note in SHOW.items():
         df = QUERIES[name](spark, "/root/testdata/sf0.001")
         plan = df._jdf.queryExecution().executedPlan().toString()
         lines = [ln[:160] for ln in plan.splitlines()][:60]
         out += [f"## {name}", "", note, "", "```", *lines, "```", ""]
-    for name, note in SHOW_STAGED.items():
-        # resolve from either dict so the round-6 move into registry.py
-        # doesn't break this tool (DEVNOTES playbook step 4)
-        fn = STAGED_QUERIES.get(name) or QUERIES[name]
-        df = fn(spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        lines = [ln[:160] for ln in plan.splitlines()][:60]
-        staged = " (round-6 batch, registry_next.py)" if name in STAGED_QUERIES else ""
-        out += [
-            f"## {name}{staged}",
-            "",
-            note,
-            "",
-            "```",
-            *lines,
-            "```",
-            "",
-        ]
     with open("EXPLAIN.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote EXPLAIN.md ({sum(len(l) for l in out)} chars)")

@@ -52,7 +52,7 @@ QUERIES = [
     "part_demand_abc_xyz",
     "customer_second_order_km",
     "part_price_index",
-    # round-6 batch (registry_next.py): stratified survival/drift,
+    # round-6 batch: stratified survival/drift,
     # per-group CUSUM prefix passes, window-based attribution
     "segment_second_order_km",
     "nation_revenue_ks",
@@ -108,21 +108,6 @@ QUERIES = [
     "ivfpq16_index_stats",
     "semdedup_keep_k32",
     "ccnet_staged_mix",
-    # round-11 staged batch (registry_r11.py): exact-substring dedup
-    # family, quantizer-health censuses, residual IVF-PQ, the recall
-    # census, bigram LM, CA trend, stratified sampling — measured ahead
-    # of registration so the r11 merge ships with scaling rows
-    "exact_substring_pairs",
-    "substring_dedup_keep",
-    "source_span_overlap_matrix",
-    "exact_span_removal_stats",
-    "ivf_cell_quality",
-    "ann_ivfpq16_residual_topk",
-    "ivf_recall_census",
-    "bigram_logprob_quality",
-    "returns_trend_cochran_armitage",
-    "stratified_sample_by_source",
-    "split_span_contamination",
 ]
 
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -165,10 +150,6 @@ def main() -> None:
     import json
 
     from retail_etl_pipeline_spark.registry import QUERIES as REG
-    from retail_etl_pipeline_spark.registry_next import QUERIES as STAGED
-    from retail_etl_pipeline_spark.registry_r11 import QUERIES as STAGED11
-
-    STAGED = {**STAGED, **STAGED11}
     from retail_etl_pipeline_spark.session import get_spark
 
     results: dict[str, dict[str, float]] = _load_committed()
@@ -186,7 +167,7 @@ def main() -> None:
         spark = get_spark(app_name="scaling_study", shuffle_partitions=32)
         spark.range(1_000_000).selectExpr("sum(id)").collect()
     for name in todo:
-        fn = REG.get(name) or STAGED[name]
+        fn = REG[name]
         row: dict[str, float] = {}
         for sf_dir in SFS:
             best = None
@@ -213,7 +194,7 @@ def main() -> None:
         results[name] = row
         with open(PROGRESS_PATH, "a") as f:
             f.write(json.dumps({"name": name, "sfs": row}) + "\n")
-    # emit rows in the canonical QUERIES order (merged rows included)
+    # emit rows in the canonical QUERIES order
     results = {n: results[n] for n in QUERIES if n in results}
 
     lines = [
