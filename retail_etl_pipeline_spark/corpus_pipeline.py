@@ -33,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .operators.corpus import split_assignment
 from .operators.text import fingerprint64, tokens
@@ -131,7 +132,10 @@ def run_corpus_pipeline(
     register_as: str | None = "corpus",
 ) -> CorpusPipelineResult:
     """Prepare + publish: one scan, one partitioned write, audit stream
-    included, DQ counters observed on the write job itself."""
+    included, DQ counters observed on the write job itself. The
+    ``register_as`` view is read with the schema the writer lays out
+    (the data columns, then ``split STRING``), so registering it runs no
+    schema-inference job."""
     staged = prepare_corpus(docs)
     obs = Observation("corpus_dq")
     staged = staged.observe(
@@ -164,7 +168,14 @@ def run_corpus_pipeline(
         .parquet(output_path)
     )
     if register_as is not None:
-        spark.read.parquet(output_path).createOrReplaceTempView(register_as)
+        # the layout the writer produced, declared: no inference job
+        published_schema = T.StructType(
+            [f for f in staged.schema if f.name != "split"]
+            + [T.StructField("split", T.StringType())]
+        )
+        spark.read.schema(published_schema).parquet(
+            output_path
+        ).createOrReplaceTempView(register_as)
     return CorpusPipelineResult(output_path=output_path, metrics=dict(obs.get))
 
 

@@ -21,8 +21,9 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import io as eio
 from .operators.retail import WEEK_GRAIN
@@ -71,6 +72,8 @@ class PipelineResult:
     run_date: str
     missing: list[str] = field(default_factory=list)
     output_path: str | None = None
+    #: rows published for run_date: the observed ``rows_written``, not a
+    #: re-scan of the output
     output_rows: int | None = None
     #: data-quality counters observed DURING the write (no extra scan):
     #: rows_written, null_grain_rows, negative_sales_rows, plus one
@@ -112,7 +115,18 @@ def run_pipeline(
     the verdict existed), ``on_expectation_failure`` gets the rule ->
     violation-count map, and the result reports ran=False. A gate
     evaluated pre-publish would cost a second full pass of the summary
-    at 100 TB; stage-observe-promote pays one partition move instead."""
+    at 100 TB; stage-observe-promote pays one partition move instead.
+
+    The publish does not re-scan what it wrote. ``output_rows`` is the
+    observed ``rows_written``, not a re-count of the partition.
+    ``CollectMetrics`` sits in the write's result stage, where Spark
+    applies each task's accumulator update exactly once, so retried or
+    speculative tasks cannot double-count it. The ``register_as`` view
+    is read with the schema the writer lays out (the summary's columns,
+    then ``date DATE``), so registering it runs no schema-inference job.
+    Listing the ``date=`` directories is unchanged: past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` of them,
+    Spark lists them with a parallel job."""
     ready, missing = readiness_check(input_dir, run_date)
     if not ready:
         if on_missing is not None:
@@ -120,11 +134,13 @@ def run_pipeline(
         return PipelineResult(ran=False, run_date=run_date, missing=missing)
 
     paths = table_paths(input_dir, run_date)
-    frames = {
-        t: eio.read_csv(spark, paths[t], RETAIL_SCHEMAS[t](measure_type))
-        for t in RETAIL_TABLES
-    }
-    m = merged_from(frames["sales"], frames["inventory"], frames["calendar"])
+    # the readiness gate wants all five files; the summary joins three
+    m = merged_from(
+        *(
+            eio.read_csv(spark, paths[t], RETAIL_SCHEMAS[t](measure_type))
+            for t in ("sales", "inventory", "calendar")
+        )
+    )
     summary = weekly_summary_from_merged(m).orderBy(*WEEK_GRAIN)
 
     # Observation rides the write job itself — data-quality counters for
@@ -132,10 +148,7 @@ def run_pipeline(
     # output to validate it. At 100 TB a validation re-scan is a second
     # full pass; observe() is zero extra I/O.
     obs = Observation("dq")
-    grain_null = None
-    for k in WEEK_GRAIN:
-        cond = F.col(k).isNull()
-        grain_null = cond if grain_null is None else (grain_null | cond)
+    grain_null = " OR ".join(f"{k} IS NULL" for k in WEEK_GRAIN)
     from .operators.expectations import validate_rule_name, violations_expr
 
     exp_aggs = []
@@ -144,10 +157,11 @@ def run_pipeline(
         exp_aggs.append(violations_expr(cond).alias(f"exp_{name}"))
     summary = summary.observe(
         obs,
-        F.count(F.lit(1)).alias("rows_written"),
-        F.count(F.when(grain_null, 1)).alias("null_grain_rows"),
-        F.count(F.when(F.col("total_sales_amt") < 0, 1)).alias(
-            "negative_sales_rows"
+        F.expr("count(1) AS rows_written"),
+        F.expr(f"count(CASE WHEN {grain_null} THEN 1 END) AS null_grain_rows"),
+        F.expr(
+            "count(CASE WHEN total_sales_amt < 0 THEN 1 END)"
+            " AS negative_sales_rows"
         ),
         *exp_aggs,
     )
@@ -202,14 +216,18 @@ def run_pipeline(
             )
         fs.delete(hpath(staging_root), True)
 
-    published = spark.read.parquet(output_path)
     if register_as:
-        published.createOrReplaceTempView(register_as)
-    n = published.where(published["date"] == run_date).count()
+        # the layout the writer produced, declared: no inference job
+        published_schema = T.StructType(
+            [*summary.schema, T.StructField("date", T.DateType())]
+        )
+        spark.read.schema(published_schema).parquet(
+            output_path
+        ).createOrReplaceTempView(register_as)
     return PipelineResult(
         ran=True,
         run_date=run_date,
         output_path=output_path,
-        output_rows=n,
+        output_rows=metrics["rows_written"],
         metrics=metrics,
     )

@@ -13,16 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import fixtures_adapter as fx
+from .weekly_summary import SUMMARY_AGGS_SQL
 
 #: Spark-dialect week key (the oracle's DuckDB dialect uses isoyear())
 _WEEK_SPARK = (
     "CAST(extract(YEAROFWEEK FROM {d}) * 100 + weekofyear({d}) AS INT)"
 )
 
-_MONEY = "CAST(round(CAST({x} AS DECIMAL(30,6)), 2) AS DOUBLE)"
-_MONEY_SUM = "CAST(round(SUM(CAST({x} AS DECIMAL(30,6))), 2) AS DOUBLE)"
-_DEC_SUM = "CAST(SUM(CAST({x} AS DECIMAL(30,6))) AS DOUBLE)"
-_OOS = "COUNT(DISTINCT CASE WHEN out_of_stock_flg = 1 THEN cal_dt END)"
+#: the 13 metrics: the same aggregate text the DataFrame form parses
+_AGGS = ",\n       ".join(SUMMARY_AGGS_SQL)
 
 WEEKLY_SUMMARY_SQL = f"""
 WITH base AS (
@@ -57,27 +56,8 @@ merged AS (
            AS low_stock_flg
   FROM winified
 )
-SELECT yr_wk_num,
-       store_key,
-       prod_key,
-       {_MONEY.format(x="SUM(sales_qty)")} AS total_sales_qty,
-       {_MONEY_SUM.format(x="sales_amt")} AS total_sales_amt,
-       {_MONEY.format(x=f"{_DEC_SUM.format(x='sales_amt')} / nullif(SUM(sales_qty), 0)")}
-         AS avg_sales_amt,
-       {_MONEY_SUM.format(x="sales_cost")} AS total_sales_cost,
-       {_MONEY.format(x="max_by(inventory_on_hand_qty, cal_dt)")} AS eow_on_hand_qty,
-       {_MONEY.format(x="max_by(inventory_on_order_qty, cal_dt)")} AS eow_on_order_qty,
-       {_OOS} AS out_of_stock_days,
-       {_MONEY.format(x=f"CAST({_OOS} AS DOUBLE) / 7")} AS out_of_stock_rate,
-       CAST(SUM(low_stock_flg) AS BIGINT) AS low_stock_count,
-       CAST(SUM(CASE WHEN out_of_stock_flg = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS no_stock_instances,
-       {_MONEY.format(x=f"CAST({_OOS} AS DOUBLE) / 7 + CAST(SUM(low_stock_flg) AS DOUBLE)")}
-         AS total_low_stock_impact,
-       {_MONEY.format(x="SUM(CASE WHEN low_stock_flg = 1 THEN sales_qty - inventory_on_hand_qty END)")}
-         AS potential_low_stock_impact,
-       {_MONEY.format(x="max_by(inventory_on_hand_qty, cal_dt) / nullif(SUM(sales_qty), 0)")}
-         AS weeks_supply
+SELECT yr_wk_num, store_key, prod_key,
+       {_AGGS}
 FROM merged
 GROUP BY yr_wk_num, store_key, prod_key
 """

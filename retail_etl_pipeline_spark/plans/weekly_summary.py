@@ -149,46 +149,60 @@ def merged_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Spark SQL text of the functions/metrics helpers: money, money_sum,
+# decimal_sum — the DECIMAL(30,6) hop makes sums and the cent tie-break
+# exact — and safe_div's NULL-on-zero denominator
+_MONEY = "CAST(round(CAST({x} AS DECIMAL(30,6)), 2) AS DOUBLE)"
+_MONEY_SUM = "CAST(round(sum(CAST({x} AS DECIMAL(30,6))), 2) AS DOUBLE)"
+_DEC_SUM = "CAST(sum(CAST({x} AS DECIMAL(30,6))) AS DOUBLE)"
+_SAFE_DIV = "{x} / nullif({d}, 0)"
+# max_by orders by the BARE date (unique per day at this grain): a
+# struct(cal_dt) wrapper is ordering-identical but demotes the whole
+# aggregation from HashAggregate to SortAggregate (struct max_by is not
+# hash-aggregable) — measured ~15% slower
+_EOW_ON_HAND = "max_by(inventory_on_hand_qty, cal_dt)"
+_OOS_DAYS = (
+    "CAST(count(DISTINCT CASE WHEN out_of_stock_flg = 1 THEN cal_dt END)"
+    " AS DOUBLE)"
+)
+_SUM_QTY = "sum(sales_qty)"
+
+#: The 13 weekly metrics as Spark SQL aggregate text. Parsing one string
+#: is one py4j call; assembling the same expressions from the Column
+#: helpers took hundreds, on every run, for a plan that never changes.
+#: The optimized plan is the one the helpers build (``sameResult``).
+#: ``plans/sql_entry`` selects the same list in its SQL statement.
+SUMMARY_AGGS_SQL = (
+    _MONEY.format(x=_SUM_QTY) + " AS total_sales_qty",
+    _MONEY_SUM.format(x="sales_amt") + " AS total_sales_amt",
+    _MONEY.format(
+        x=_SAFE_DIV.format(x=_DEC_SUM.format(x="sales_amt"), d=_SUM_QTY)
+    )
+    + " AS avg_sales_amt",
+    _MONEY_SUM.format(x="sales_cost") + " AS total_sales_cost",
+    _MONEY.format(x=_EOW_ON_HAND) + " AS eow_on_hand_qty",
+    _MONEY.format(x="max_by(inventory_on_order_qty, cal_dt)")
+    + " AS eow_on_order_qty",
+    f"CAST({_OOS_DAYS} AS BIGINT) AS out_of_stock_days",
+    _MONEY.format(x=f"{_OOS_DAYS} / 7") + " AS out_of_stock_rate",
+    "CAST(sum(low_stock_flg) AS BIGINT) AS low_stock_count",
+    "CAST(sum(CASE WHEN out_of_stock_flg = 1 THEN 1 ELSE 0 END) AS BIGINT)"
+    " AS no_stock_instances",
+    _MONEY.format(x=f"{_OOS_DAYS} / 7 + CAST(sum(low_stock_flg) AS DOUBLE)")
+    + " AS total_low_stock_impact",
+    _MONEY.format(
+        x="sum(CASE WHEN low_stock_flg = 1"
+        " THEN sales_qty - inventory_on_hand_qty END)"
+    )
+    + " AS potential_low_stock_impact",
+    _MONEY.format(x=_SAFE_DIV.format(x=_EOW_ON_HAND, d=_SUM_QTY))
+    + " AS weeks_supply",
+)
+
+
 def _summary_aggs() -> list:
     """The 13 weekly metrics as single-pass aggregate expressions."""
-    # max_by orders by the BARE date (unique per day at this grain): a
-    # struct(cal_dt) wrapper is ordering-identical but demotes the whole
-    # aggregation from HashAggregate to SortAggregate (struct max_by is
-    # not hash-aggregable) — measured ~15% slower
-    eow = F.col("cal_dt")
-    oos_days = F.count_distinct(
-        F.when(F.col("out_of_stock_flg") == 1, F.col("cal_dt"))
-    ).cast("double")
-    sum_qty = F.sum("sales_qty")
-    eow_on_hand = F.max_by("inventory_on_hand_qty", eow)
-    return [
-        money(sum_qty).alias("total_sales_qty"),
-        money_sum(F.col("sales_amt")).alias("total_sales_amt"),
-        money(safe_div(decimal_sum(F.col("sales_amt")), sum_qty)).alias(
-            "avg_sales_amt"
-        ),
-        money_sum(F.col("sales_cost")).alias("total_sales_cost"),
-        money(eow_on_hand).alias("eow_on_hand_qty"),
-        money(F.max_by("inventory_on_order_qty", eow)).alias("eow_on_order_qty"),
-        oos_days.cast("bigint").alias("out_of_stock_days"),
-        money(oos_days / F.lit(7)).alias("out_of_stock_rate"),
-        F.sum("low_stock_flg").cast("bigint").alias("low_stock_count"),
-        F.sum(F.when(F.col("out_of_stock_flg") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("no_stock_instances"),
-        money(
-            oos_days / F.lit(7) + F.sum("low_stock_flg").cast("double")
-        ).alias("total_low_stock_impact"),
-        money(
-            F.sum(
-                F.when(
-                    F.col("low_stock_flg") == 1,
-                    F.col("sales_qty") - F.col("inventory_on_hand_qty"),
-                )
-            )
-        ).alias("potential_low_stock_impact"),
-        money(safe_div(eow_on_hand, sum_qty)).alias("weeks_supply"),
-    ]
+    return [F.expr(s) for s in SUMMARY_AGGS_SQL]
 
 
 def weekly_summary_from_merged(m: DataFrame) -> DataFrame:
@@ -235,7 +249,7 @@ def weekly_summary_assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assembled_from_merged(m: DataFrame) -> DataFrame:
-    eow = F.col("cal_dt")  # bare date: hash-aggregable (see _summary_aggs)
+    eow = F.col("cal_dt")  # bare date: hash-aggregable (see _EOW_ON_HAND)
     sums = m.groupBy(*WEEK_GRAIN).agg(
         money(F.sum("sales_qty")).alias("total_sales_qty"),
         money_sum(F.col("sales_amt")).alias("total_sales_amt"),

@@ -203,9 +203,14 @@ def test_run_pipeline_end_to_end(spark, retail_csvs):
     assert row["potential_low_stock_impact"] == 3.0  # 4.0 - 1.0
     assert row["weeks_supply"] == round(1.0 / 6.0, 2)
 
-    # idempotent re-run: same partition overwritten, not duplicated
+    # the view's declared schema is the one the published files carry
+    assert summary.schema == spark.read.parquet(out).schema
+
+    # idempotent re-run: same partition overwritten, not duplicated.
+    # output_rows is what the re-run wrote, so count the files on disk
     res2 = pl.run_pipeline(spark, RUN_DATE, retail_csvs, out)
     assert res2.output_rows == 3
+    assert spark.read.parquet(os.path.join(out, f"date={RUN_DATE}")).count() == 3
 
 
 def test_run_pipeline_decimal_mode(spark, retail_csvs):
@@ -223,21 +228,99 @@ def test_run_pipeline_decimal_mode(spark, retail_csvs):
     )
     assert float(row["total_sales_amt"]) == 30.0
     assert float(row["eow_on_hand_qty"]) == 1.0
+    # the view's declared schema is the one the published files carry
+    assert (
+        spark.table("weekly_summary_dec").schema
+        == spark.read.parquet(out).schema
+    )
 
 
 def test_pipeline_observed_metrics(spark, retail_csvs):
     """observe() counters collected during the write must agree with the
-    published partition: same row count, clean grain, no negative sales."""
+    published partition, on the direct and the gated (stage-observe-
+    promote) publish: ``output_rows`` is the observed count, so the
+    partition is counted here, independently, from the files."""
     from retail_etl_pipeline_spark.pipeline import run_pipeline
 
-    out = os.path.join(os.path.dirname(retail_csvs), "obs_out")
-    res = run_pipeline(
-        spark, RUN_DATE, retail_csvs, out, register_as="obs_summary"
+    for expectations in (None, {"sane_qty": F.col("total_sales_qty") >= 0}):
+        out = os.path.join(
+            os.path.dirname(retail_csvs),
+            "obs_out_gated" if expectations else "obs_out",
+        )
+        res = run_pipeline(
+            spark, RUN_DATE, retail_csvs, out, register_as="obs_summary",
+            expectations=expectations,
+        )
+        assert res.ran and res.metrics is not None
+        on_disk = spark.read.parquet(os.path.join(out, f"date={RUN_DATE}"))
+        assert res.output_rows == on_disk.count() == 3
+        assert res.metrics["rows_written"] == res.output_rows
+        assert res.metrics["null_grain_rows"] == 0
+        assert res.metrics["negative_sales_rows"] == 0
+
+
+def _drained_job_ids(spark, group: str) -> set:
+    """Ids of the jobs in ``group`` once every event posted so far has
+    reached the status store (the listener bus delivers asynchronously)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_publish_launches_no_job_after_write(
+    spark, retail_csvs, tmp_path, monkeypatch
+):
+    """Both publishes pay only for their write. Each run gets its own job
+    group; the parquet write (the last step of ``eio.write_run_partition``
+    and of the corpus publish) is wrapped to record the group's jobs as it
+    returns, and the group must hold no further job when the pipeline
+    returns: no output re-count, no schema-inference read for the view.
+    Covers run_pipeline direct and gated, and run_corpus_pipeline. The
+    outputs hold a few partition directories, which Spark lists without
+    a job; past ``parallelPartitionDiscovery.threshold`` directories
+    listing them is itself a Spark job."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from retail_etl_pipeline_spark.corpus_pipeline import run_corpus_pipeline
+
+    sc = spark.sparkContext
+    group = None
+    after_write = []
+    write = DataFrameWriter.parquet
+
+    def recording_write(*args, **kwargs):
+        write(*args, **kwargs)
+        after_write.append(_drained_job_ids(spark, group))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_write)
+    docs = spark.createDataFrame(
+        [(0, "a perfectly reasonable document with many distinct words")],
+        "doc_id long, text string",
     )
-    assert res.ran and res.metrics is not None
-    assert res.metrics["rows_written"] == res.output_rows
-    assert res.metrics["null_grain_rows"] == 0
-    assert res.metrics["negative_sales_rows"] == 0
+    runs = {
+        "direct": lambda: pl.run_pipeline(
+            spark, RUN_DATE, retail_csvs, str(tmp_path / "direct"),
+            register_as="jobs_direct",
+        ),
+        "gated": lambda: pl.run_pipeline(
+            spark, RUN_DATE, retail_csvs, str(tmp_path / "gated"),
+            register_as="jobs_gated",
+            expectations={"sane_qty": F.col("total_sales_qty") >= 0},
+        ),
+        "corpus": lambda: run_corpus_pipeline(
+            spark, docs, str(tmp_path / "corpus"), register_as="jobs_corpus"
+        ),
+    }
+    try:
+        for label, run in runs.items():
+            group = f"publish-{label}"
+            sc.setJobGroup(group, "jobs after the publish write")
+            after_write.clear()
+            run()
+            assert len(after_write) == 1 and after_write[0], label
+            assert _drained_job_ids(spark, group) == after_write[0], label
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_corpus_pipeline_end_to_end(spark, tmp_path):
@@ -258,6 +341,8 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
     )
     out = str(tmp_path / "corpus")
     res = run_corpus_pipeline(spark, docs, out, register_as="corpus_t")
+    # the view's declared schema is the one the published files carry
+    assert spark.table("corpus_t").schema == spark.read.parquet(out).schema
 
     m = res.metrics
     assert m["n_docs"] == 5

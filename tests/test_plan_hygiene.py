@@ -65,6 +65,58 @@ def test_weekly_summary_is_single_aggregate(spark, sf_dir):
     assert "Join" not in opt[:first_agg]
 
 
+def test_weekly_summary_text_metrics_match_column_helpers(spark, sf_dir):
+    """The 13 metrics are parsed from SQL text, one py4j call each. Built
+    from the ``functions/metrics`` Column helpers instead, they must give
+    the same optimized plan (``sameResult``): the text cannot drift from
+    the helpers' decimal rounding and NULL-on-zero division."""
+    from pyspark.sql import functions as F
+
+    from retail_etl_pipeline_spark.functions.metrics import (
+        decimal_sum,
+        money,
+        money_sum,
+        safe_div,
+    )
+    from retail_etl_pipeline_spark.operators.retail import WEEK_GRAIN
+    from retail_etl_pipeline_spark.plans import weekly_summary as ws
+
+    eow = F.col("cal_dt")
+    oos_days = F.count_distinct(
+        F.when(F.col("out_of_stock_flg") == 1, eow)
+    ).cast("double")
+    sum_qty = F.sum("sales_qty")
+    on_hand = F.max_by("inventory_on_hand_qty", eow)
+    low = F.sum("low_stock_flg")
+    helpers = [
+        money(sum_qty).alias("total_sales_qty"),
+        money_sum(F.col("sales_amt")).alias("total_sales_amt"),
+        money(safe_div(decimal_sum(F.col("sales_amt")), sum_qty))
+        .alias("avg_sales_amt"),
+        money_sum(F.col("sales_cost")).alias("total_sales_cost"),
+        money(on_hand).alias("eow_on_hand_qty"),
+        money(F.max_by("inventory_on_order_qty", eow)).alias("eow_on_order_qty"),
+        oos_days.cast("bigint").alias("out_of_stock_days"),
+        money(oos_days / F.lit(7)).alias("out_of_stock_rate"),
+        low.cast("bigint").alias("low_stock_count"),
+        F.sum(F.when(F.col("out_of_stock_flg") == 1, 1).otherwise(0))
+        .cast("bigint").alias("no_stock_instances"),
+        money(oos_days / F.lit(7) + low.cast("double"))
+        .alias("total_low_stock_impact"),
+        money(F.sum(F.when(
+            F.col("low_stock_flg") == 1,
+            F.col("sales_qty") - F.col("inventory_on_hand_qty"),
+        ))).alias("potential_low_stock_impact"),
+        money(safe_div(on_hand, sum_qty)).alias("weeks_supply"),
+    ]
+    m = ws.merged(spark, sf_dir)
+    want = m.groupBy(*WEEK_GRAIN).agg(*helpers).select(*ws.SUMMARY_COLUMNS)
+    got = ws.weekly_summary_from_merged(m)
+    assert got._jdf.queryExecution().optimizedPlan().sameResult(
+        want._jdf.queryExecution().optimizedPlan()
+    )
+
+
 def test_no_cartesian_products_anywhere(spark, sf_dir):
     """No operator may compile to a cartesian product; near-dup/similarity
     pairs must ride equi-joins (shingle/band/bucket) or broadcast blocks."""
