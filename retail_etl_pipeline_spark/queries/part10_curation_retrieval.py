@@ -37,7 +37,10 @@ from ..operators import similarity as sim
 from ._base import _register
 
 
-@_register("ann_ivfpq16_rerank_topk", sim.ann_ivfpq16_rerank_topk_sql())
+@_register(
+    "ann_ivfpq16_rerank_topk",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_ivfpq16_rerank_topk"]),
+)
 def ann_ivfpq16_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete production retrieval stack (faiss IndexIVFPQ +
     refine, determinized): nprobe=2 Lloyd cells prune the corpus,
@@ -46,8 +49,9 @@ def ann_ivfpq16_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query cost at scale is (nprobe/|cells|) x 16 bytes/vector
     scanned plus 64 key-fetches. Shortlist cut on ROUND6(adc) keeps
     the candidate set engine-identical (measured recall in SCALE.md)."""
-    return sim.ann_ivfpq16_rerank_topk(
-        fx._read(spark, sf_dir, "embeddings")
+    return sim.pq_topk(
+        fx._read(spark, sf_dir, "embeddings"),
+        **sim.PQ_TOPK["ann_ivfpq16_rerank_topk"],
     )
 
 
@@ -263,20 +267,38 @@ def nation_revenue_brown_forsythe(
     return brown_forsythe(vals, "v", "g")
 
 
-@_register("ann_ivfpq16_serve_topk", sim.ann_ivfpq16_topk_sql())
+#: the configuration the index queries build and search
+_IVFPQ16 = sim.PQ_TOPK["ann_ivfpq16_topk"]
+
+
+def _ivfpq16_index(spark: SparkSession, sf_dir: str) -> sim.PqIndex:
+    """The materialized index of the ann_ivfpq16_topk configuration,
+    built once per (session, corpus)."""
+    return sim.pq_index_for(
+        fx._read(spark, sf_dir, "embeddings"),
+        _IVFPQ16["pq"],
+        _IVFPQ16["iters"],
+    )
+
+
+@_register(
+    "ann_ivfpq16_serve_topk", sim.pq_topk_sql(**_IVFPQ16)
+)
 def ann_ivfpq16_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEARCH step of the explicit faiss-style index lifecycle
-    (train -> add -> search): ivfpq16_index_for builds the serving
+    (train -> add -> search): sim.pq_index_for builds the serving
     table (vec_id, cell, 16-byte PQ codes) once per (session, corpus,
     params) and pins it with a localCheckpoint; this query is then the
     pure serving plan — probe-cell filter + ADC + TakeOrdered, zero
     training jobs, zero joins. Result-identical to ann_ivfpq16_topk
     (same oracle); what changed is WHEN the training cost is paid."""
-    idx = sim.ivfpq16_index_for(fx._read(spark, sf_dir, "embeddings"))
-    return sim.ann_ivfpq16_serve_topk(idx)
+    return sim.pq_search(_ivfpq16_index(spark, sf_dir))
 
 
-@_register("ann_ivfpq16_serve_rerank_topk", sim.ann_ivfpq16_rerank_topk_sql())
+@_register(
+    "ann_ivfpq16_serve_rerank_topk",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_ivfpq16_rerank_topk"]),
+)
 def ann_ivfpq16_serve_rerank_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -285,8 +307,8 @@ def ann_ivfpq16_serve_rerank_topk(
     vectors (broadcast semi-join — a key-lookup at scale). The
     production query path of the retrieval stack, with the index build
     amortized across queries instead of retrained per call."""
-    idx = sim.ivfpq16_index_for(fx._read(spark, sf_dir, "embeddings"))
-    return sim.ann_ivfpq16_serve_rerank_topk(idx)
+    shortlist = sim.PQ_TOPK["ann_ivfpq16_rerank_topk"]["shortlist"]
+    return sim.pq_search(_ivfpq16_index(spark, sf_dir), shortlist=shortlist)
 
 
 @_register("semdedup_keep_k32", sim.semdedup_keep_sql(k=32))
@@ -314,12 +336,14 @@ def ccnet_staged_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sel.ccnet_staged_mix(fx._read(spark, sf_dir, "documents"))
 
 
-@_register("ivfpq16_index_stats", sim.ivfpq16_index_stats_sql())
+@_register(
+    "ivfpq16_index_stats",
+    sim.pq_index_stats_sql(_IVFPQ16["pq"], _IVFPQ16["iters"]),
+)
 def ivfpq16_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index health: per-cell population + distinct-code census
     over the built IVF-PQ16 serving table — the monitor a retrieval
     deployment tracks per rebuild (cell collapse = coarse quantizer
     degenerating; code collapse = PQ codebooks no longer spreading
     residuals). Runs off the once-built index like the serve queries."""
-    idx = sim.ivfpq16_index_for(fx._read(spark, sf_dir, "embeddings"))
-    return sim.ivfpq16_index_stats(idx)
+    return sim.pq_index_stats(_ivfpq16_index(spark, sf_dir))

@@ -626,17 +626,36 @@ def ann_ivf_topk_lloyd_multiprobe(
     )
 
 
-@_register("embedding_pq_codes", sim.EMBEDDING_PQ_CODES_SQL)
+def _pq_codes(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The codes query ``name``, configured in ``sim.PQ_CODES``."""
+    return sim.pq_codes(
+        fx._read(spark, sf_dir, "embeddings"), sim.PQ_CODES[name]
+    )
+
+
+def _pq_topk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The top-k query ``name``, configured in ``sim.PQ_TOPK``."""
+    return sim.pq_topk(
+        fx._read(spark, sf_dir, "embeddings"), **sim.PQ_TOPK[name]
+    )
+
+
+@_register(
+    "embedding_pq_codes",
+    sim.pq_codes_sql(sim.PQ_CODES["embedding_pq_codes"]),
+)
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantizer codes: each 64-dim vector packed into ONE
     bigint of 8x 3-bit sub-centroid indexes (~64x smaller than raw
     doubles) — the ANN memory-compression path at 100 TB. Pure
     projection over inlined deterministic codebooks; the oracle derives
     the same codes relationally (row_number argmin per subspace)."""
-    return sim.embedding_pq_codes(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_codes(spark, sf_dir, "embedding_pq_codes")
 
 
-@_register("ann_pq_adc_topk", sim.ann_pq_adc_topk_sql())
+@_register(
+    "ann_pq_adc_topk", sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq_adc_topk"])
+)
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance top-k: the query's raw vector builds a
     64-entry exact-L2 lookup table (driver-side plan constants); every
@@ -644,55 +663,62 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     its packed code — the scan reads ONLY the codes column, never raw
     vectors. The memory-bound ANN scan path (compose with IVF cells
     for full IVF-PQ)."""
-    return sim.ann_pq_adc_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_pq_adc_topk")
 
 
 @_register(
-    "ann_pq_adc_topk_lloyd", sim.ann_pq_adc_topk_lloyd_sql(train_iters=1)
+    "ann_pq_adc_topk_lloyd",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq_adc_topk_lloyd"]),
 )
 def ann_pq_adc_topk_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC top-k over TRAINED sub-codebooks: one exact-decimal Lloyd
     iteration per subspace (the FAISS PQ training step, determinized —
     same nano-unit integer-mean kernel as the IVF lloyd family) before
     quantizing; codes and the query LUT share the refined books."""
-    return sim.ann_pq_adc_topk(
-        fx._read(spark, sf_dir, "embeddings"), train_iters=1
-    )
+    return _pq_topk(spark, sf_dir, "ann_pq_adc_topk_lloyd")
 
 
-@_register("ann_ivfpq_topk", sim.ann_ivfpq_topk_sql())
+@_register(
+    "ann_ivfpq_topk", sim.pq_topk_sql(**sim.PQ_TOPK["ann_ivfpq_topk"])
+)
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full IVF-PQ (the FAISS IVFADC architecture, deterministic): probe
     the nprobe=2 nearest Lloyd-refined cells, rank candidates by PQ
     asymmetric distance over packed codes — the scan is doubly reduced
     (cell pruning x code compression), the billion-scale ANN shape."""
-    return sim.ann_ivfpq_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_ivfpq_topk")
 
 
-@_register("embedding_pq8_codes", sim.embedding_pq8_codes_sql())
+@_register(
+    "embedding_pq8_codes",
+    sim.pq_codes_sql(sim.PQ_CODES["embedding_pq8_codes"]),
+)
 def embedding_pq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantizer codes at the FAISS-STANDARD size: 256-entry
     sub-codebooks (8 bits x 8 subspaces = one signed bigint/vector,
     still 64x smaller than raw doubles) — what faiss.IndexPQ(d, 8, 8)
-    builds, determinized. Still a pure map pass (folded flat-literal
-    codebooks, monotone 2-term argmin); the oracle packs the same
-    indexes through HUGEINT with an explicit two's-complement wrap
-    because subspace 7 can set the sign bit."""
-    return sim.embedding_pq8_codes(fx._read(spark, sf_dir, "embeddings"))
+    builds, determinized. Still a pure map pass (vectorized monotone
+    2-term argmin); the oracle packs the same indexes through HUGEINT
+    with an explicit two's-complement wrap because subspace 7 can set
+    the sign bit."""
+    return _pq_codes(spark, sf_dir, "embedding_pq8_codes")
 
 
-@_register("ann_pq8_adc_topk", sim.ann_pq8_adc_topk_sql())
+@_register(
+    "ann_pq8_adc_topk", sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq8_adc_topk"])
+)
 def ann_pq8_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-bit PQ asymmetric-distance top-k: an 8x256 exact-L2 LUT from
     the query's raw vector (2048 folded plan constants), each corpus
     vector scored by 8 LUT lookups unpacked from its 8-byte code — the
     production-recall variant of ann_pq_adc_topk (256-entry codebooks
     vs 8; measured recall table in SCALE.md)."""
-    return sim.ann_pq8_adc_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_pq8_adc_topk")
 
 
 @_register(
-    "ann_pq8_adc_topk_lloyd", sim.ann_pq8_adc_topk_sql(train_iters=1)
+    "ann_pq8_adc_topk_lloyd",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq8_adc_topk_lloyd"]),
 )
 def ann_pq8_adc_topk_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-bit PQ ADC top-k over TRAINED sub-codebooks: one exact-decimal
@@ -700,12 +726,13 @@ def ann_pq8_adc_topk_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAISS train step; the bounded aggregate collects <= 16384 nano-unit
     means — the codebook itself, corpus-size independent). Codes and
     the query LUT share the refined books."""
-    return sim.ann_pq8_adc_topk(
-        fx._read(spark, sf_dir, "embeddings"), train_iters=1
-    )
+    return _pq_topk(spark, sf_dir, "ann_pq8_adc_topk_lloyd")
 
 
-@_register("embedding_pq16_codes", sim.embedding_pq16_codes_sql())
+@_register(
+    "embedding_pq16_codes",
+    sim.pq_codes_sql(sim.PQ_CODES["embedding_pq16_codes"]),
+)
 def embedding_pq16_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-subspace product-quantizer codes (16 x 4-dim x 256 entries):
     TWO packed bigints per vector — 16 bytes at 32x compression, the
@@ -713,32 +740,36 @@ def embedding_pq16_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize tighter at the same codebook size). Same one-map-pass
     plan; the oracle packs per 8-subspace word through the HUGEINT
     two's-complement wrap."""
-    return sim.embedding_pq16_codes(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_codes(spark, sf_dir, "embedding_pq16_codes")
 
 
-@_register("ann_pq16_adc_topk", sim.ann_pq16_adc_topk_sql())
+@_register(
+    "ann_pq16_adc_topk", sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq16_adc_topk"])
+)
 def ann_pq16_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-subspace PQ asymmetric-distance top-k: 16x256 exact-L2 LUT,
     16 lookups per vector unpacked from the two code words — measured
     recall@10 0.513 at sf0.1, above the IVF multiprobe family, from a
     scan that reads 16 bytes/vector (SCALE.md)."""
-    return sim.ann_pq16_adc_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_pq16_adc_topk")
 
 
 @_register(
-    "ann_pq16_adc_topk_lloyd", sim.ann_pq16_adc_topk_sql(train_iters=1)
+    "ann_pq16_adc_topk_lloyd",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq16_adc_topk_lloyd"]),
 )
 def ann_pq16_adc_topk_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-subspace PQ ADC top-k over Lloyd-TRAINED sub-codebooks — the
     family's best measured recall@10 (0.580 at sf0.1, SCALE.md) at 32x
     compression; training is the same bounded nano-mean aggregate at
     (m, d) = (16, 4)."""
-    return sim.ann_pq16_adc_topk(
-        fx._read(spark, sf_dir, "embeddings"), train_iters=1
-    )
+    return _pq_topk(spark, sf_dir, "ann_pq16_adc_topk_lloyd")
 
 
-@_register("embedding_opq16_codes", sim.embedding_opq16_codes_sql())
+@_register(
+    "embedding_opq16_codes",
+    sim.pq_codes_sql(sim.PQ_CODES["embedding_opq16_codes"]),
+)
 def embedding_opq16_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ16 codes over a balanced-energy dimension permutation — the
     deterministic OPQ initializer (eigenvalue-allocation style: dims
@@ -746,20 +777,26 @@ def embedding_opq16_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 subspaces gets one dim per energy quartile). Same 32x-compressed
     storage; the permutation is 64 plan constants from one bounded
     aggregate, free at scan time."""
-    return sim.embedding_opq16_codes(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_codes(spark, sf_dir, "embedding_opq16_codes")
 
 
-@_register("ann_opq16_adc_topk", sim.ann_opq16_adc_topk_sql())
+@_register(
+    "ann_opq16_adc_topk",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_opq16_adc_topk"]),
+)
 def ann_opq16_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ-init PQ16 ADC top-k: query and corpus pass through the same
     balanced-energy permutation, then the trained 16x256 LUT scan —
     quantization error concentrates less in any one subspace, the
     published OPQ recall mechanism (Ge et al. CVPR 2013) in its
     deterministic permutation form (measured table in SCALE.md)."""
-    return sim.ann_opq16_adc_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_opq16_adc_topk")
 
 
-@_register("ann_pq16_rerank_topk", sim.ann_pq16_rerank_topk_sql())
+@_register(
+    "ann_pq16_rerank_topk",
+    sim.pq_topk_sql(**sim.PQ_TOPK["ann_pq16_rerank_topk"]),
+)
 def ann_pq16_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval (the production serving pattern): trained
     16-byte PQ ADC shortlists 64 candidates, exact L2 reranks ONLY
@@ -767,10 +804,12 @@ def ann_pq16_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALE.md) at a 16-byte/vector scan plus 64 key-fetches. The
     shortlist ranks by ROUND6(adc) so sub-1e-6 float noise collapses
     before the cut and both engines admit the identical candidates."""
-    return sim.ann_pq16_rerank_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_pq16_rerank_topk")
 
 
-@_register("ann_ivfpq16_topk", sim.ann_ivfpq16_topk_sql())
+@_register(
+    "ann_ivfpq16_topk", sim.pq_topk_sql(**sim.PQ_TOPK["ann_ivfpq16_topk"])
+)
 def ann_ivfpq16_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ at production codebook size (faiss.IndexIVFPQ shape,
     determinized): nprobe=2 Lloyd-refined cells prune the corpus, then
@@ -778,7 +817,7 @@ def ann_ivfpq16_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors from their two packed code words — the scan cost is
     (nprobe/|cells|) x 16 bytes/vector, the billion-scale configuration
     of the family's best-recall quantizer (SCALE.md)."""
-    return sim.ann_ivfpq16_topk(fx._read(spark, sf_dir, "embeddings"))
+    return _pq_topk(spark, sf_dir, "ann_ivfpq16_topk")
 
 
 @_register("embedding_neardup", sim.EMBEDDING_NEARDUP_SQL)

@@ -7,7 +7,8 @@ against its own oracle SQL."""
 
 from __future__ import annotations
 
-import os
+import dataclasses
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,35 +35,30 @@ def test_trained_memo_hits_and_is_keyed_by_corpus(spark):
     emb1 = fx._read(spark, SF0001, "embeddings")
     emb2 = fx._read(spark, SF0001, "embeddings")
     v1, v2 = sim._vectors(emb1), sim._vectors(emb2)
-    b1 = sim._pq8_family_books(v1, 1, sim.PQ16_M, sim.PQ16_DIMS)
-    b2 = sim._pq8_family_books(v2, 1, sim.PQ16_M, sim.PQ16_DIMS)
+    b1 = sim.ProductQuantizer(16, 8, 1).books(v1)
+    b2 = sim.ProductQuantizer(16, 8, 1).books(v2)
     assert b1 is b2, "same corpus+params must hit the memo"
     # different params -> different trained object
-    b0 = sim._pq8_family_books(v1, 0, sim.PQ16_M, sim.PQ16_DIMS)
+    b0 = sim.ProductQuantizer(16, 8).books(v1)
     assert b0 is not b1
     # a projection that changes the relation is a different corpus key
     # (slice keeps all 256 PQ seed vectors so training stays defined)
     half = v1.where(F.col("vec_id") < 400)
-    bh = sim._pq8_family_books(half, 1, sim.PQ16_M, sim.PQ16_DIMS)
+    bh = sim.ProductQuantizer(16, 8, 1).books(half)
     assert bh is not b1
     assert bh != b1, "half-corpus training must differ from full"
-
-
-def test_trained_memo_kill_switch(spark, monkeypatch):
-    """SPARK_GRAFT_TRAIN_CACHE=0 bypasses the memo but returns equal
-    values (training is deterministic)."""
-    emb = fx._read(spark, SF0001, "embeddings")
-    vecs = sim._vectors(emb)
-    cached = sim._seed_centroids(vecs)
-    monkeypatch.setenv("SPARK_GRAFT_TRAIN_CACHE", "0")
-    fresh = sim._seed_centroids(vecs)
-    assert fresh is not cached
-    assert fresh == cached
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ16 index lifecycle
 # ---------------------------------------------------------------------------
+
+IVFPQ16 = sim.PQ_TOPK["ann_ivfpq16_topk"]
+IVFPQ16_RERANK = sim.PQ_TOPK["ann_ivfpq16_rerank_topk"]
+
+
+def _ivfpq16_index(emb):
+    return sim.pq_index_for(emb, IVFPQ16["pq"], IVFPQ16["iters"])
 
 
 def test_index_serve_matches_one_shot_queries(spark):
@@ -70,35 +66,28 @@ def test_index_serve_matches_one_shot_queries(spark):
     one-shot (train-inside-the-query) twins return — the lifecycle
     changes WHEN training happens, never the result."""
     emb = fx._read(spark, SF0001, "embeddings")
-    idx = sim.ivfpq16_index_for(emb)
-    assert _rows(sim.ann_ivfpq16_serve_topk(idx)) == _rows(
-        sim.ann_ivfpq16_topk(emb)
-    )
-    assert _rows(sim.ann_ivfpq16_serve_rerank_topk(idx)) == _rows(
-        sim.ann_ivfpq16_rerank_topk(emb)
-    )
+    idx = _ivfpq16_index(emb)
+    assert _rows(sim.pq_search(idx)) == _rows(sim.pq_topk(emb, **IVFPQ16))
+    assert _rows(
+        sim.pq_search(idx, shortlist=IVFPQ16_RERANK["shortlist"])
+    ) == _rows(sim.pq_topk(emb, **IVFPQ16_RERANK))
 
 
 def test_index_build_is_cached_and_serve_plan_is_pure(spark):
-    """ivfpq16_index_for memoizes per (session, corpus, params); the
-    ADC serve plan has no join and no global sort (the cells x codes
+    """pq_index_for memoizes per (session, corpus, params); the ADC
+    serve plan has no join and no global sort (the cells x codes
     join happened once at build), and the rerank plan's only join is
     the broadcast shortlist fetch."""
     emb = fx._read(spark, SF0001, "embeddings")
-    idx1 = sim.ivfpq16_index_for(emb)
-    idx2 = sim.ivfpq16_index_for(emb)
+    idx1 = _ivfpq16_index(emb)
+    idx2 = _ivfpq16_index(emb)
     assert idx1 is idx2
-    plan = (
-        sim.ann_ivfpq16_serve_topk(idx1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = sim.pq_search(idx1)._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan.lower()
     rplan = (
-        sim.ann_ivfpq16_serve_rerank_topk(idx1)
+        sim.pq_search(idx1, shortlist=64)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -109,15 +98,15 @@ def test_index_build_is_cached_and_serve_plan_is_pure(spark):
 
 
 def test_index_write_read_roundtrip_partition_pruning(spark, tmp_path):
-    """write_ivfpq16_index persists the serving table partitioned by
-    cell; reloading and filtering on probe cells turns the filter into
+    """write_pq_index persists the coded relation partitioned by cell;
+    reloading and filtering on probe cells turns the filter into
     PartitionFilters (directory pruning — the 100 TB serving shape),
     and the reloaded table serves identical ADC results."""
     emb = fx._read(spark, SF0001, "embeddings")
-    idx = sim.ivfpq16_index_for(emb)
+    idx = _ivfpq16_index(emb)
     path = str(tmp_path / "ivfpq16_index")
-    sim.write_ivfpq16_index(idx, path)
-    reloaded = sim.read_ivfpq16_index_table(spark, path)
+    sim.write_pq_index(idx, path)
+    reloaded = sim.read_pq_index_table(spark, path, idx.pq)
     assert set(reloaded.columns) == {
         "vec_id", "label", "cell", "pq_lo", "pq_hi",
     }
@@ -131,12 +120,27 @@ def test_index_write_read_roundtrip_partition_pruning(spark, tmp_path):
     seg = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cell" in seg
     # served results off the reloaded table == in-session index
-    disk_idx = sim.IvfPq16Index(
-        coded=reloaded, vecs=idx.vecs, cents=idx.cents, books=idx.books
-    )
-    assert _rows(sim.ann_ivfpq16_serve_topk(disk_idx)) == _rows(
-        sim.ann_ivfpq16_serve_topk(idx)
-    )
+    disk_idx = dataclasses.replace(idx, coded=reloaded)
+    assert _rows(sim.pq_search(disk_idx)) == _rows(sim.pq_search(idx))
+
+
+@pytest.mark.parametrize("entry", ["adc", "rerank", "serve"])
+def test_missing_query_id_fails_by_name(spark, entry):
+    """A query id the corpus lacks raises ValueError naming the id at
+    every entry point that takes one — plain ADC, ADC + exact rerank
+    and the serve path over a built index — instead of a TypeError
+    from a None row."""
+    emb = fx._read(spark, SF0001, "embeddings")
+    missing = 10**9
+    with pytest.raises(ValueError, match=f"vec_id {missing} is not in"):
+        if entry == "adc":
+            cfg = sim.PQ_TOPK["ann_pq8_adc_topk"]
+            sim.pq_topk(emb, **cfg, query_id=missing)
+        elif entry == "rerank":
+            cfg = sim.PQ_TOPK["ann_pq16_rerank_topk"]
+            sim.pq_topk(emb, **cfg, query_id=missing)
+        else:
+            sim.pq_search(_ivfpq16_index(emb), query_id=missing)
 
 
 # ---------------------------------------------------------------------------
@@ -308,14 +312,16 @@ def test_ccnet_staged_mix_budget_scales_with_pool(spark):
         assert big[s][1] >= small[s][1]
 
 
-def test_pq_seed_band_incomplete_is_loud(spark):
+@pytest.mark.parametrize("bits", [3, 8])
+def test_pq_seed_band_incomplete_is_loud(spark, bits):
     """Training PQ codebooks on a corpus that lost part of the
-    256-vector seed band raises a named contract error up front instead
-    of a downstream KeyError mid-train (the r10 DEVNOTES known edge)."""
+    vec_id 1..2**bits seed band raises a named contract error up front
+    instead of a downstream KeyError mid-train (the r10 DEVNOTES known
+    edge)."""
     emb = fx._read(spark, SF0001, "embeddings")
-    sliced = sim._vectors(emb).where(F.col("vec_id") < 100)
+    sliced = sim._vectors(emb).where(F.col("vec_id") > 4)
     with pytest.raises(ValueError, match="PQ seed band incomplete"):
-        sim._pq8_books(sliced)
+        sim.ProductQuantizer(8, bits).books(sliced)
 
 
 def test_ivfpq16_index_stats_census_invariants(spark):
@@ -324,10 +330,10 @@ def test_ivfpq16_index_stats_census_invariants(spark):
     by population, and the numbers agree with counting the coded table
     directly."""
     emb = fx._read(spark, SF0001, "embeddings")
-    idx = sim.ivfpq16_index_for(emb)
+    idx = _ivfpq16_index(emb)
     stats = {
         r["cell"]: (r["n_vectors"], r["n_codes"])
-        for r in sim.ivfpq16_index_stats(idx).collect()
+        for r in sim.pq_index_stats(idx).collect()
     }
     total = emb.count()
     assert sum(n for n, _ in stats.values()) == total
@@ -342,56 +348,54 @@ def test_ivfpq16_index_stats_census_invariants(spark):
 
 
 # ---------------------------------------------------------------------------
-# r10 optimization round: the vectorized quantization kernels
+# r10 optimization round: the vectorized assignment kernels
 # (similarity._js_np_udf / _cell_np_udf) replaced the interpreted
 # higher-order-function argmin/argmax in every PQ/IVF assignment path.
-# The expression forms are KEPT as the reference spec (_cell_expr,
-# _sub_code_idx via _pq8_sliced/_pq8_with_dists/_pq8_idx); these tests
-# lock FULL-CORPUS equality of the two forms — code indexes and cell
-# ids for every vector, both distance families, both (m, d) layouts.
+# The expression forms are KEPT as the reference spec (_cell_expr and
+# _code_idx_ref, one reference parameterized by the distance form);
+# these tests lock FULL-CORPUS equality of the two forms — code indexes
+# and cell ids for every vector, both distance forms, seed and trained
+# books, raw and OPQ-permuted vectors.
 # ---------------------------------------------------------------------------
 
 
-def _js_expr_rows(vecs, books, m, d, form):
-    """Per-vector code indexes via the REFERENCE expression forms."""
-    if form == "3term":
-        cols = [
-            sim._sub_code_idx(s, books).alias(f"j{s}") for s in range(m)
-        ]
-        return {
-            r["vec_id"]: [r[f"j{s}"] for s in range(m)]
-            for r in vecs.select("vec_id", *cols).collect()
-        }
-    sliced = sim._pq8_sliced(vecs, m=m, d=d)
-    with_d = sim._pq8_with_dists(sliced, books)
-    cols = [sim._pq8_idx(s).alias(f"j{s}") for s in range(m)]
+def _js_expr_rows(vecs, pq, books):
+    """Per-vector code indexes via the REFERENCE expression form."""
+    cols = [
+        sim._code_idx_ref(s, books[s], pq.d, pq.form).alias(f"j{s}")
+        for s in range(pq.m)
+    ]
     return {
-        r["vec_id"]: [r[f"j{s}"] for s in range(m)]
-        for r in with_d.select("vec_id", *cols).collect()
+        r["vec_id"]: [r[f"j{s}"] for s in range(pq.m)]
+        for r in vecs.select("vec_id", *cols).collect()
     }
 
 
+def _pq_id(pq):
+    suffix = f"-lloyd{pq.train_iters}" if pq.train_iters else ""
+    suffix += f"-{pq.rotation}" if pq.rotation else ""
+    return f"{pq.m}-{pq.d}-{pq.form}{suffix}"
+
+
 @pytest.mark.parametrize(
-    "m,d,form",
+    "pq",
     [
-        (sim.PQ16_M, sim.PQ16_DIMS, "2term"),
-        (sim.PQ_M, sim.PQ_DIMS, "2term"),
-        (sim.PQ_M, sim.PQ_DIMS, "3term"),
+        sim.ProductQuantizer(16, 8),
+        sim.ProductQuantizer(8, 8),
+        sim.ProductQuantizer(8, 3),
+        sim.ProductQuantizer(8, 3, 1),
+        sim.ProductQuantizer(16, 8, 1),
+        sim.ProductQuantizer(16, 8, 1, rotation="opq"),
     ],
+    ids=_pq_id,
 )
-def test_np_code_assignment_equals_expression_form(spark, m, d, form):
-    emb = fx._read(spark, SF0001, "embeddings")
-    vecs = sim._vectors(emb)
-    if form == "3term":
-        books = sim._pq_codebooks(vecs)
-    else:
-        books = sim._pq8_books(vecs, m=m, d=d)
-    ref = _js_expr_rows(vecs, books, m, d, form)
+def test_np_code_assignment_equals_expression_form(spark, pq):
+    vecs = pq.vectors(fx._read(spark, SF0001, "embeddings"))
+    books = pq.books(vecs)
+    ref = _js_expr_rows(vecs, pq, books)
     got = {
         r["vec_id"]: list(r["js"])
-        for r in vecs.select(
-            "vec_id", sim._js_np_udf(books, m, d, form).alias("js")
-        ).collect()
+        for r in vecs.select("vec_id", pq.assign(books).alias("js")).collect()
     }
     assert got == ref
 
@@ -420,15 +424,16 @@ def test_np_cell_assignment_equals_expression_form(spark):
 
 def test_np_pack_words_match_expression_shift_sum(spark):
     """The packed bigint words (incl. the signed-overflow wrap of the
-    high PQ16 shifts) equal the expression packers' output."""
-    emb = fx._read(spark, SF0001, "embeddings")
-    vecs = sim._vectors(emb)
-    books = sim._pq8_books(vecs, m=sim.PQ16_M, d=sim.PQ16_DIMS)
+    high PQ16 shifts) equal a Python shift-sum of the reference code
+    indexes."""
+    pq = sim.ProductQuantizer(16, 8)
+    vecs = sim._vectors(fx._read(spark, SF0001, "embeddings"))
+    books = pq.books(vecs)
     got = {
         r["vec_id"]: (r["pq_lo"], r["pq_hi"])
-        for r in sim._pq16_pack(vecs, books).collect()
+        for r in pq.encode(vecs, books).collect()
     }
-    js = _js_expr_rows(vecs, books, sim.PQ16_M, sim.PQ16_DIMS, "2term")
+    js = _js_expr_rows(vecs, pq, books)
 
     def wrap(x):
         x &= (1 << 64) - 1
@@ -438,3 +443,87 @@ def test_np_pack_words_match_expression_shift_sum(spark):
         lo = wrap(sum(codes[s] << (8 * s) for s in range(8)))
         hi = wrap(sum(codes[s] << (8 * (s - 8)) for s in range(8, 16)))
         assert got[vid] == (lo, hi), vid
+
+
+# ---------------------------------------------------------------------------
+# one code layout: the Spark pack, the ADC unpack and the oracle's
+# pack/unpack read the same CodeLayout for every (m, bits) the quantizer
+# accepts
+# ---------------------------------------------------------------------------
+
+_DIVISORS = [m for m in range(1, sim.DIM + 1) if sim.DIM % m == 0]
+
+
+def _accepted_configs():
+    out = []
+    for bits in (3, 8):
+        for m in _DIVISORS:
+            try:
+                out.append(sim.ProductQuantizer(m, bits))
+            except ValueError:
+                # only the layout may refuse an m that divides 64: more
+                # than two words of 64 // bits codes
+                assert -(-m // (64 // bits)) > 2, (m, bits)
+    return out
+
+
+def test_quantizer_refuses_configs_it_cannot_hold():
+    with pytest.raises(ValueError, match="code words"):
+        sim.ProductQuantizer(64, 3)
+    with pytest.raises(ValueError, match="code words"):
+        sim.ProductQuantizer(32, 8)
+    with pytest.raises(ValueError, match="m must divide"):
+        sim.ProductQuantizer(3, 8)
+    with pytest.raises(ValueError, match="bits must be"):
+        sim.ProductQuantizer(8, 4)
+    with pytest.raises(ValueError, match="rotation"):
+        sim.ProductQuantizer(16, 8, rotation="pca")
+
+
+@pytest.mark.parametrize(
+    "pq", _accepted_configs(), ids=lambda pq: f"m{pq.m}-bits{pq.bits}"
+)
+def test_code_layout_round_trip(spark, pq):
+    """Random code indexes (plus the all-max row, which sets the top bit
+    of every field and so the sign bit of a full word) survive the
+    Spark pack -> unpack round trip, and the oracle's HUGEINT pack
+    yields the same signed words and unpacks to the same indexes."""
+    import duckdb
+
+    rng = random.Random(pq.m * 100 + pq.bits)
+    rows = {
+        i: [rng.randrange(pq.k) for _ in range(pq.m)] for i in range(40)
+    }
+    rows[40] = [pq.k - 1] * pq.m
+    lay = pq.layout
+    df = spark.createDataFrame(
+        list(rows.items()), "vec_id bigint, js array<int>"
+    )
+    coded = df.select("vec_id", *lay.pack(F.col("js")))
+    back = coded.select(
+        "vec_id",
+        *lay.cols,
+        F.array(*[lay.unpack(s) for s in range(pq.m)]).alias("js"),
+    ).collect()
+    assert {r["vec_id"]: list(r["js"]) for r in back} == rows
+    words = {r["vec_id"]: tuple(r[c] for c in lay.cols) for r in back}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE a (vec_id BIGINT, s INTEGER, j INTEGER)")
+    con.executemany(
+        "INSERT INTO a VALUES (?, ?, ?)",
+        [(v, s, j) for v, js in rows.items() for s, j in enumerate(js)],
+    )
+    con.execute("CREATE TABLE e AS SELECT DISTINCT vec_id, 0 AS label FROM a")
+    pack = ",\n".join(lay.sql_pack_ctes("a"))
+    cols = ", ".join(lay.cols)
+    got = con.sql(f"WITH {pack} SELECT vec_id, {cols} FROM codes").fetchall()
+    assert {r[0]: tuple(r[1:]) for r in got} == words
+    unpack = ",\n".join(lay.sql_unpack_ctes("codes"))
+    got = con.sql(
+        f"WITH {pack},\n{unpack} SELECT vec_id, s, j FROM unpacked"
+    ).fetchall()
+    back_sql: dict[int, list[int]] = {v: [None] * pq.m for v in rows}
+    for v, s, j in got:
+        back_sql[v][s] = j
+    assert back_sql == rows

@@ -169,20 +169,20 @@ def test_pq8_seed_vectors_quantize_to_themselves(spark, sf_dir):
     from pyspark.sql import functions as F
 
     emb = fx._read(spark, sf_dir, "embeddings")
-    vecs = sim._vectors(emb)
-    books = sim._pq8_books(vecs)
+    pq = sim.PQ_CODES["embedding_pq8_codes"]
+    books = pq.books(sim._vectors(emb))
     codes = {
         r["vec_id"]: r["pq_code"]
-        for r in sim.embedding_pq8_codes(emb)
-        .where(F.col("vec_id").between(sim.PQ8_SEED_LO, sim.PQ8_SEED_HI))
+        for r in sim.pq_codes(emb, pq)
+        .where(F.col("vec_id").between(1, pq.k))
         .collect()
     }
-    assert len(codes) == sim.PQ8_K
+    assert len(codes) == pq.k
     assert any(c < 0 for c in codes.values())  # bit 63 exercised
     for cid, code in codes.items():
-        own_j = cid - sim.PQ8_SEED_LO
-        for s in range(sim.PQ_M):
-            j = (code >> (sim.PQ8_BITS * s)) & (sim.PQ8_K - 1)
+        own_j = cid - 1
+        for s in range(pq.m):
+            j = (code >> (pq.bits * s)) & (pq.k - 1)
             assert books[s][j] == books[s][own_j], (cid, s, j)
 
 
@@ -195,21 +195,23 @@ def test_pq8_trained_books_reduce_quantization_error(spark, sf_dir):
     vecs = sim._vectors(emb)
     rows = [[float(x) for x in r["v"]] for r in vecs.select("v").collect()]
 
+    d = sim.ProductQuantizer(8, 8).d
+
     def total_err(books):
         tot = 0.0
         for v in rows:
-            for s in range(sim.PQ_M):
-                vs = v[s * sim.PQ_DIMS : (s + 1) * sim.PQ_DIMS]
+            for s, book in enumerate(books):
+                vs = v[s * d : (s + 1) * d]
                 tot += min(
                     sim._seq_dot(vs, vs)
                     - 2 * sim._seq_dot(vs, cs)
                     + sim._seq_dot(cs, cs)
-                    for cs in books[s].values()
+                    for cs in book
                 )
         return tot
 
-    seed = total_err(sim._pq8_books(vecs))
-    trained = total_err(sim._pq8_lloyd_books(vecs, 1))
+    seed = total_err(sim.ProductQuantizer(8, 8).books(vecs))
+    trained = total_err(sim.ProductQuantizer(8, 8, 1).books(vecs))
     assert trained <= seed + 1e-9, (trained, seed)
 
 
@@ -218,14 +220,15 @@ def test_opq_permutation_is_balanced_bijection(spark, sf_dir):
     (b) BALANCE energy: the spread (max − min) of per-subspace total
     corpus energy under the snake-dealt layout is <= the identity
     layout's spread — the mechanism the recall lift rides on, and
-    (c) agree with the projection :func:`_opq_vectors` actually ships
+    (c) agree with the projection ``ProductQuantizer.vectors`` ships
     (spot-checked against a Python reorder of a collected row)."""
     from pyspark.sql import functions as F
 
     emb = fx._read(spark, sf_dir, "embeddings")
     vecs = sim._vectors(emb)
-    perm = sim._opq_perm(vecs)
-    n = sim.PQ16_M * sim.PQ16_DIMS
+    pq = sim.PQ_CODES["embedding_opq16_codes"]
+    perm = sim._opq_perm(vecs, pq.m, pq.d)
+    n = sim.DIM
     assert sorted(perm) == list(range(n))
 
     rows = [[float(x) for x in r["v"]] for r in vecs.select("v").collect()]
@@ -233,9 +236,8 @@ def test_opq_permutation_is_balanced_bijection(spark, sf_dir):
 
     def spread(layout):
         per_sub = [
-            sum(energy[layout[s * sim.PQ16_DIMS + i]]
-                for i in range(sim.PQ16_DIMS))
-            for s in range(sim.PQ16_M)
+            sum(energy[layout[s * pq.d + i]] for i in range(pq.d))
+            for s in range(pq.m)
         ]
         return max(per_sub) - min(per_sub)
 
@@ -243,7 +245,7 @@ def test_opq_permutation_is_balanced_bijection(spark, sf_dir):
 
     first = vecs.orderBy("vec_id").select("vec_id", "v").first()
     got = (
-        sim._opq_vectors(emb)
+        pq.vectors(emb)
         .where(F.col("vec_id") == first["vec_id"])
         .select("v")
         .first()["v"]

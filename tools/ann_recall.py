@@ -195,37 +195,26 @@ def main(argv: list[str]) -> int:
         order = np.lexsort((ids, d2))
         top = [int(ids[i]) for i in order if ids[i] != q][: args.k]
         l2_truth[q] = set(top)
+    # the registered PQ top-k configurations, plus the untrained OPQ
+    # point that isolates the permutation's own recall effect
+    opq = sim.PQ_TOPK["ann_opq16_adc_topk"]["pq"]
     pq_variants = {
-        "ann_pq_adc_topk": sim.ann_pq_adc_topk,
-        "ann_pq_adc_topk_lloyd": lambda e, query_id, k: sim.ann_pq_adc_topk(
-            e, query_id=query_id, k=k, train_iters=1
-        ),
-        "ann_ivfpq_topk": sim.ann_ivfpq_topk,
-        "ann_pq8_adc_topk": sim.ann_pq8_adc_topk,
-        "ann_pq8_adc_topk_lloyd": lambda e, query_id, k: sim.ann_pq8_adc_topk(
-            e, query_id=query_id, k=k, train_iters=1
-        ),
-        "ann_pq16_adc_topk": sim.ann_pq16_adc_topk,
-        "ann_pq16_adc_topk_lloyd": lambda e, query_id, k: (
-            sim.ann_pq16_adc_topk(e, query_id=query_id, k=k, train_iters=1)
-        ),
-        "ann_opq16_adc_topk_untrained": lambda e, query_id, k: (
-            sim.ann_opq16_adc_topk(e, query_id=query_id, k=k, train_iters=0)
-        ),
-        "ann_opq16_adc_topk": sim.ann_opq16_adc_topk,
-        "ann_ivfpq16_topk": sim.ann_ivfpq16_topk,
-        "ann_pq16_rerank_topk": sim.ann_pq16_rerank_topk,
-        "ann_ivfpq16_rerank_topk": sim.ann_ivfpq16_rerank_topk,
+        **sim.PQ_TOPK,
+        "ann_opq16_adc_topk_untrained": {
+            "pq": sim.ProductQuantizer(opq.m, opq.bits, rotation="opq")
+        },
     }
-    for name, fn in pq_variants.items():
+    for name, cfg in pq_variants.items():
         hits = 0
         for q in qids:
             got = {
-                r["vec_id"] for r in fn(emb, query_id=q, k=args.k).collect()
+                r["vec_id"]
+                for r in sim.pq_topk(emb, query_id=q, k=args.k, **cfg)
+                .collect()
             }
             hits += len(got & l2_truth[q])
         recall = hits / (len(qids) * args.k)
-        nbytes = 16 if ("pq16" in name or "opq16" in name) else 8
+        nbytes = cfg["pq"].layout.nbytes
         print(f"| {name} | {recall:.3f} | {nbytes} (vs 512 raw) |")
     return 0
 

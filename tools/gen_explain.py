@@ -247,10 +247,10 @@ SHOW = {
     "ann_ivfpq16_serve_topk": (
         "The SEARCH step over a BUILT index (round 10): the serving "
         "table (cell + 16 code bytes per vector) was materialized once "
-        "by build_ivfpq16_index, so the plan is just probe-cell filter "
+        "by pq_index_for, so the plan is just probe-cell filter "
         "+ ADC projection + TakeOrderedAndProject over the checkpointed "
         "relation — ZERO joins, zero training jobs; persisted via "
-        "write_ivfpq16_index the cell filter becomes partition pruning."
+        "write_pq_index the cell filter becomes partition pruning."
     ),
     "ann_ivfpq16_serve_rerank_topk": (
         "SEARCH + refine over the built index: the only join in the "
