@@ -16,8 +16,9 @@ Layout:
     operators  — one module per operator family (retail, dedup, similarity,
                  text, windows, multimodal)
     plans      — composed query plans (single-pass weekly summary, assembly)
-    streaming  — Structured Streaming analogs (windowed rollups, watermark)
+    sources    — custom batch connector (Python DataSource API)
     pipeline   — orchestration layer (readiness gate, run_pipeline)
+    corpus_pipeline — the corpus-preparation twin of run_pipeline
 """
 
 __version__ = "0.1.0"

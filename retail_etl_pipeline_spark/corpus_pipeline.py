@@ -216,129 +216,3 @@ def training_manifest(
     )
     return packing_index(base, block_tokens=block_tokens)
 
-
-def stream_corpus_manifest(
-    spark: SparkSession,
-    source_dir: str,
-    manifest_dir: str,
-    checkpoint_dir: str,
-    block_tokens: int = 512,
-):
-    """Continuously extend the packing manifest as document batches
-    arrive: a Structured Streaming ``foreachBatch`` loop around
-    ``packing_index_incremental``.
-
-    Effectively-once on crash-replay, keyed by ``batch_id``:
-
-    - manifest rows land in a ``batch_id=N`` partition via DYNAMIC
-      partition overwrite — a replayed batch REWRITES its own partition
-      with byte-identical rows instead of appending duplicates;
-    - cursors come from a bounded per-batch SNAPSHOT sidecar
-      (``_cursors/batch_id=N`` holds the full per-source state after
-      batch N): batch N always reads the snapshot of the latest batch
-      < N, so a replay sees the same inputs it saw the first time —
-      deriving cursors from the manifest itself would see the crashed
-      batch's own rows and flag every replayed doc as out-of-order.
-      The snapshot is O(|sources|), so per-batch cost does not grow
-      with manifest age (re-aggregating the manifest would be
-      O(manifest) per batch — quadratic over a long-running stream).
-
-    Because per-source prefix sums decompose, the streamed manifest is
-    bit-equal to a batch repack of everything seen — provided batches
-    arrive in doc_id order per source; out-of-order arrivals come back
-    flagged (in_order = false) rather than silently mis-packed, the
-    audit trail of what must be re-packed (their tokens never advance
-    the snapshots — packing_cursors counts packed rows only).
-
-    Returns the started StreamingQuery (AvailableNow trigger — drain
-    what exists, then stop; swap the trigger for continuous tailing).
-    """
-    import os
-
-    from .operators.corpus import packing_cursors, packing_index_incremental
-
-    stream = spark.readStream.schema(
-        "doc_id long, source string, text string"
-    ).parquet(source_dir)
-
-    cursors_dir = os.path.join(manifest_dir, "_cursors")
-    _CURSOR_SCHEMA = "source string, cursor_tok bigint, last_doc_id bigint"
-
-    def _latest_cursors(session, before_batch: int):
-        """Full cursor state after the newest batch < before_batch, or
-        empty state for the first batch. The sidecar listing goes through
-        the Hadoop FS API (like run_pipeline's promote step) — a local
-        ``os.listdir`` silently returns nothing on hdfs/s3a, which would
-        restart every batch from cursor 0 and mis-pack the manifest. The
-        listing is explicit (no exception-swallowing read: a TRANSIENT
-        manifest read failure must fail the batch, not silently restart
-        offsets from zero)."""
-        jvm = session._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        root = hpath(cursors_dir)
-        fs = root.getFileSystem(session._jsc.hadoopConfiguration())
-        if fs.exists(root):
-            done = sorted(
-                int(name.split("=", 1)[1])
-                for st in fs.listStatus(root)
-                for name in [st.getPath().getName()]
-                if name.startswith("batch_id=")
-                and int(name.split("=", 1)[1]) < before_batch
-            )
-            if done:
-                return session.read.schema(_CURSOR_SCHEMA).parquet(
-                    os.path.join(cursors_dir, f"batch_id={done[-1]}")
-                )
-        return session.createDataFrame([], _CURSOR_SCHEMA)
-
-    def _extend(batch_df, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        prev = _latest_cursors(session, batch_id)
-        inc = packing_index_incremental(batch_df, prev, block_tokens)
-        (
-            inc.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(manifest_dir)
-        )
-        # next full snapshot = previous state merged with this batch's
-        # packed contribution (outer merge on source, O(|sources|))
-        delta = packing_cursors(inc)
-        merged = (
-            prev.select(
-                "source",
-                F.col("cursor_tok").alias("prev_tok"),
-                F.col("last_doc_id").alias("prev_id"),
-            )
-            .join(
-                delta.select(
-                    "source",
-                    F.col("cursor_tok").alias("d_tok"),
-                    F.col("last_doc_id").alias("d_id"),
-                ),
-                "source",
-                "full_outer",
-            )
-            .select(
-                "source",
-                (
-                    F.coalesce("prev_tok", F.lit(0))
-                    + F.coalesce("d_tok", F.lit(0))
-                ).cast("bigint").alias("cursor_tok"),
-                F.greatest(
-                    F.coalesce("prev_id", F.lit(-(2**62))),
-                    F.coalesce("d_id", F.lit(-(2**62))),
-                ).alias("last_doc_id"),
-            )
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(cursors_dir, f"batch_id={int(batch_id)}")
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_extend)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

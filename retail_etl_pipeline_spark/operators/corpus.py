@@ -258,7 +258,7 @@ def eval_contamination_lsh(docs: DataFrame) -> DataFrame:
     audits before training.
 
     Plan: ONE band index over the corpus (:func:`..dedup.band_index` —
-    the same relation batch LSH and the streaming fold use), split into
+    the same relation batch LSH uses), split into
     train/eval sides by a pure predicate, equi-joined on (band_id,
     band_key). Cost tracks bucket collisions against the ~1/EVAL_MOD
     eval slice, never train x eval; at 100 TB the eval side's buckets
@@ -820,111 +820,6 @@ SELECT source, n_docs, n_tokens,
                       // NULLIF(tot_tokens, 0), 0) AS BIGINT) AS weight_ppm
 FROM per, tot
 """
-
-
-def packing_cursors(manifest: DataFrame) -> DataFrame:
-    """Per-source continuation state for incremental packing: the token
-    cursor (where the next document starts) and the last packed doc_id
-    (the append-only watermark). Derived from a previous manifest with
-    one bounded aggregation — contiguous tiling makes the cursor the
-    sum of PACKED token counts.
-
-    Only rows that were actually packed (non-NULL start_tok) advance the
-    cursor: a manifest legitimately contains flagged rejected rows
-    (in_order = false from an incremental extension), and counting their
-    tokens would shift every later document off the true block grid —
-    exactly the silent mis-pack the flag exists to prevent. The doc_id
-    watermark also comes from packed rows only (a rejected doc_id is by
-    definition not ahead of the watermark)."""
-    packed = F.col("start_tok").isNotNull()
-    return manifest.groupBy("source").agg(
-        F.sum(F.when(packed, F.col("n_tokens")).otherwise(0))
-        .cast("bigint")
-        .alias("cursor_tok"),
-        F.max(F.when(packed, F.col("doc_id"))).alias("last_doc_id"),
-    )
-
-
-def packing_index_incremental(
-    new_docs: DataFrame,
-    cursors: DataFrame,
-    block_tokens: int = PACK_BLOCK_TOKENS,
-) -> DataFrame:
-    """Extend a packing manifest with a new batch of documents WITHOUT
-    re-scanning packed history: per-source prefix sums decompose, so the
-    new batch's running offsets just start from the stored cursor —
-    cost O(|delta| + |sources|) (the same merge-partials algebra as
-    operators/incremental.py, applied to a prefix sum; the result is
-    bit-equal to re-packing old+new and keeping the new rows, which the
-    tests assert).
-
-    Append-only contract made explicit: a new doc_id at or below its
-    source's ``last_doc_id`` watermark cannot be packed without
-    rewriting history — such rows come back with NULL blocks and
-    ``in_order = false`` (flagged, not silently mis-packed; same
-    quarantine philosophy as the NULL-text handling). Unknown sources
-    start at cursor 0.
-    """
-    cur = cursors.select(
-        "source",
-        F.col("cursor_tok").cast("bigint").alias("_cursor"),
-        F.col("last_doc_id").alias("_watermark"),
-    )
-    j0 = (
-        new_docs.select("source", "doc_id", "text")
-        .join(cur, "source", "left")
-        .withColumn(
-            "_in_order",
-            F.coalesce(F.col("doc_id") > F.col("_watermark"), F.lit(True)),
-        )
-    )
-    # the cumsum runs over IN-ORDER docs only: a rejected out-of-order
-    # doc must not shift the offsets of the docs that do get packed
-    base = packing_index(
-        j0.where(F.col("_in_order")), block_tokens=block_tokens
-    )
-    shifted = (
-        base.join(cur, "source", "left")
-        .withColumn(
-            "_start", F.coalesce(F.col("_cursor"), F.lit(0)) + F.col("start_tok")
-        )
-        .withColumn("_end", F.col("_start") + F.col("n_tokens"))
-    )
-    packable = F.col("n_tokens") > 0
-    in_order_rows = shifted.select(
-        "source",
-        "doc_id",
-        "n_tokens",
-        F.col("_start").alias("start_tok"),
-        F.when(packable, F.expr(f"_start div {block_tokens}")).alias(
-            "first_block"
-        ),
-        F.when(packable, F.expr(f"(_end - 1) div {block_tokens}")).alias(
-            "last_block"
-        ),
-        F.when(
-            packable,
-            F.expr(
-                f"(_end - 1) div {block_tokens}"
-                f" - _start div {block_tokens} + 1"
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("spans_blocks"),
-        F.lit(True).alias("in_order"),
-    )
-    rejected_rows = j0.where(~F.col("_in_order")).select(
-        "source",
-        "doc_id",
-        _n_tok("text").alias("n_tokens"),
-        F.lit(None).cast("bigint").alias("start_tok"),
-        F.lit(None).cast("bigint").alias("first_block"),
-        F.lit(None).cast("bigint").alias("last_block"),
-        F.lit(0).cast("bigint").alias("spans_blocks"),
-        F.lit(False).alias("in_order"),
-    )
-    return in_order_rows.unionByName(rejected_rows)
 
 
 # ---------------------------------------------------------------------------

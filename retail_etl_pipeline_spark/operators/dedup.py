@@ -233,12 +233,10 @@ def _band_key(i: int):
 
 def band_index(docs: DataFrame, sh: DataFrame | None = None) -> DataFrame:
     """(doc_id, band_id, band_key): the LSH band-bucket index — the
-    relation both the batch self-join (:func:`minhash_lsh_candidates`)
-    and the incremental fold (``streaming/neardup.py``) build on. A
-    row means "doc_id hashes into bucket band_key of band band_id";
-    two docs are candidates iff they share a row's (band_id,
-    band_key). Factored out so the streamed state table and the batch
-    join sides are BY CONSTRUCTION the same relation."""
+    relation the batch self-join (:func:`minhash_lsh_candidates`) and
+    the eval-contamination probe build on. A row means "doc_id hashes
+    into bucket band_key of band band_id"; two docs are candidates iff
+    they share a row's (band_id, band_key)."""
     sig = minhash_signatures(docs, sh=sh)
     return sig.select(
         "doc_id",
@@ -362,28 +360,10 @@ def jaccard_verify_candidates(
     is computed. The float multiply rounds DOWN past the true
     threshold, so the filter can only under-prune — completeness is
     decided by the exact final Jaccard predicate."""
-    return jaccard_verify_arrays(shingle_arrays(sh), cand, threshold)
-
-
-def shingle_arrays(sh: DataFrame) -> DataFrame:
-    """(doc_id, shs array<long>, n_sh) — each doc's shingle set packed
-    into ONE array row. This is the verify stage's working form and the
-    streaming pipeline's persisted shingle store
-    (``streaming/neardup.py``): bounded by corpus x shingles-per-doc,
-    re-read per batch to re-verify only that batch's candidate pairs."""
-    return sh.groupBy("doc_id").agg(
+    arrs = sh.groupBy("doc_id").agg(
         F.collect_list("sh").alias("shs"),
         F.count(F.lit(1)).alias("n_sh"),
     )
-
-
-def jaccard_verify_arrays(
-    arrs: DataFrame, cand: DataFrame, threshold: float
-) -> DataFrame:
-    """The array-form core of :func:`jaccard_verify_candidates`:
-    ``arrs`` is a pre-aggregated :func:`shingle_arrays` relation — the
-    shape the streaming fold persists, so incremental re-verification
-    joins the store directly instead of re-shingling history."""
     aa = arrs.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shs").alias("shs_a"),

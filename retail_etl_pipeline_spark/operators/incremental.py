@@ -9,8 +9,7 @@ associative+commutative) and folds new deltas in with one bounded merge:
 
 Cost per run is O(|delta| + |state|), independent of history length —
 the same algebra Spark itself uses for map-side partial aggregation,
-lifted to run-over-run granularity (and the batch twin of the streaming
-rollup's state store). Decimal sums keep the merge EXACT and
+lifted to run-over-run granularity. Decimal sums keep the merge EXACT and
 order-independent, so any regrouping of runs produces bit-identical
 state; finalization (rounding, ratios) happens only at read time, never
 in state — rounding in state would make merges order-dependent.

@@ -731,12 +731,19 @@ def ann_ivf_topk(emb: DataFrame, query_id: int = 0, k: int = TOP_K) -> DataFrame
     """IVF ANN top-k: probe only the query's cell, exact cosine rerank
     inside it. The candidate scan shrinks from N to ~N/len(CENTROID_IDS);
     recall < 1 by construction and the oracle encodes the same cells."""
-    cells = _with_cells(_vectors(emb))
-    # resolve the query row driver-side (1 row) and inline it: avoids a
-    # self-join of `cells` with itself, which both adds a join stage and
-    # trips Spark's attribute dedup on the outer column captured by the
-    # cell-assignment transform lambda (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    return _ivf_probe(_with_cells(_vectors(emb)), query_id, k)
+
+
+def _ivf_probe(cells: DataFrame, query_id: int, k: int) -> DataFrame:
+    """Exact cosine top-k inside the query's cell of ``cells`` (vec_id,
+    label, v, cell). The query row is resolved driver-side (1 row) and
+    inlined: a self-join of ``cells`` would add a join stage and trip
+    Spark's attribute dedup on the outer column captured by the
+    cell-assignment transform lambda (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
+    An id the corpus lacks raises ValueError naming it."""
     qrow = cells.where(F.col("vec_id") == query_id).select("cell", "v").first()
+    if qrow is None:
+        raise ValueError(f"query vec_id {query_id} is not in the corpus")
     qv = _dbl_arr_lit([float(x) for x in qrow["v"]])
     return (
         cells.where(
@@ -1132,23 +1139,7 @@ def ann_ivf_topk_lloyd(
     cell populations even out and the probed fraction is closer to the
     ideal 1/|cells|."""
     cells, _ = _lloyd_refined_cells(_vectors(emb), iters=iters)
-    qrow = (
-        cells.where(F.col("vec_id") == query_id).select("cell", "v").first()
-    )
-    qv = _dbl_arr_lit([float(x) for x in qrow["v"]])
-    return (
-        cells.where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell") == F.lit(qrow["cell"]))
-        )
-        .select(
-            "vec_id",
-            "label",
-            _round6(cosine(F.col("v"), qv)).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _ivf_probe(cells, query_id, k)
 
 
 def ann_ivf_topk_lloyd_multiprobe(

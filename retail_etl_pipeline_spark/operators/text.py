@@ -961,16 +961,12 @@ FROM per_tok LEFT JOIN per_bg ON per_tok.doc_id = per_bg.doc_id
 """
 
 
-def gopher_keep_rate_by_source(
-    docs: DataFrame, flags: DataFrame | None = None
-) -> DataFrame:
+def gopher_keep_rate_by_source(docs: DataFrame) -> DataFrame:
     """Per-source quality-gate health: how much of each ingestion
     source the Gopher rule battery keeps, and which rule kills the
-    rest — the monitoring table behind the gated streaming intake
-    (``streaming.neardup.gated_dedup_pipeline_fold``), same role
-    :func:`..operators.dedup.neardup_rate_by_source` plays for the
-    dedup stage. A source whose keep rate collapses is a feed that
-    started shipping boilerplate.
+    rest — the same role :func:`..operators.dedup.neardup_rate_by_source`
+    plays for the dedup stage. A source whose keep rate collapses is a
+    feed that started shipping boilerplate.
 
     Returns one row per source: n_docs, n_kept, exact-integer
     keep_ppm = 1e6·n_kept div n_docs, one failure count per rule
@@ -981,12 +977,8 @@ def gopher_keep_rate_by_source(
 
     Plan: the rule battery's two |docs|-bounded aggregates, LEFT-joined
     back to the (doc_id, source) projection, one |sources|-bounded
-    aggregation. Raw text never shuffles. ``flags`` short-circuits the
-    battery with a precomputed (and typically persisted) flag relation
-    — the gated streaming fold computes flags once for the quarantine
-    write and reuses them here."""
-    if flags is None:
-        flags = gopher_quality_flags(docs)
+    aggregation. Raw text never shuffles."""
+    flags = gopher_quality_flags(docs)
     base = docs.select("doc_id", "source")
     j = base.join(flags, "doc_id", "left")
 

@@ -1,10 +1,9 @@
 """Event-time window operators over the event stream (SURVEY.md §2.10).
 
-Batch forms of the streaming windows — ``F.window`` / ``F.session_window``
-work identically on static DataFrames, so these single implementations are
-reused by the ``streaming`` module with ``readStream`` + watermark on top.
-They generalize the reference's "daily snapshot -> end-of-period state"
-pattern (W1) from calendar weeks to arbitrary event-time windows.
+Tumbling, sliding and session windows (``F.window`` /
+``F.session_window``). They generalize the reference's "daily snapshot ->
+end-of-period state" pattern (W1) from calendar weeks to arbitrary
+event-time windows.
 
 Oracle equivalents use DuckDB ``time_bucket`` (tumbling/sliding) and a
 gaps-and-islands rewrite (session windows).

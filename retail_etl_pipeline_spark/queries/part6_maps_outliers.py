@@ -1065,8 +1065,8 @@ def incremental_nation_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     nation_customer_hll's COUNT(DISTINCT) oracle, so the driver proves
     merge(sketch(A), sketch(B)) == direct(A ∪ B) exactly (fixture
     groups sit in the coupon regime; see sketches.HLL_LGK). The HLL
-    member of the incremental_weekly_rollup family; its streaming
-    foreachBatch twin is pinned in tests/test_streaming.py."""
+    member of the incremental_weekly_rollup family; the three-slice
+    fold is pinned in tests/test_merge_folds.py."""
     c = fx._read(spark, sf_dir, "customer")
     history = c.filter(F.col("c_custkey") % 2 == 0)
     today = c.filter(F.col("c_custkey") % 2 == 1)

@@ -1584,10 +1584,9 @@ def revenue_trend_jt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("gopher_keep_rate_by_source", tx.GOPHER_KEEP_RATE_SQL)
 def gopher_keep_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source quality-gate health (the monitoring twin of the r8
-    gated streaming intake): each ingestion source's Gopher keep rate
-    in exact ppm plus per-rule failure counts and tokenless implicit
-    rejects — the table that catches a feed turning into boilerplate
+    """Per-source quality-gate health: each ingestion source's Gopher
+    keep rate in exact ppm plus per-rule failure counts and tokenless
+    implicit rejects — the table that catches a feed turning into boilerplate
     before it pollutes the training mix. All-integer contingency over
     the rule battery's flags; one |sources|-bounded aggregation."""
     return tx.gopher_keep_rate_by_source(

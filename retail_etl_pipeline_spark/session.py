@@ -21,6 +21,22 @@ from pyspark.sql import SparkSession
 
 _APP_NAME = "retail_etl_pipeline_spark"
 
+#: ceiling of the derived driver-heap default, in MiB (64g)
+_DRIVER_MEMORY_CAP_MB = 64 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half the host's physical memory,
+    capped at 64g. In local mode the driver JVM also runs every
+    executor, so a fixed heap larger than the host would let it grow
+    until the host runs out of memory."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (AttributeError, ValueError, OSError):
+            return f"{_DRIVER_MEMORY_CAP_MB}m"
+    return f"{min(phys_bytes // 2 // 2**20, _DRIVER_MEMORY_CAP_MB)}m"
+
 
 def get_spark(
     app_name: str = _APP_NAME,
@@ -44,7 +60,7 @@ def get_spark(
             )
         )
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "64g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     # Shuffle/spill scratch space (r11). This sandbox's root disk writes at
     # ~20 MB/s with multi-second latency spikes (shared virtio + gVisor
     # syscall interception): thread dumps of the stalled bench showed 32

@@ -88,44 +88,10 @@ class SyntheticEventsDataSource(DataSource):
     def reader(self, schema) -> SyntheticEventsReader:
         return SyntheticEventsReader(self.options)
 
-    def simpleStreamReader(self, schema):
-        return SyntheticEventsStreamReader(self.options)
-
 
 def register_synthetic_source(spark) -> None:
     """Idempotent registration of the connector on a session."""
     spark.dataSource.register(SyntheticEventsDataSource)
-
-
-# ---------------------------------------------------------------------------
-# streaming variant: the same generator as an offset-tracked micro-batch
-# source (SimpleDataSourceStreamReader)
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
-
-
-class SyntheticEventsStreamReader(SimpleDataSourceStreamReader):
-    """Offset-based replayable stream over the deterministic generator.
-
-    The offset is just the next row index, so `readBetweenOffsets` can
-    replay any committed range exactly — which is what gives the source
-    end-to-end exactly-once with a checkpointed sink (a failed batch is
-    re-read bit-identically)."""
-
-    def __init__(self, options: dict) -> None:
-        self.batch_rows = int(options.get("rowsPerBatch", 100))
-
-    def initialOffset(self) -> dict:
-        return {"i": 0}
-
-    def read(self, start: dict):
-        s = int(start["i"])
-        e = s + self.batch_rows
-        return iter([_row(i) for i in range(s, e)]), {"i": e}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter([_row(i) for i in range(int(start["i"]), int(end["i"]))])
 
 
 # ---------------------------------------------------------------------------

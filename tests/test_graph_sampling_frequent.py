@@ -268,54 +268,6 @@ def test_pagerank_hub_heavy_sum_stays_exact(spark):
     assert out[0] == expected_hub
 
 
-def test_packing_incremental_equals_batch_repack(spark):
-    """The incremental continuation must be bit-equal to re-packing
-    old+new and keeping the new rows — prefix sums decompose."""
-    from retail_etl_pipeline_spark.operators import corpus as cp
-
-    old_rows = [("s%d" % (i % 3), i, "tok " * (i % 5 + 1)) for i in range(30)]
-    new_rows = [("s%d" % (i % 3), i, "tok " * (i % 7 + 2)) for i in range(30, 55)]
-    schema = "source string, doc_id bigint, text string"
-    old = spark.createDataFrame(old_rows, schema)
-    new = spark.createDataFrame(new_rows, schema)
-    manifest_old = cp.packing_index(old, 16)
-    cursors = cp.packing_cursors(manifest_old)
-    inc = cp.packing_index_incremental(new, cursors, 16)
-    full = cp.packing_index(old.unionByName(new), 16).where(F.col("doc_id") >= 30)
-    inc_rows = sorted(
-        (r["source"], r["doc_id"], r["n_tokens"], r["start_tok"],
-         r["first_block"], r["last_block"], r["spans_blocks"])
-        for r in inc.collect()
-    )
-    full_rows = sorted(
-        (r["source"], r["doc_id"], r["n_tokens"], r["start_tok"],
-         r["first_block"], r["last_block"], r["spans_blocks"])
-        for r in full.collect()
-    )
-    assert inc_rows == full_rows
-    assert all(r["in_order"] for r in inc.collect())
-
-
-def test_packing_incremental_flags_out_of_order_docs(spark):
-    """A doc_id at or below the source watermark can't be appended:
-    NULL blocks + in_order=false, never a silent mis-pack."""
-    from retail_etl_pipeline_spark.operators import corpus as cp
-
-    schema = "source string, doc_id bigint, text string"
-    old = spark.createDataFrame([("s", 10, "a b c d")], schema)
-    cursors = cp.packing_cursors(cp.packing_index(old, 4))
-    late = spark.createDataFrame(
-        [("s", 5, "x y z"), ("s", 11, "p q"), ("t", 1, "fresh source")], schema
-    )
-    out = {r["doc_id"]: r for r in cp.packing_index_incremental(late, cursors, 4).collect()}
-    assert out[5]["in_order"] is False
-    assert out[5]["first_block"] is None and out[5]["spans_blocks"] == 0
-    # in-order doc continues from the 4-token cursor
-    assert out[11]["in_order"] is True and out[11]["start_tok"] == 4
-    # unknown source starts at 0
-    assert out[1]["start_tok"] == 0 and out[1]["in_order"] is True
-
-
 def test_min_label_propagation_components_and_partial_state(spark):
     """Two disjoint components: after >= diameter rounds every node
     carries its component min; at round 1 a far node has only moved one
@@ -347,43 +299,6 @@ def test_min_label_propagation_partitioning_invariant(spark):
         map(tuple, gph.min_label_propagation(edges.repartition(7), 2).collect())
     )
     assert r1 == r2
-
-
-def test_packing_cursors_ignore_rejected_rows(spark):
-    """A manifest containing flagged rejected rows must not let their
-    tokens advance the cursor: chained incremental extension stays
-    bit-equal to a full repack (the review-caught silent mis-pack)."""
-    from retail_etl_pipeline_spark.operators import corpus as cp
-
-    schema = "source string, doc_id bigint, text string"
-    r1 = spark.createDataFrame(
-        [("s", 1, "a b c"), ("s", 2, "d e f")], schema
-    )
-    man1 = cp.packing_index(r1, 4)
-    # round 2: one late (rejected, 3 tokens) + one good doc
-    r2 = spark.createDataFrame(
-        [("s", 0, "x y z"), ("s", 3, "g h")], schema
-    )
-    man2 = cp.packing_index_incremental(r2, cp.packing_cursors(man1), 4)
-    # the union manifest is exactly what a pipeline would persist
-    manifest = man1.select(
-        "source", "doc_id", "n_tokens", "start_tok",
-        "first_block", "last_block", "spans_blocks",
-    ).withColumn("in_order", F.lit(True)).unionByName(man2)
-    # round 3 cursor must be 8 (6 + 2 packed tokens), NOT 11
-    cur = {r["source"]: (r["cursor_tok"], r["last_doc_id"])
-           for r in cp.packing_cursors(manifest).collect()}
-    assert cur == {"s": (8, 3)}
-    r3 = spark.createDataFrame([("s", 4, "i j k l")], schema)
-    man3 = cp.packing_index_incremental(r3, cp.packing_cursors(manifest), 4)
-    full = cp.packing_index(
-        r1.unionByName(r2.where("doc_id <> 0")).unionByName(r3), 4
-    ).where(F.col("doc_id") == 4)
-    got = man3.collect()[0]
-    want = full.collect()[0]
-    assert (got["start_tok"], got["first_block"], got["last_block"]) == (
-        want["start_tok"], want["first_block"], want["last_block"]
-    )
 
 
 def test_min_label_propagation_keeps_dst_only_nodes(spark):

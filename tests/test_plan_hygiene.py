@@ -21,6 +21,23 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir) -> dict[str, tuple[str, str]]:
+    """name -> (optimized, physical) plan strings of every registered
+    query, each built once for the four registry-wide checks."""
+    plans = {}
+    try:
+        for name, fn in QUERIES.items():
+            df = fn(spark, sf_dir)
+            plans[name] = (_optimized(df), _physical(df))
+    finally:
+        # several dedup queries persist shared relations while building;
+        # leftover cache entries substitute InMemoryRelation into other
+        # tests' plans and change their shape
+        spark.catalog.clearCache()
+    return plans
+
+
 def test_weekly_sales_rollup_single_shuffle(spark, sf_dir):
     """A1-A4 is scan -> partial agg -> ONE exchange -> final agg."""
     plan = _physical(QUERIES["weekly_sales_rollup"](spark, sf_dir))
@@ -117,18 +134,11 @@ def test_weekly_summary_text_metrics_match_column_helpers(spark, sf_dir):
     )
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
+def test_no_cartesian_products_anywhere(registry_plans):
     """No operator may compile to a cartesian product; near-dup/similarity
     pairs must ride equi-joins (shingle/band/bucket) or broadcast blocks."""
-    try:
-        for name, fn in QUERIES.items():
-            plan = _physical(fn(spark, sf_dir))
-            assert "CartesianProduct" not in plan, name
-    finally:
-        # several dedup queries persist shared relations while building;
-        # leftover cache entries substitute InMemoryRelation into other
-        # tests' plans and change their shape
-        spark.catalog.clearCache()
+    for name, (_, plan) in registry_plans.items():
+        assert "CartesianProduct" not in plan, name
 
 
 def test_window_merged_summary_plan_shape(spark, sf_dir):
@@ -486,20 +496,17 @@ def test_window_parser_detects_global_windows(spark):
         assert len(_global_windows(_optimized(d))) == want, _optimized(d)
 
 
-def test_no_empty_partition_windows_anywhere(spark, sf_dir):
+def test_no_empty_partition_windows_anywhere(registry_plans):
     """No query may plan a window with an empty partitionBy: Spark executes
     it by moving EVERY row into one task (VERDICT r2 'What's wrong' #4 —
     the rfm_segments / pareto_customers scale-killer). Global rankings and
     running sums must use the two-level decomposition in
     functions/ordered.py instead."""
-    try:
-        for name, fn in QUERIES.items():
-            bad = _global_windows(_optimized(fn(spark, sf_dir)))
-            assert not bad, (
-                f"{name}: global (empty-partitionBy) window:\n" + "\n".join(bad)
-            )
-    finally:
-        spark.catalog.clearCache()
+    for name, (plan, _) in registry_plans.items():
+        bad = _global_windows(plan)
+        assert not bad, (
+            f"{name}: global (empty-partitionBy) window:\n" + "\n".join(bad)
+        )
 
 
 def test_corpus_split_single_bounded_aggregate(spark, sf_dir):
@@ -571,17 +578,13 @@ def test_runtime_bloom_filter_injected_for_selective_join(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
+def test_no_rowwise_python_udfs_anywhere(registry_plans):
     """Python may appear in a plan only Arrow-vectorized (ArrowEvalPython
     for pandas_udf, MapInPandas/FlatMapGroupsInPandas for the batch
     operators). BatchEvalPython — row-at-a-time pickling, ~10-100x slower
     — must never appear in any registered query's plan."""
-    try:
-        for name, fn in QUERIES.items():
-            plan = _physical(fn(spark, sf_dir))
-            assert "BatchEvalPython" not in plan, name
-    finally:
-        spark.catalog.clearCache()
+    for name, (_, plan) in registry_plans.items():
+        assert "BatchEvalPython" not in plan, name
 
 
 def test_packing_index_single_exchange(spark, sf_dir):
@@ -633,7 +636,7 @@ def test_expectations_single_aggregate_over_one_scan(spark, sf_dir):
     assert "Union" not in plan, plan
 
 
-def test_no_partial_unbounded_following_frames_anywhere(spark, sf_dir):
+def test_no_partial_unbounded_following_frames_anywhere(registry_plans):
     """A window frame ending at UNBOUNDED FOLLOWING but starting after
     UNBOUNDED PRECEDING is executed by re-scanning to the partition end
     for EVERY row — O(rows²) per partition (measured: 150 s vs 5 s at
@@ -647,12 +650,8 @@ def test_no_partial_unbounded_following_frames_anywhere(spark, sf_dir):
         r" (?!unboundedpreceding)[^,]+, unboundedfollowing",
         re.IGNORECASE,
     )
-    try:
-        for name, fn in QUERIES.items():
-            plan = _optimized(fn(spark, sf_dir))
-            assert not bad.search(plan), (name, bad.search(plan).group(0))
-    finally:
-        spark.catalog.clearCache()
+    for name, (plan, _) in registry_plans.items():
+        assert not bad.search(plan), (name, bad.search(plan).group(0))
 
 
 def test_runtime_bloom_filter_injected_on_selective_shuffle_join(

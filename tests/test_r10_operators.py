@@ -124,12 +124,15 @@ def test_index_write_read_roundtrip_partition_pruning(spark, tmp_path):
     assert _rows(sim.pq_search(disk_idx)) == _rows(sim.pq_search(idx))
 
 
-@pytest.mark.parametrize("entry", ["adc", "rerank", "serve"])
+@pytest.mark.parametrize(
+    "entry", ["adc", "rerank", "serve", "ivf", "ivf_lloyd"]
+)
 def test_missing_query_id_fails_by_name(spark, entry):
     """A query id the corpus lacks raises ValueError naming the id at
-    every entry point that takes one — plain ADC, ADC + exact rerank
-    and the serve path over a built index — instead of a TypeError
-    from a None row."""
+    every entry point that takes one — plain ADC, ADC + exact rerank,
+    the serve path over a built index and the IVF cell probes over
+    seed and Lloyd-refined centroids — instead of a TypeError from a
+    None row."""
     emb = fx._read(spark, SF0001, "embeddings")
     missing = 10**9
     with pytest.raises(ValueError, match=f"vec_id {missing} is not in"):
@@ -139,8 +142,12 @@ def test_missing_query_id_fails_by_name(spark, entry):
         elif entry == "rerank":
             cfg = sim.PQ_TOPK["ann_pq16_rerank_topk"]
             sim.pq_topk(emb, **cfg, query_id=missing)
-        else:
+        elif entry == "serve":
             sim.pq_search(_ivfpq16_index(emb), query_id=missing)
+        elif entry == "ivf":
+            sim.ann_ivf_topk(emb, query_id=missing)
+        else:
+            sim.ann_ivf_topk_lloyd(emb, query_id=missing)
 
 
 # ---------------------------------------------------------------------------
