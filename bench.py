@@ -64,19 +64,29 @@ def _summary_record(
     }
 
 
+def drop_session_state(spark) -> None:
+    """Cold-run discipline: no computed state crosses a timed-run
+    boundary. Drops the PQ indexes ``similarity.pq_index_for`` holds and
+    the materialized co-purchase edge table, then unpersists every RDD
+    still persisted in the session: the eager localCheckpoints the
+    graph, dedup and selection kernels take inside one query survive
+    ``catalog.clearCache()`` and would pile up across a sweep. Only a
+    harness that owns its session may release state it did not create,
+    so this sweep lives here and not in the package."""
+    from retail_etl_pipeline_spark.operators import graph, similarity
+
+    similarity.clear_trained_state(spark)
+    graph.clear_materialized_edges(spark)
+    # blocking: the async form returns before the block manager removes
+    # the blocks, and the removal then races with the next timed run
+    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        jrdd.unpersist(True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ["SPARK_GRAFT_CPUS"] = cpus
-    # Measurement honesty (r10): the ANN trained-state memo
-    # (operators/similarity.py) would let run 2 of min-of-N reuse run 1's
-    # training, and alphabetically-later family members reuse earlier
-    # members' codebooks — a module-level memo feeding the timed region.
-    # Every timed run must compute cold from the parquet inputs, so the
-    # memo is CLEARED before each run (see the run loop); within one
-    # run it still dedups repeated bounded fetches inside a single
-    # query invocation (e.g. the seed-centroid collect shared by cell
-    # and codebook training), which is plan structure, not caching.
 
     from retail_etl_pipeline_spark.registry import QUERIES
     from retail_etl_pipeline_spark.session import get_spark
@@ -140,23 +150,10 @@ def main() -> None:
     # warm up the JVM/codegen path once (not counted)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    from retail_etl_pipeline_spark.operators import graph as _gph
-    from retail_etl_pipeline_spark.operators import similarity as _sim
-
     for i, (name, fn) in enumerate(selected, start=1):
         best = None
         for _ in range(runs):
-            # cold discipline: NO computed state crosses a timed-run
-            # boundary (r10 measurement-honesty fix) — neither the ANN
-            # trained-state memo nor the materialized co-purchase edge
-            # table (a persisted intermediate keyed on the input path;
-            # every timed run must rebuild it from the parquet inputs).
-            # r11: one exported entry point that also UNPERSISTS every
-            # leftover block-manager RDD (checkpointed indexes/kernel
-            # intermediates survive catalog.clearCache() and were
-            # accumulating across the 296-query sweep)
-            _sim.clear_trained_state(spark)
-            _gph.clear_materialized_edges(spark)
+            drop_session_state(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()

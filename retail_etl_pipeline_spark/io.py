@@ -8,21 +8,19 @@ Covers the reference's scan/sink surface, Spark-first:
   single-task write and its malformed ``.option("csv")``
   (``Data Transformation.py:181``); partition pruning comes free for readers.
 - S4  Bulk CSV -> managed table (``Data Ingestion.sql:7-15``).
-- S5  Filtered CSV export (``Data Load.sql:4-41``).
-- S7/S8  Catalog registration + SQL over registered tables
-  (``Data Transformation.py:105``, ``README.md:64-76``).
+- S5  Filtered CSV export (``Data Load.sql:4-41``), and its per-file
+  size cap as a byte-targeted sink (:func:`write_sized`).
+- C6  Run-scoped ``date=`` partition publish. Registering the published
+  output in the catalog (S7/S8) is ``pipeline.run_pipeline``'s
+  ``register_as``; the object-store config (S3) is
+  ``session.configure_object_store``.
 """
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from .schemas import FIXTURE_TABLES
 
 
 # --------------------------------------------------------------------------
@@ -41,67 +39,6 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """JSON-lines scan with explicit schema (no inference pass — same
-    policy as S1; schema-on-read without the extra scan)."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — columnar alternative sink/source; predicate pushdown and
-    column pruning apply as with parquet."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: str | list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        cols = [partition_by] if isinstance(partition_by, str) else partition_by
-        writer = writer.partitionBy(*cols)
-    writer.orc(path)
-
-
-def load_fixtures(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver-generated parquet fixtures (TESTDATA.md)."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in tables
-    }
-
-
-def register_tables(
-    spark: SparkSession, dfs: dict[str, DataFrame], replace: bool = True
-) -> None:
-    """S7: register DataFrames as temp views so DataFrame-API and
-    ``spark.sql`` queries share one catalog (``Data Transformation.py:105``)."""
-    for name, df in dfs.items():
-        if replace:
-            df.createOrReplaceTempView(name)
-        else:
-            df.createTempView(name)
-
-
-def register_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    dfs = load_fixtures(spark, sf_dir)
-    register_tables(spark, dfs)
-    return dfs
 
 
 # --------------------------------------------------------------------------
@@ -203,184 +140,6 @@ def write_sized(
     if persist_input:
         df.unpersist()
     return cap
-
-
-def write_with_bloom(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    expected_ndv: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet sink with per-column bloom filters for point-lookup skipping.
-
-    Complements the z-order layout (``functions/zorder.py``): min/max
-    stats prune RANGE predicates; bloom filters prune EQUALITY probes on
-    high-cardinality columns whose values are scattered across files
-    (id lookups on data sorted by something else). Readers (Spark's
-    parquet scan included) consult the filter per row group and skip
-    groups that definitely lack the key — at 100 TB that turns an
-    id-probe from a full scan into a handful of row groups, for ~1 byte
-    per distinct value of write-side cost.
-    """
-    writer = df.write.mode(mode)
-    for c in bloom_cols:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        writer = writer.option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
-        )
-    writer.parquet(path)
-
-
-def read_evolved(
-    spark: SparkSession, path: str, target_schema: T.StructType
-) -> DataFrame:
-    """Schema-evolution read: old files under a NEWER schema.
-
-    Columns added since a file was written come back NULL; the scan stays
-    a plain pruned parquet read. This is the scale-correct alternative to
-    ``mergeSchema=true``, which opens EVERY file footer up front (a
-    100 TB table has millions of footers) just to discover what this
-    call states declaratively. Type WIDENING is out of scope — Spark
-    fails the scan if a file's physical type conflicts with the target;
-    evolve types by rewrite, not by read.
-    """
-    return spark.read.schema(target_schema).parquet(path)
-
-
-def compact_partition(
-    spark: SparkSession,
-    path: str,
-    partition: str,
-    target_files: int,
-) -> int:
-    """Small-files compaction for ONE partition directory (e.g.
-    ``date=2024-01-01``): read, coalesce to ``target_files``, republish.
-    Returns the file count before compaction.
-
-    Streaming/incremental sinks accrete files per micro-batch; scans pay
-    per-file open cost and lose row-group-sized reads. Compacting one
-    partition at a time keeps the rewrite bounded; a full compaction is
-    a loop over partitions, trivially parallel across jobs. ``coalesce``
-    (not ``repartition``) avoids a shuffle — each output task
-    concatenates existing files.
-
-    Publish protocol (one writer per partition — different partitions
-    compact in parallel; readers of the table root never see staging
-    data): the compacted copy is written OUTSIDE the table root
-    (``<table>.__compact__/<partition>``, invisible to partition
-    discovery), then the live directory is swapped via two same-FS
-    renames (live -> trash, staged -> live) and the trash deleted. No
-    window exists where the partition is both live and duplicated. A
-    crash between the renames leaves the partition ABSENT but both
-    copies intact (staging + trash) — recoverable, never silent loss;
-    a leftover staging/trash dir also makes the interruption detectable
-    on the next run (this function refuses to start until it's cleared).
-    """
-    root = path.rstrip("/")
-    part_path = f"{root}/{partition}"
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    jpath = hpath(part_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    staged = hpath(f"{root}.__compact__/{partition}")
-    trash = hpath(f"{root}.__compact_trash__/{partition}")
-    if fs.exists(staged) or fs.exists(trash):
-        raise RuntimeError(
-            f"leftover compaction state for {partition} "
-            f"(a previous run crashed mid-swap): run "
-            f"recover_compaction() first"
-        )
-    before = len(
-        [
-            f
-            for f in fs.listStatus(jpath)
-            if f.getPath().getName().endswith(".parquet")
-        ]
-    )
-    df = spark.read.parquet(part_path)
-    df.coalesce(target_files).write.mode("overwrite").parquet(str(staged))
-    fs.mkdirs(trash.getParent())
-    if not fs.rename(jpath, trash):
-        raise RuntimeError(f"could not move live partition {part_path} aside")
-    if not fs.rename(staged, jpath):
-        # put the original back before failing
-        fs.rename(trash, jpath)
-        raise RuntimeError(f"could not publish compacted {part_path}")
-    fs.delete(trash, True)
-    # leave the (now empty for this partition) staging/trash parents in
-    # place: other partitions may be compacting in parallel under them
-    return before
-
-
-def recover_compaction(
-    spark: SparkSession, path: str, partition: str
-) -> str:
-    """Repair a partition after a :func:`compact_partition` crash.
-
-    Inspects the staging/trash state the crashed run left and restores a
-    consistent live partition. Returns what it did:
-
-    - ``"completed"``: live was missing, the compacted copy was staged →
-      publish it (the crash hit between the two renames, after the
-      staged write finished; the staged copy is complete by
-      construction) and drop the trash copy;
-    - ``"rolled_back"``: live missing, no usable staged copy → restore
-      the trash (pre-compaction) copy;
-    - ``"cleaned"``: live present (crash before the swap started) →
-      delete leftover staging;
-    - ``"noop"``: nothing to repair.
-    """
-    root = path.rstrip("/")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    live = hpath(f"{root}/{partition}")
-    staged = hpath(f"{root}.__compact__/{partition}")
-    trash = hpath(f"{root}.__compact_trash__/{partition}")
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(live):
-        changed = fs.delete(staged, True) | fs.delete(trash, True)
-        return "cleaned" if changed else "noop"
-    if fs.exists(staged):
-        if not fs.rename(staged, live):
-            raise RuntimeError(f"could not publish staged copy to {live}")
-        fs.delete(trash, True)
-        return "completed"
-    if fs.exists(trash):
-        if not fs.rename(trash, live):
-            raise RuntimeError(f"could not restore trash copy to {live}")
-        return "rolled_back"
-    return "noop"
-
-
-def prune_run_partitions(
-    spark: SparkSession, path: str, keep_latest: int
-) -> list[str]:
-    """Retention for the C6 ``date=`` layout: delete all but the newest
-    ``keep_latest`` run partitions. Returns the deleted partition names.
-
-    Lexicographic order IS chronological for ``date=YYYY-MM-DD``; the
-    listing is one filesystem call on the table root (partition count,
-    not file count)."""
-    if keep_latest < 1:
-        raise ValueError("keep_latest must be >= 1")
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # strict date=YYYY-MM-DD match: a looser startswith("date=") would
-    # count stray directories (e.g. crashed-job leftovers) as run
-    # partitions, letting them consume keep_latest slots and push a REAL
-    # partition over the deletion edge
-    parts = sorted(
-        f.getPath().getName()
-        for f in fs.listStatus(jpath)
-        if f.isDirectory()
-        and re.fullmatch(r"date=\d{4}-\d{2}-\d{2}", f.getPath().getName())
-    )
-    doomed = parts[:-keep_latest] if len(parts) > keep_latest else []
-    for name in doomed:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}"), True)
-    return doomed
 
 
 def csv_to_table(

@@ -35,44 +35,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# Trained-state memo (r9 VERDICT items 1b/5): every ANN training kernel
-# ends in a bounded driver-side collect of plain Python floats (seed
-# centroids, Lloyd cents, PQ/OPQ codebooks, the query vector) that is a
-# DETERMINISTIC function of (corpus, params) — the exact-integer updates
-# exist precisely so the result is engine- and run-stable. So training
-# artifacts memoize safely per process, keyed by the canonicalized
-# logical plan of the input relation (semanticHash — identical for every
-# re-read of the same path, different for any other source/projection)
-# plus the training params. Effect: within one bench/driver process the
-# PQ/IVF family trains ONCE per (corpus, params) instead of once per
-# query invocation, which is also exactly how a real index lifecycle
-# works (faiss train -> add -> search; see pq_index_for).
-# ---------------------------------------------------------------------------
-
-_TRAINED_CACHE: dict[tuple, object] = {}
-
-
-def _corpus_key(vecs: DataFrame) -> int | None:
-    """Canonical identity of the input relation, or None when the plan
-    hash is unavailable (callers then retrain unconditionally)."""
-    try:
-        return vecs._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - py4j surface change
-        return None
-
-
-def _memo_trained(kind: str, vecs: DataFrame, params: tuple, build):
-    """Memoize ``build()`` (a driver-side dict/list of plain floats)
-    under (kind, corpus plan hash, params)."""
-    ck = _corpus_key(vecs)
-    if ck is None:
-        return build()
-    key = (kind, ck, params)
-    if key not in _TRAINED_CACHE:
-        _TRAINED_CACHE[key] = build()
-    return _TRAINED_CACHE[key]
-
 #: number of random-hyperplane bits for the LSH bucket id
 LSH_PLANES = 4
 #: vec_ids whose embeddings serve as deterministic hyperplanes
@@ -669,20 +631,14 @@ def _seed_centroids(
     ``vec_id 1..n`` (n rows, a plan constant — the IVF seed centroids
     CENTROID_IDS by default, the first ``k`` ids when a caller sizes the
     cell count to its corpus (see :func:`semdedup_cell_count`), and the
-    2**bits sub-codebook seeds of a :class:`ProductQuantizer`). Memoized
-    per (corpus, n), so the 3-bit quantizer and the IVF cells share one
-    collect."""
-
-    def build() -> dict[int, list[float]]:
-        cent_rows = (
-            vecs.where(F.col("vec_id").between(1, n))
-            .select("vec_id", "v")
-            .collect()
-        )
-        return {r["vec_id"]: list(r["v"]) for r in cent_rows}
-
-    return _memo_trained("seed_centroids", vecs, (n,), build)
-
+    2**bits sub-codebook seeds of a :class:`ProductQuantizer`). A query
+    that needs the band twice collects it once and passes it on."""
+    cent_rows = (
+        vecs.where(F.col("vec_id").between(1, n))
+        .select("vec_id", "v")
+        .collect()
+    )
+    return {r["vec_id"]: list(r["v"]) for r in cent_rows}
 
 def _cell_expr(cents: dict[int, list[float]]) -> Column:
     """The max-cosine cell-assignment expression over ``F.col("v")``
@@ -854,9 +810,24 @@ def ann_ivf_topk_multiprobe(
     filter: the corpus-side plan stays a partition-prunable filter +
     one scan of the probed cells, no joins added."""
     vecs = _vectors(emb)
-    cells = _with_cells(vecs)
+    cents = _seed_centroids(vecs)
+    return _ivf_multiprobe(
+        vecs, _with_cells(vecs, cents), cents, query_id, k, nprobe
+    )
+
+
+def _ivf_multiprobe(
+    vecs: DataFrame,
+    cells: DataFrame,
+    cents: dict[int, list[float]],
+    query_id: int,
+    k: int,
+    nprobe: int,
+) -> DataFrame:
+    """Exact cosine top-k inside the ``nprobe`` cells of ``cells`` whose
+    ``cents`` are nearest the query vector (read from ``vecs``)."""
     qv_list = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv_list, _seed_centroids(vecs), nprobe)
+    probe_cells = _probe_cells(qv_list, cents, nprobe)
     qv = _dbl_arr_lit(qv_list)
     return (
         cells.where(
@@ -1062,7 +1033,7 @@ _NANO = 1_000_000_000
 
 def _lloyd_refined_cells(
     vecs: DataFrame, iters: int = 1
-) -> tuple[DataFrame, dict]:
+) -> tuple[DataFrame, dict[int, list[float]]]:
     """``iters`` Lloyd iterations over the seed assignment: returns the
     final re-assigned cells relation and the refined centroid dict.
 
@@ -1075,25 +1046,20 @@ def _lloyd_refined_cells(
     that lost every member keeps its previous centroid (possible only
     under duplicate seed vectors; the fallback keeps both engines
     aligned). The exact-integer mean (nano-unit components, truncating
-    div) makes every iteration engine-stable — see the section header.
-
-    The trained cents memoize per (corpus, iters) (``_memo_trained``):
-    within one process the Lloyd loop runs once per corpus/params and
-    every later call rebuilds only the assignment projection."""
+    div) makes every iteration engine-stable — see the section header."""
     cents = _lloyd_cents(vecs, iters)
     return _with_cells(vecs, cents=cents), cents
 
 
-def _lloyd_cents(vecs: DataFrame, iters: int) -> dict:
-    """The memoized Lloyd-refined centroid dict alone (the IVF-PQ index
-    needs the centroids, not the assignment relation)."""
-    return _memo_trained(
-        "lloyd_cents", vecs, (iters,), lambda: _lloyd_cents_impl(vecs, iters)
-    )
-
-
-def _lloyd_cents_impl(vecs: DataFrame, iters: int) -> dict:
-    cents = _seed_centroids(vecs)
+def _lloyd_cents(
+    vecs: DataFrame,
+    iters: int,
+    seeds: dict[int, list[float]] | None = None,
+) -> dict[int, list[float]]:
+    """The Lloyd-refined centroid dict alone (the IVF-PQ index needs the
+    centroids, not the assignment relation). ``seeds`` are the IVF seed
+    centroids when the caller already holds them."""
+    cents = _seed_centroids(vecs) if seeds is None else seeds
     nano = F.expr(
         f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
     )
@@ -1162,22 +1128,7 @@ def ann_ivf_topk_lloyd_multiprobe(
     the probe-cell list agrees bit-for-bit."""
     vecs = _vectors(emb)
     cells, cents = _lloyd_refined_cells(vecs, iters=iters)
-    qv_list = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv_list, cents, nprobe)
-    qv = _dbl_arr_lit(qv_list)
-    return (
-        cells.where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
-        )
-        .select(
-            "vec_id",
-            "label",
-            _round6(cosine(F.col("v"), qv)).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _ivf_multiprobe(vecs, cells, cents, query_id, k, nprobe)
 
 
 def _lloyd_cells_ctes(iters: int, include_e: bool = True) -> list[str]:
@@ -1334,18 +1285,12 @@ def _dbl_arr_lit(values: list[float]) -> Column:
 def _query_vec(vecs: DataFrame, query_id: int) -> list[float]:
     """Driver-side fetch of the one query row's raw vector (bounded
     single-row first(); the per-query artifact every ADC/rerank
-    variant folds into plan constants). Memoized per (corpus, id); an
-    id the corpus lacks raises ValueError naming it."""
-
-    def build() -> list[float]:
-        qrow = (
-            vecs.where(F.col("vec_id") == query_id).select("v").first()
-        )
-        if qrow is None:
-            raise ValueError(f"query vec_id {query_id} is not in the corpus")
-        return [float(x) for x in qrow["v"]]
-
-    return _memo_trained("query_vec", vecs, (query_id,), build)
+    variant folds into plan constants). An id the corpus lacks raises
+    ValueError naming it."""
+    qrow = vecs.where(F.col("vec_id") == query_id).select("v").first()
+    if qrow is None:
+        raise ValueError(f"query vec_id {query_id} is not in the corpus")
+    return [float(x) for x in qrow["v"]]
 
 
 # ---------------------------------------------------------------------------
@@ -1680,19 +1625,17 @@ class ProductQuantizer:
         rv = F.array(*[F.element_at(F.col("v"), p + 1) for p in perm])
         return vecs.select("vec_id", "label", rv.alias("v"))
 
-    def books(self, vecs: DataFrame) -> list[list[list[float]]]:
-        """books[s][j]: sub-centroid ``j`` of subspace ``s``. Memoized
-        per (corpus, m, bits, train_iters); the rotation is part of the
-        corpus key because ``vecs`` is the permuted relation."""
-        return _memo_trained(
-            "pq_books",
-            vecs,
-            (self.m, self.bits, self.train_iters),
-            lambda: self._train(vecs),
-        )
-
-    def _train(self, vecs: DataFrame) -> list[list[list[float]]]:
-        seeds = _seed_centroids(vecs, self.k)
+    def books(
+        self,
+        vecs: DataFrame,
+        seeds: dict[int, list[float]] | None = None,
+    ) -> list[list[list[float]]]:
+        """books[s][j]: sub-centroid ``j`` of subspace ``s``, trained on
+        ``vecs`` (the permuted relation when ``rotation="opq"``).
+        ``seeds`` is the seed band vec_id 1..2**bits when the caller
+        already holds it."""
+        if seeds is None:
+            seeds = _seed_centroids(vecs, self.k)
         if len(seeds) != self.k:
             # loud contract failure instead of a downstream KeyError: the
             # deterministic seeding needs every id in the seed band
@@ -1930,14 +1873,7 @@ def _opq_perm(vecs: DataFrame, m: int, d: int) -> list[int]:
     sums on the Spark side, HUGEINT on the oracle's, both overflow-free
     and bit-identical) and snake-dealt across the ``m`` subspaces: rank
     r lands in subspace (m-1 - r%m if (r//m) odd else r%m), slot r//m.
-    One bounded aggregate; the collect is exactly |dims| = 64 rows.
-    Memoized per (corpus, m, d)."""
-    return _memo_trained(
-        "opq_perm", vecs, (m, d), lambda: _opq_perm_impl(vecs, m, d)
-    )
-
-
-def _opq_perm_impl(vecs: DataFrame, m: int, d: int) -> list[int]:
+    One bounded aggregate; the collect is exactly |dims| = 64 rows."""
     nano = F.expr(
         f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
     )
@@ -2029,13 +1965,19 @@ class PqIndex:
 def pq_index(
     emb: DataFrame, pq: ProductQuantizer, iters: int | None = None
 ) -> PqIndex:
-    """TRAIN + ADD: train ``pq`` (memoized exact-decimal kernels), with
-    ``iters`` also Lloyd-refine the IVF cells, and assign + pack every
-    vector in one projection. The coded relation is a plan, not data:
-    :func:`pq_index_for` materializes it."""
+    """TRAIN + ADD: train ``pq`` (exact-decimal kernels), with ``iters``
+    also Lloyd-refine the IVF cells, and assign + pack every vector in
+    one projection. The codebook seed band vec_id 1..2**bits holds the
+    IVF seeds (CENTROID_IDS), so both trainings share one collect. The
+    coded relation is a plan, not data: :func:`pq_index_for`
+    materializes it."""
     vecs = pq.vectors(emb)
-    cents = None if iters is None else _lloyd_cents(vecs, iters)
-    books = pq.books(vecs)
+    band = _seed_centroids(vecs, pq.k)
+    books = pq.books(vecs, band)  # raises unless the band is complete
+    cents = None
+    if iters is not None:
+        seeds = {cid: band[cid] for cid in CENTROID_IDS}
+        cents = _lloyd_cents(vecs, iters, seeds)
     coded = pq.encode(vecs, books, cents)
     return PqIndex(pq=pq, vecs=vecs, books=books, coded=coded, cents=cents)
 
@@ -2103,14 +2045,14 @@ def pq_topk(
     shortlist: int | None = None,
 ) -> DataFrame:
     """One-shot PQ top-k: :func:`pq_search` over an index that is not
-    materialized (training inside the call, memoized per corpus)."""
+    materialized (training inside the call)."""
     return pq_search(pq_index(emb, pq, iters), query_id, k, nprobe, shortlist)
 
 
-#: built indexes per (session, corpus, params) — a checkpointed relation
-#: is session-bound, so the session id is part of the key (unlike the
-#: session-agnostic float dicts in _TRAINED_CACHE)
-_INDEX_CACHE: dict[tuple, PqIndex] = {}
+#: built indexes per (session, corpus, params), each with the RDD its
+#: localCheckpoint pinned; a checkpointed relation is session-bound, so
+#: the session id is part of the key
+_INDEX_CACHE: dict[tuple, tuple[PqIndex, object]] = {}
 
 
 def pq_index_for(
@@ -2120,53 +2062,38 @@ def pq_index_for(
     localCheckpoint (block-manager RDD blocks, which survive
     catalog.clearCache()), so no later search re-runs assignment or
     packing; in a persisted deployment follow with
-    :func:`write_pq_index`. Memoized per (session, corpus, params):
-    every search after the first runs the pure serving plan."""
-
-    def build() -> PqIndex:
-        index = pq_index(emb, pq, iters)
-        return replace(index, coded=index.coded.localCheckpoint(eager=True))
-
-    ck = _corpus_key(emb)
-    if ck is None:
-        return build()
+    :func:`write_pq_index`. Held per (session, corpus, params) until
+    :func:`clear_trained_state`: every search after the first runs the
+    pure serving plan. The corpus key is the semantic hash of the
+    input's analyzed plan, identical for every re-read of one path."""
     key = (
-        emb.sparkSession.sparkContext.applicationId, ck, pq.params, iters
+        emb.sparkSession.sparkContext.applicationId,
+        emb._jdf.queryExecution().analyzed().semanticHash(),
+        pq.params,
+        iters,
     )
     if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build()
-    return _INDEX_CACHE[key]
+        index = pq_index(emb, pq, iters)
+        coded = index.coded.localCheckpoint(eager=True)
+        pinned = coded._jdf.queryExecution().analyzed().rdd()
+        _INDEX_CACHE[key] = (replace(index, coded=coded), pinned)
+    return _INDEX_CACHE[key][0]
 
 
 def clear_trained_state(spark=None) -> None:
-    """Drop ALL memoized training/index state — the single cold-run entry
-    point for bench.py and tools/scaling_study.py (r11 ADVICE: each
-    harness previously reached into private module state with the cache
-    list duplicated, and dropping _INDEX_CACHE references without
-    unpersisting leaked the localCheckpoint'd index blocks into the block
-    manager for the rest of the session).
-
-    With a live ``spark`` session, additionally unpersists EVERY
-    persistent RDD (block-manager level, which ``catalog.clearCache()``
-    does not touch) — this also releases the eager localCheckpoints the
-    statistical/graph kernels pin inside a single query invocation.
-    Callers must hold no live references to previously checkpointed
-    DataFrames across this call (a checkpointed relation cannot be
-    recomputed once its blocks are dropped); between bench runs that is
-    the cold-run contract itself."""
-    _TRAINED_CACHE.clear()
-    _INDEX_CACHE.clear()
-    if spark is not None:
-        try:
-            # py4j maps java.util.Map to a dict-like JavaMap. BLOCKING
-            # unpersist: the async form returns before the block manager
-            # does the removal work, which then races with (and showed up
-            # inside) the next timed run
-            jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in list(jrdds.values()):
-                jrdd.unpersist(True)
-        except Exception:  # pragma: no cover - py4j surface change
-            pass
+    """Drop the indexes :func:`pq_index_for` holds for ``spark``'s
+    session (every session's when None) and unpersist the RDDs their
+    checkpoints pinned. No other cached or checkpointed relation is
+    touched. A dropped index's ``coded`` relation cannot be recomputed
+    once its blocks are gone, so callers must not hold it across this
+    call."""
+    app = None if spark is None else spark.sparkContext.applicationId
+    for key in [k for k in _INDEX_CACHE if app in (None, k[0])]:
+        _, pinned = _INDEX_CACHE.pop(key)
+        # blocking: the async form returns before the block manager
+        # removes the blocks, and the removal then races with whatever
+        # the caller runs next
+        pinned.unpersist(True)
 
 
 def write_pq_index(index: PqIndex, path: str) -> None:

@@ -68,13 +68,21 @@ def fanout(df: DataFrame, *cols: str) -> DataFrame:
     input unchanged — no exchange is added at cluster scale. When the
     downstream operator shuffles by the same key anyway (e.g. a window
     partitioned by doc_id), the repartition REPLACES that exchange rather
-    than adding one (same hash partitioning, same partition count)."""
-    sc = df.sparkSession.sparkContext
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive: planning-only path
+    than adding one (same hash partitioning, same partition count).
+
+    The decision is read from the plan and never runs the input: only a
+    file scan under projections and filters has its partition count
+    read (its ``.rdd`` holds no exchange, so reading it launches no
+    job). Any other input passes through unchanged — past an exchange
+    under AQE, ``.rdd`` would run every upstream shuffle stage at build
+    time, and the action would run them again."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.getClass().getSimpleName() in ("Project", "Filter"):
+        node = node.child()
+    if node.getClass().getSimpleName() != "LogicalRelation":
         return df
-    if n >= sc.defaultParallelism:
+    sc = df.sparkSession.sparkContext
+    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
     return df.repartition(*[F.col(c) for c in cols])
 

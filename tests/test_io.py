@@ -1,5 +1,6 @@
 """Source/sink tests (SURVEY.md §2.1): CSV scan with explicit schema,
-partitioned parquet write, filtered CSV export, catalog registration."""
+partitioned parquet write, run-partition publish, filtered and sized
+exports."""
 
 from __future__ import annotations
 
@@ -81,12 +82,6 @@ def test_filtered_csv_export(spark):
     assert len([f for f in os.listdir(out) if f.endswith(".csv")]) == 1
 
 
-def test_register_fixtures_sql_roundtrip(spark, sf_dir):
-    eio.register_fixtures(spark, sf_dir)
-    n = spark.sql("SELECT COUNT(*) AS n FROM lineitem").first()["n"]
-    assert n > 0
-
-
 def test_decimal_mode_schemas(spark):
     """The DDL-faithful DecimalType(38,2) schema variant (SURVEY.md §1.2)."""
     from retail_etl_pipeline_spark.schemas import inventory_schema, sales_schema
@@ -99,32 +94,6 @@ def test_decimal_mode_schemas(spark):
     assert inv["out_of_stock_flg"].dataType.simpleString() == "int"
     df = spark.createDataFrame([], schema=s)
     assert df.schema == s
-
-
-def test_json_roundtrip_explicit_schema(spark):
-    from pyspark.sql import types as T
-
-    out = os.path.join(TMP, "json")
-    df = spark.range(20).select(
-        F.col("id"), F.concat(F.lit("n"), F.col("id")).alias("name")
-    )
-    eio.write_json(df, out)
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
-    back = eio.read_json(spark, out, schema)
-    assert back.count() == 20
-    assert back.schema == schema
-
-
-def test_orc_roundtrip_partitioned(spark):
-    out = os.path.join(TMP, "orc")
-    df = spark.range(40).select(F.col("id"), (F.col("id") % 4).alias("part"))
-    eio.write_orc(df, out, partition_by="part")
-    assert any(d.startswith("part=") for d in os.listdir(out))
-    back = eio.read_orc(spark, out)
-    assert back.count() == 40
-    assert back.where(F.col("part") == 1).count() == 10
 
 
 def test_configure_object_store(spark):
@@ -240,153 +209,3 @@ def test_write_sized_empty_input_is_uncapped(spark):
     cap = eio.write_sized(df, out, target_file_bytes=1024)
     assert cap == 0
     assert spark.read.parquet(out).count() == 0
-
-
-def test_write_with_bloom_embeds_filters(spark):
-    df = spark.range(20_000).select(
-        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("payload")
-    )
-    plain = os.path.join(TMP, "bloom_off")
-    bloomed = os.path.join(TMP, "bloom_on")
-    df.coalesce(1).write.mode("overwrite").parquet(plain)
-    eio.write_with_bloom(
-        df.coalesce(1), bloomed, ["id"], expected_ndv=20_000
-    )
-
-    def pq_bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    # the bloom filter physically lands in the file (~12-24 KiB for 20k
-    # NDV) — size is the observable footprint; pyarrow doesn't expose
-    # bloom offsets directly
-    assert pq_bytes(bloomed) > pq_bytes(plain) + 4096
-    # and the data is unchanged
-    assert spark.read.parquet(bloomed).count() == 20_000
-
-
-def test_read_evolved_null_fills_new_columns(spark):
-    from pyspark.sql import types as T
-
-    out = os.path.join(TMP, "evolved")
-    spark.range(10).select(
-        F.col("id"), (F.col("id") * 2).alias("v")
-    ).write.mode("overwrite").parquet(out)
-    target = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("v", T.LongType()),
-            T.StructField("added_later", T.StringType()),
-        ]
-    )
-    back = eio.read_evolved(spark, out, target)
-    assert back.columns == ["id", "v", "added_later"]
-    rows = back.collect()
-    assert len(rows) == 10
-    assert all(r["added_later"] is None for r in rows)
-    assert {r["v"] for r in rows} == {2 * i for i in range(10)}
-
-
-def test_compact_partition_reduces_files_keeps_rows(spark):
-    out = os.path.join(TMP, "compact")
-    df = spark.range(1000).select(
-        F.col("id"), F.lit("2024-01-01").cast("date").alias("date")
-    )
-    df.repartition(8).write.partitionBy("date").mode("overwrite").parquet(out)
-    part = "date=2024-01-01"
-    n_before = eio.compact_partition(spark, out, part, target_files=2)
-    assert n_before == 8
-    files = [
-        f for f in os.listdir(os.path.join(out, part)) if f.endswith(".parquet")
-    ]
-    assert len(files) == 2
-    assert spark.read.parquet(out).count() == 1000
-
-
-def test_prune_run_partitions_keeps_newest(spark):
-    out = os.path.join(TMP, "retention")
-    for d in ("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"):
-        eio.write_run_partition(spark.range(5), out, d)
-    deleted = eio.prune_run_partitions(spark, out, keep_latest=2)
-    assert deleted == ["date=2024-01-01", "date=2024-01-02"]
-    left = sorted(
-        d for d in os.listdir(out) if d.startswith("date=")
-    )
-    assert left == ["date=2024-01-03", "date=2024-01-04"]
-    assert spark.read.parquet(out).count() == 10
-
-
-def test_compact_partition_refuses_leftover_state(spark):
-    out = os.path.join(TMP, "compact_leftover")
-    df = spark.range(100).select(
-        F.col("id"), F.lit("2024-02-02").cast("date").alias("date")
-    )
-    df.repartition(4).write.partitionBy("date").mode("overwrite").parquet(out)
-    # simulate a crashed previous run: staging dir left behind
-    staged = out.rstrip("/") + ".__compact__/date=2024-02-02"
-    os.makedirs(staged, exist_ok=True)
-    with pytest.raises(RuntimeError, match="leftover compaction state"):
-        eio.compact_partition(spark, out, "date=2024-02-02", target_files=1)
-    shutil.rmtree(out.rstrip("/") + ".__compact__")
-    # and after clearing it, compaction proceeds
-    assert eio.compact_partition(
-        spark, out, "date=2024-02-02", target_files=1
-    ) == 4
-    assert spark.read.parquet(out).count() == 100
-
-
-def test_prune_run_partitions_ignores_non_date_dirs(spark):
-    out = os.path.join(TMP, "retention_strict")
-    for d in ("2024-03-01", "2024-03-02", "2024-03-03"):
-        eio.write_run_partition(spark.range(3), out, d)
-    # a crashed-job leftover that lexically sorts between real partitions
-    os.makedirs(os.path.join(out, "date=2024-03-01__garbage"), exist_ok=True)
-    deleted = eio.prune_run_partitions(spark, out, keep_latest=2)
-    assert deleted == ["date=2024-03-01"]
-    left = sorted(d for d in os.listdir(out) if d.startswith("date="))
-    # the garbage dir is not a run partition: neither counted nor deleted
-    assert left == [
-        "date=2024-03-01__garbage",
-        "date=2024-03-02",
-        "date=2024-03-03",
-    ]
-
-
-def test_recover_compaction_all_states(spark):
-    import shutil as sh
-
-    out = os.path.join(TMP, "recover")
-    part = "date=2024-04-01"
-    df = spark.range(60).select(
-        F.col("id"), F.lit("2024-04-01").cast("date").alias("date")
-    )
-    df.repartition(3).write.partitionBy("date").mode("overwrite").parquet(out)
-    live = os.path.join(out, part)
-    staged_root = out.rstrip("/") + ".__compact__"
-    trash_root = out.rstrip("/") + ".__compact_trash__"
-
-    # nothing to do
-    assert eio.recover_compaction(spark, out, part) == "noop"
-
-    # crash before the swap: live intact, staging leftover -> cleaned
-    os.makedirs(os.path.join(staged_root, part), exist_ok=True)
-    assert eio.recover_compaction(spark, out, part) == "cleaned"
-    assert not os.path.exists(os.path.join(staged_root, part))
-
-    # crash between the renames: live gone, staged complete -> completed
-    os.makedirs(staged_root, exist_ok=True)
-    sh.copytree(live, os.path.join(staged_root, part))
-    os.makedirs(trash_root, exist_ok=True)
-    sh.move(live, os.path.join(trash_root, part))
-    assert eio.recover_compaction(spark, out, part) == "completed"
-    assert spark.read.parquet(out).count() == 60
-    assert not os.path.exists(os.path.join(trash_root, part))
-
-    # live gone, only the trash copy -> rolled back
-    os.makedirs(trash_root, exist_ok=True)
-    sh.move(live, os.path.join(trash_root, part))
-    assert eio.recover_compaction(spark, out, part) == "rolled_back"
-    assert spark.read.parquet(out).count() == 60

@@ -696,3 +696,28 @@ def test_query_index_first_sentence_skips_abbreviations():
     )
     assert first_sentence("Plain lead. Tail.") == "Plain lead."
     assert first_sentence(None) == "(no docstring)"
+
+
+def test_fanout_decides_from_the_plan(spark, sf_dir):
+    """fanout() over a grouped input launches no job — under AQE,
+    reading its ``.rdd`` would run the upstream shuffle stage at build
+    time — and passes it through; a one-file scan narrower than the
+    cluster, bare or under a filter and projection, is still
+    hash-repartitioned."""
+    from retail_etl_pipeline_spark.operators import fixtures_adapter as fx
+    from retail_etl_pipeline_spark.operators.text import fanout
+    from tests.test_pipeline import _drained_job_ids
+
+    sc = spark.sparkContext
+    docs = fx._read(spark, sf_dir, "documents")
+    grouped = docs.groupBy("source").agg(F.min("doc_id").alias("doc_id"))
+    sc.setJobGroup("fanout-grouped", "fanout over a grouped input")
+    try:
+        assert fanout(grouped, "doc_id") is grouped
+        assert _drained_job_ids(spark, "fanout-grouped") == set()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert docs.rdd.getNumPartitions() < sc.defaultParallelism
+    assert fanout(docs, "doc_id") is not docs
+    narrowed = docs.where(F.col("doc_id") > 0).select("doc_id", "text")
+    assert fanout(narrowed, "doc_id") is not narrowed

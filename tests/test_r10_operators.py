@@ -1,9 +1,9 @@
-"""Round-10 operator tests: the trained-state memo, the IVF-PQ16
-index lifecycle (train -> add -> search), SemDeDup cell-count
-parameterization, and the CCNet staged-mix composition — each checked
-against an independent reference (the one-shot twins, a brute-force
-recompute, or composing the constituent operators separately), never
-against its own oracle SQL."""
+"""Round-10 operator tests: the IVF-PQ16 index lifecycle (train -> add
+-> search) and the pins it owns, the similarity family's build-phase
+job counts, SemDeDup cell-count parameterization, and the CCNet
+staged-mix composition — each checked against an independent reference
+(the one-shot twins, a brute-force recompute, or composing the
+constituent operators separately), never against its own oracle SQL."""
 
 from __future__ import annotations
 
@@ -21,32 +21,6 @@ SF0001 = "/root/testdata/sf0.001"
 
 def _rows(df):
     return [tuple(r) for r in df.collect()]
-
-
-# ---------------------------------------------------------------------------
-# trained-state memo
-# ---------------------------------------------------------------------------
-
-
-def test_trained_memo_hits_and_is_keyed_by_corpus(spark):
-    """Two reads of the same path share one trained-books object; a
-    different corpus (or params) trains its own — the memo can never
-    serve one corpus's codebooks to another."""
-    emb1 = fx._read(spark, SF0001, "embeddings")
-    emb2 = fx._read(spark, SF0001, "embeddings")
-    v1, v2 = sim._vectors(emb1), sim._vectors(emb2)
-    b1 = sim.ProductQuantizer(16, 8, 1).books(v1)
-    b2 = sim.ProductQuantizer(16, 8, 1).books(v2)
-    assert b1 is b2, "same corpus+params must hit the memo"
-    # different params -> different trained object
-    b0 = sim.ProductQuantizer(16, 8).books(v1)
-    assert b0 is not b1
-    # a projection that changes the relation is a different corpus key
-    # (slice keeps all 256 PQ seed vectors so training stays defined)
-    half = v1.where(F.col("vec_id") < 400)
-    bh = sim.ProductQuantizer(16, 8, 1).books(half)
-    assert bh is not b1
-    assert bh != b1, "half-corpus training must differ from full"
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +48,7 @@ def test_index_serve_matches_one_shot_queries(spark):
 
 
 def test_index_build_is_cached_and_serve_plan_is_pure(spark):
-    """pq_index_for memoizes per (session, corpus, params); the ADC
+    """pq_index_for holds one index per (session, corpus, params); the ADC
     serve plan has no join and no global sort (the cells x codes
     join happened once at build), and the rerank plan's only join is
     the broadcast shortlist fetch."""
@@ -95,6 +69,54 @@ def test_index_build_is_cached_and_serve_plan_is_pure(spark):
     assert rplan.count("Join") == 1
     assert "Broadcast" in rplan
     assert "TakeOrderedAndProject" in rplan
+
+
+def test_clear_trained_state_releases_only_index_pins(spark):
+    """clear_trained_state drops what pq_index_for pinned and nothing
+    else: a caller's own eager localCheckpoint, taken before an ANN
+    query and an index build, still collects after the clear, while the
+    index's pinned RDD is gone from the block manager."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    mine = spark.range(50).selectExpr("id * 3 AS x")
+    mine = mine.localCheckpoint(eager=True)
+    emb = fx._read(spark, SF0001, "embeddings")
+    sim.ann_ivf_topk_multiprobe(emb).collect()
+    coded = _ivfpq16_index(emb).coded
+    pinned = coded._jdf.queryExecution().analyzed().rdd().id()
+    assert pinned in persistent()
+    sim.clear_trained_state(spark)
+    assert pinned not in persistent()
+    assert sorted(r["x"] for r in mine.collect()) == [3 * i for i in range(50)]
+
+
+#: each query's build-phase Spark jobs at sf0.001 with no index held:
+#: the schema-inference read plus one job per training collect (two
+#: for a collect behind a shuffle). Every trained artifact a query
+#: needs twice is collected once and passed on, so a count above its
+#: bound is a collect that ran twice.
+BUILD_JOBS = {
+    "ann_ivf_topk_multiprobe": 3,
+    "ann_ivfpq16_topk": 8,
+    "ann_opq16_adc_topk": 7,
+    "ann_pq8_adc_topk": 3,
+    "semdedup_keep": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
+def test_similarity_build_jobs_within_bound(spark, name):
+    from retail_etl_pipeline_spark.registry import QUERIES
+    from tests.test_pipeline import _drained_job_ids
+
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, "build-phase jobs")
+    try:
+        QUERIES[name](spark, SF0001)
+        n = len(_drained_job_ids(spark, group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert n <= BUILD_JOBS[name]
 
 
 def test_index_write_read_roundtrip_partition_pruning(spark, tmp_path):
@@ -412,7 +434,7 @@ def test_np_cell_assignment_equals_expression_form(spark):
     vecs = sim._vectors(emb)
     for cents in (
         sim._seed_centroids(vecs),
-        sim._lloyd_cents_impl(vecs, 1),
+        sim._lloyd_cents(vecs, 1),
     ):
         ref = {
             r["vec_id"]: r["cell"]

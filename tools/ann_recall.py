@@ -2,11 +2,12 @@
 ground truth (VERDICT r6 item 4: turn the recall-ORDERING test into a
 recall NUMBER).
 
-Runs each variant's real registered implementation per query id — the
-measured candidates are the engine's own bucket/cell probes, not a
-reimplementation — and reports mean recall@k plus the mean fraction of
-the corpus scanned (the candidate-set size the probe admits, i.e. the
-work saved vs brute force). Results are committed to SCALE.md.
+Trains each variant's cells or PQ index once, then runs the engine's
+own probe per query id — the measured candidates are the engine's
+bucket/cell probes and ADC scans, not a reimplementation — and reports
+mean recall@k plus the mean fraction of the corpus scanned (the
+candidate-set size the probe admits, i.e. the work saved vs brute
+force). Results are committed to SCALE.md.
 
 Usage: python tools/ann_recall.py [--sf-dir /root/testdata/sf0.1]
        [--k 10] [--queries 16]
@@ -50,20 +51,6 @@ def main(argv: list[str]) -> int:
     qids = [q for q in range(0, n, step) if q not in reserved][
         : args.queries
     ]
-
-    variants = {
-        "ann_lsh_topk": sim.ann_lsh_topk,
-        "ann_lsh_topk_multiprobe": sim.ann_lsh_topk_multiprobe,
-        "ann_ivf_topk": sim.ann_ivf_topk,
-        "ann_ivf_topk_multiprobe": sim.ann_ivf_topk_multiprobe,
-        "ann_ivf_topk_lloyd": lambda e, query_id, k: sim.ann_ivf_topk_lloyd(
-            e, query_id=query_id, k=k, iters=1
-        ),
-        "ann_ivf_topk_lloyd2": lambda e, query_id, k: sim.ann_ivf_topk_lloyd(
-            e, query_id=query_id, k=k, iters=2
-        ),
-        "ann_ivf_topk_lloyd_multiprobe": sim.ann_ivf_topk_lloyd_multiprobe,
-    }
 
     # candidate-set size per variant (probe selectivity): how many
     # corpus vectors the probe ACTUALLY admits per query — the query's
@@ -113,9 +100,10 @@ def main(argv: list[str]) -> int:
 
     vecs = sim._vectors(emb)
     seed_cents = sim._seed_centroids(vecs)
+    cells_s = sim._with_cells(vecs, seed_cents)
     cells_l1, cents_l1 = sim._lloyd_refined_cells(vecs, iters=1)
     cells_l2, cents_l2 = sim._lloyd_refined_cells(vecs, iters=2)
-    s0, q0 = _cell_info(sim._with_cells(vecs))
+    s0, q0 = _cell_info(cells_s)
     s1, q1 = _cell_info(cells_l1)
     s2, q2 = _cell_info(cells_l2)
     buckets = sim._with_buckets(vecs)
@@ -154,6 +142,24 @@ def main(argv: list[str]) -> int:
         ),
     }
 
+    # each variant's probe over the cells trained above, per query id
+    k, nprobe = args.k, sim.IVF_NPROBE
+    variants = {
+        "ann_lsh_topk": lambda q: sim.ann_lsh_topk(emb, q, k),
+        "ann_lsh_topk_multiprobe": lambda q: sim.ann_lsh_topk_multiprobe(
+            emb, q, k
+        ),
+        "ann_ivf_topk": lambda q: sim._ivf_probe(cells_s, q, k),
+        "ann_ivf_topk_multiprobe": lambda q: sim._ivf_multiprobe(
+            vecs, cells_s, seed_cents, q, k, nprobe
+        ),
+        "ann_ivf_topk_lloyd": lambda q: sim._ivf_probe(cells_l1, q, k),
+        "ann_ivf_topk_lloyd2": lambda q: sim._ivf_probe(cells_l2, q, k),
+        "ann_ivf_topk_lloyd_multiprobe": lambda q: sim._ivf_multiprobe(
+            vecs, cells_l1, cents_l1, q, k, nprobe
+        ),
+    }
+
     print(f"# recall@{args.k} over {len(qids)} queries, corpus n={n}")
     print(
         f"| variant | recall@{args.k} | mean candidates | corpus frac |"
@@ -162,9 +168,7 @@ def main(argv: list[str]) -> int:
     for name, fn in variants.items():
         hits = 0
         for q in qids:
-            got = {
-                r["vec_id"] for r in fn(emb, query_id=q, k=args.k).collect()
-            }
+            got = {r["vec_id"] for r in fn(q).collect()}
             hits += len(got & truth[q])
         recall = hits / (len(qids) * args.k)
         mean_c = mean_cands[name]
@@ -205,12 +209,14 @@ def main(argv: list[str]) -> int:
         },
     }
     for name, cfg in pq_variants.items():
+        index = sim.pq_index(emb, cfg["pq"], cfg.get("iters"))
         hits = 0
         for q in qids:
             got = {
                 r["vec_id"]
-                for r in sim.pq_topk(emb, query_id=q, k=args.k, **cfg)
-                .collect()
+                for r in sim.pq_search(
+                    index, q, args.k, shortlist=cfg.get("shortlist")
+                ).collect()
             }
             hits += len(got & l2_truth[q])
         recall = hits / (len(qids) * args.k)

@@ -7,9 +7,10 @@ For each query: builds the DataFrame, writes it to the noop sink (guide
 §1.4), and prints every Spark job the invocation ran (job id, duration,
 description/first stage name) from the live UI REST API — the empirical
 loop of guide §1.1 without leaving the terminal. Jobs are attributed to
-a query by submission time. Cold-training discipline: the ANN trained-
-state memo is cleared before every run so the breakdown shows the true
-end-to-end cost (same contract as bench.py).
+a query by submission time. Cold-run discipline: bench.py's
+``drop_session_state`` clears the session (held indexes, pinned
+intermediates, checkpoints) before every run, so the breakdown shows the
+true end-to-end cost.
 """
 
 from __future__ import annotations
@@ -34,9 +35,9 @@ def main() -> None:
     os.environ["SPARK_UI_ENABLED"] = "true"
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+    from bench import drop_session_state
     from retail_etl_pipeline_spark.registry import QUERIES
     from retail_etl_pipeline_spark.session import get_spark
-    from retail_etl_pipeline_spark.operators import similarity as sim
 
     spark = get_spark(
         app_name="profile",
@@ -76,7 +77,7 @@ def main() -> None:
     for name in args.names:
         fn = QUERIES[name]
         for run in range(args.runs):
-            sim.clear_trained_state(spark)
+            drop_session_state(spark)
             spark.sparkContext.setJobDescription(f"{name} run{run}")
             wall0 = time.time() * 1000
             t0 = time.perf_counter()
@@ -104,7 +105,7 @@ def main() -> None:
                 )
             spark.catalog.clearCache()
         if args.explain:
-            sim.clear_trained_state(spark)
+            drop_session_state(spark)
             df = QUERIES[name](spark, args.sf)
             print(df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode

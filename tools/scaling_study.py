@@ -9,7 +9,8 @@ far less while fixed overheads dominate) survives a scale-up; a
 super-linear ratio is a red flag the per-op analysis missed.
 
 Run from the repo root: ``python tools/scaling_study.py`` (isolated —
-no concurrent Spark, same discipline as bench.py).
+no concurrent Spark, same discipline as bench.py, whose
+``drop_session_state`` clears the session between timed runs).
 """
 
 from __future__ import annotations
@@ -149,6 +150,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     import json
 
+    from bench import drop_session_state
     from retail_etl_pipeline_spark.registry import QUERIES as REG
     from retail_etl_pipeline_spark.session import get_spark
 
@@ -172,15 +174,9 @@ def main() -> None:
         for sf_dir in SFS:
             best = None
             for _ in range(RUNS):
-                # cold discipline (r10, same as bench.py): no trained
-                # state or materialized intermediate crosses a timed
-                # run boundary
-                from retail_etl_pipeline_spark.operators import (
-                    graph as _gph,
-                    similarity as _sim,
-                )
-                _sim.clear_trained_state(spark)
-                _gph.clear_materialized_edges(spark)
+                # cold discipline (same as bench.py): no index, pinned
+                # intermediate or checkpoint crosses a timed-run boundary
+                drop_session_state(spark)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
