@@ -1,12 +1,22 @@
 """Similarity search over embedding columns (SURVEY.md §2.10).
 
-- brute-force cosine top-k (the exactness baseline)
-- LSH-bucketed ANN top-k (random-hyperplane signs; the scale path — the
-  candidate scan shrinks from N to N/2^bits per bucket)
-- embedding-cosine near-duplicate pairs (brute force + LSH-bucketed form)
-- IVF cells (seed or exact-decimal Lloyd centroids) and one product
-  quantizer (:class:`ProductQuantizer`) with flat, IVF, rerank and
-  materialized-index search over its codes
+- brute-force cosine top-k (the exactness baseline) and its batched form
+- embedding-cosine near-duplicate pairs: a bounded brute-force baseline
+  and the LSH-bucketed scale path
+- LSH ANN top-k over random-hyperplane sign buckets: one search whose
+  probe set is a tuple of bucket flips (``(0,)`` is single-probe,
+  LSH_MULTIPROBE_FLIPS adds every Hamming-1 bucket)
+- IVF ANN top-k over centroid cells: one search over the seed centroids
+  refined by ``iters`` exact-decimal Lloyd iterations (0 = the seeds),
+  probing the ``nprobe`` nearest cells
+- SemDeDup semantic dedup over the same cell assignment
+- one product quantizer (:class:`ProductQuantizer`) with flat, IVF,
+  rerank and materialized-index search over its codes
+
+The LSH near-dup pairs and SemDeDup share one within-key cosine pair
+join (:func:`_cosine_pairs`: key, threshold, flip set), and every
+cell-keyed oracle builds on one relational assignment chain
+(:func:`_lloyd_cells_ctes`).
 
 Per-row vector math against ONE query vector is JVM-side array
 higher-order functions (``zip_with`` products + ``aggregate``
@@ -20,9 +30,8 @@ engine-stable; ties break on vec_id.
 
 At 100 TB: brute-force top-k against ONE query is a single scan (fine);
 pairwise brute force is quadratic and exists only as the correctness
-baseline — the LSH-bucketed variants are the production path (equi-join on
-bucket id). The IVF variants replace the hyperplane bucket with a
-centroid cell id; the join shape is identical.
+baseline — the bucketed pair join is the production path (equi-join on
+bucket or cell id).
 """
 
 from __future__ import annotations
@@ -46,7 +55,7 @@ TOP_K = 10
 #: sample bound for the brute-force near-dup BASELINE: pairs are computed
 #: within the first NEARDUP_SAMPLE_DOCS vec_ids only, so the driver-side
 #: collect and the O(n^2) similarity matrix stay bounded at ANY corpus
-#: size. The unbounded production path is embedding_neardup_lsh.
+#: size. The unbounded production path is lsh_pairs.
 NEARDUP_SAMPLE_DOCS = 4096
 
 
@@ -113,6 +122,10 @@ _E_CTE = (
     f"  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v"
     " FROM embeddings\n)"
 )
+
+
+def _with(ctes: list[str]) -> str:
+    return ",\n".join(ctes)
 
 
 def _vectors(emb: DataFrame) -> DataFrame:
@@ -239,177 +252,12 @@ QUALIFY row_number() OVER (
 """
 
 
-def _with_buckets(vecs: DataFrame) -> DataFrame:
-    """Hyperplane bucket id as a single PROJECTION: the plane vectors are
-    tiny plan constants (collected once, inlined as array literals), so no
-    crossJoin/groupBy round-trip is needed — bucket assignment stays inside
-    one codegen stage and scales as a map over the corpus."""
-    plane_rows = (
-        vecs.where(F.col("vec_id").isin(*PLANE_IDS))
-        .select("vec_id", "v")
-        .collect()
-    )
-    planes = {r["vec_id"]: list(r["v"]) for r in plane_rows}
-    bucket = F.lit(0).cast("bigint")
-    for i, pid in enumerate(sorted(planes)):
-        pv = _dbl_arr_lit(planes[pid])
-        bit = F.when(dot(F.col("v"), pv) > 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + F.shiftleft(bit.cast("bigint"), i)
-    return vecs.withColumn("bucket", bucket)
-
-
-def ann_lsh_topk(emb: DataFrame, query_id: int = 0, k: int = TOP_K) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH bucket, then exact cosine
-    within the query's bucket only.
-
-    The LSH_PLANES hyperplanes are the embeddings of PLANE_IDS —
-    deterministic and data-independent of the query. bucket(v) =
-    sum_i [dot(v, p_i) > 0] << i. At scale this turns the scan into an
-    equi-lookup of one bucket (~N/2^bits vectors)."""
-    vecs = _vectors(emb)
-    with_bits = _with_buckets(vecs)
-    qb = with_bits.where(F.col("vec_id") == query_id).select(
-        F.col("bucket").alias("qbucket"), F.col("v").alias("qv")
-    )
-    return (
-        with_bits.where(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(qb))
-        .where(F.col("bucket") == F.col("qbucket"))
-        .select(
-            "vec_id",
-            "label",
-            _round6(cosine(F.col("v"), F.col("qv"))).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_lsh_topk_sql(query_id: int = 0, k: int = TOP_K) -> str:
-    plane_list = ", ".join(str(p) for p in PLANE_IDS)
-    return f"""
-WITH e AS (
-  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-planes AS (
-  SELECT vec_id AS plane_id, v AS pv FROM e WHERE vec_id IN ({plane_list})
-),
-buckets AS (
-  SELECT e.vec_id,
-         e.label,
-         ANY_VALUE(e.v) AS v,
-         CAST(SUM(
-           (CASE WHEN {_DOT_SQL.format(a='e.v', b='pv')} > 0 THEN 1 ELSE 0 END)
-           << (plane_id - {min(PLANE_IDS)})
-         ) AS BIGINT) AS bucket
-  FROM e, planes
-  GROUP BY e.vec_id, e.label
-),
-q AS (
-  SELECT bucket AS qbucket, v AS qv FROM buckets WHERE vec_id = {query_id}
-)
-SELECT vec_id,
-       label,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='v', b='qv'))} AS cosine
-FROM buckets, q
-WHERE vec_id != {query_id} AND bucket = qbucket
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
-
-
-def ann_lsh_topk_multiprobe(
-    emb: DataFrame, query_id: int = 0, k: int = TOP_K
-) -> DataFrame:
-    """Multi-probe LSH ANN: probe the query's bucket AND every bucket at
-    Hamming distance 1 (flip each plane bit once) — the standard recall
-    knob for sign-LSH. A vector whose true neighbors straddle one
-    hyperplane lands one bit away; probing the 1+LSH_PLANES neighbor
-    buckets recovers exactly those misses, so recall@k >= the
-    single-probe ``ann_lsh_topk`` by construction (candidate superset),
-    at (1+bits)/2^bits of the corpus scanned instead of 1/2^bits.
-
-    Plan shape: the probe set is derived from the ONE query row (explode
-    of a (1+bits)-element xor array — stays relational, no driver
-    round-trip) and broadcast into an equi-join on bucket id, so the
-    scale story of the single-probe form is unchanged: an equi-lookup
-    of a handful of buckets, never a corpus scan."""
-    vecs = _vectors(emb)
-    with_bits = _with_buckets(vecs)
-    qb = with_bits.where(F.col("vec_id") == query_id).select(
-        F.col("bucket").alias("qbucket"), F.col("v").alias("qv")
-    )
-    probes = qb.select(
-        F.explode(
-            F.array(
-                F.col("qbucket"),
-                *[
-                    F.col("qbucket").bitwiseXOR(F.lit(1 << i))
-                    for i in range(LSH_PLANES)
-                ],
-            )
-        ).alias("bucket"),
-        "qv",
-    )
-    return (
-        with_bits.where(F.col("vec_id") != query_id)
-        .join(F.broadcast(probes), "bucket")
-        .select(
-            "vec_id",
-            "label",
-            _round6(cosine(F.col("v"), F.col("qv"))).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_lsh_topk_multiprobe_sql(query_id: int = 0, k: int = TOP_K) -> str:
-    plane_list = ", ".join(str(p) for p in PLANE_IDS)
-    flip_list = ", ".join(
-        f"({1 << i})" for i in range(LSH_PLANES)
-    )
-    return f"""
-WITH e AS (
-  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-planes AS (
-  SELECT vec_id AS plane_id, v AS pv FROM e WHERE vec_id IN ({plane_list})
-),
-buckets AS (
-  SELECT e.vec_id,
-         e.label,
-         ANY_VALUE(e.v) AS v,
-         CAST(SUM(
-           (CASE WHEN {_DOT_SQL.format(a='e.v', b='pv')} > 0 THEN 1 ELSE 0 END)
-           << (plane_id - {min(PLANE_IDS)})
-         ) AS BIGINT) AS bucket
-  FROM e, planes
-  GROUP BY e.vec_id, e.label
-),
-q AS (
-  SELECT bucket AS qbucket, v AS qv FROM buckets WHERE vec_id = {query_id}
-),
-probes AS (
-  SELECT xor(qbucket, CAST(flip AS BIGINT)) AS bucket, qv
-  FROM q, (VALUES (0), {flip_list}) AS flips(flip)
-)
-SELECT b.vec_id,
-       b.label,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='b.v', b='qv'))} AS cosine
-FROM buckets b JOIN probes p ON b.bucket = p.bucket
-WHERE b.vec_id != {query_id}
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
-
-
 def embedding_neardup(
     emb: DataFrame, max_docs: int = NEARDUP_SAMPLE_DOCS
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a bounded,
     deterministic sample (the ``max_docs`` lowest vec_ids): the brute-force
-    correctness BASELINE for :func:`embedding_neardup_lsh`, which is the
+    correctness BASELINE for :func:`lsh_pairs`, which is the
     unbounded production path.
 
     The sample bound is what makes this registrable at scale: the
@@ -480,148 +328,233 @@ WHERE {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))}
 """
 
 
-def embedding_neardup_lsh(emb: DataFrame) -> DataFrame:
-    """Near-dup pairs, LSH-bucketed: only pairs sharing the hyperplane
-    bucket are scored — the equi-join on bucket id replaces the quadratic
-    cross join at scale (recall < 1 by design; the oracle encodes the same
-    bucketing, so the comparison is exact)."""
-    vecs = _vectors(emb)
-    with_norm = _with_norm(_with_buckets(vecs))
-    a = with_norm.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-        F.col("norm").alias("na"), "bucket",
+# ---------------------------------------------------------------------------
+# LSH: random-hyperplane sign buckets. One top-k search and one pair
+# join, each parameterized by the probed flip set: a probe of bucket b
+# with flip f reads bucket b xor f, so single-probe is the identity flip
+# alone and multi-probe adds the Hamming-1 flips.
+# ---------------------------------------------------------------------------
+
+#: bucket flips a multi-probe LSH search probes: the identity (the
+#: query's own bucket) and every Hamming-1 flip. Single-probe LSH is the
+#: identity alone, ``(0,)``.
+LSH_MULTIPROBE_FLIPS = (0, *(1 << i for i in range(LSH_PLANES)))
+
+
+def _with_buckets(vecs: DataFrame) -> DataFrame:
+    """Hyperplane bucket id as a single PROJECTION: the plane vectors are
+    tiny plan constants (collected once, inlined as array literals), so no
+    crossJoin/groupBy round-trip is needed — bucket assignment stays inside
+    one codegen stage and scales as a map over the corpus."""
+    plane_rows = (
+        vecs.where(F.col("vec_id").isin(*PLANE_IDS))
+        .select("vec_id", "v")
+        .collect()
     )
-    b = with_norm.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("nb"), F.col("bucket").alias("bucket_b"),
+    planes = {r["vec_id"]: list(r["v"]) for r in plane_rows}
+    bucket = F.lit(0).cast("bigint")
+    for i, pid in enumerate(sorted(planes)):
+        pv = _dbl_arr_lit(planes[pid])
+        bit = F.when(dot(F.col("v"), pv) > 0, F.lit(1)).otherwise(F.lit(0))
+        bucket = bucket + F.shiftleft(bit.cast("bigint"), i)
+    return vecs.withColumn("bucket", bucket)
+
+
+def _probe_keys(key: Column, flips: tuple[int, ...]) -> Column:
+    """``key`` xor each of ``flips``, one row per flip (an explode of a
+    bounded array, so the probe set stays relational). The identity-only
+    set is ``key`` itself, with no Generate in the plan."""
+    if flips == (0,):
+        return key
+    return F.explode(
+        F.array(*[key if f == 0 else key.bitwiseXOR(F.lit(f)) for f in flips])
     )
-    pairs = a.join(
-        b, (F.col("bucket") == F.col("bucket_b")) & (F.col("vec_a") < F.col("vec_b"))
+
+
+def lsh_topk(
+    emb: DataFrame,
+    query_id: int = 0,
+    k: int = TOP_K,
+    flips: tuple[int, ...] = (0,),
+) -> DataFrame:
+    """LSH ANN top-k: exact cosine rerank over the buckets ``bucket(q)
+    xor f`` for each ``f`` in ``flips``.
+
+    The LSH_PLANES hyperplanes are the embeddings of PLANE_IDS —
+    deterministic and data-independent of the query. bucket(v) =
+    sum_i [dot(v, p_i) > 0] << i. ``flips=(0,)`` probes the query's own
+    bucket (~N/2^bits vectors); LSH_MULTIPROBE_FLIPS adds every
+    Hamming-1 bucket, recovering neighbors that straddle ONE hyperplane
+    at (1+bits)/2^bits of the corpus scanned. A larger flip set probes a
+    candidate superset, so recall@k can only improve.
+
+    Plan shape: the probe set is derived from the ONE query row and
+    broadcast into an equi-join on bucket id — an equi-lookup of a
+    handful of buckets, never a corpus scan or a driver round-trip."""
+    with_bits = _with_buckets(_vectors(emb))
+    probes = with_bits.where(F.col("vec_id") == query_id).select(
+        _probe_keys(F.col("bucket"), flips).alias("bucket"),
+        F.col("v").alias("qv"),
     )
-    return pairs.select(
-        "vec_a",
-        "vec_b",
-        _round6(
-            _dot_udf(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        ).alias("cosine"),
-    ).where(F.col("cosine") >= COSINE_NEARDUP_THRESHOLD)
+    return (
+        with_bits.where(F.col("vec_id") != query_id)
+        .join(F.broadcast(probes), "bucket")
+        .select(
+            "vec_id",
+            "label",
+            _round6(cosine(F.col("v"), F.col("qv"))).alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(k)
+    )
 
 
-EMBEDDING_NEARDUP_LSH_SQL = f"""
-WITH e AS (
-  SELECT vec_id, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-planes AS (
-  SELECT vec_id AS plane_id, v AS pv FROM e
-  WHERE vec_id IN ({", ".join(str(p) for p in PLANE_IDS)})
-),
-buckets AS (
-  SELECT e.vec_id,
-         ANY_VALUE(e.v) AS v,
-         CAST(SUM(
-           (CASE WHEN {_DOT_SQL.format(a='e.v', b='pv')} > 0 THEN 1 ELSE 0 END)
-           << (plane_id - {min(PLANE_IDS)})
-         ) AS BIGINT) AS bucket
-  FROM e, planes
-  GROUP BY e.vec_id
-)
-SELECT a.vec_id AS vec_a,
-       b.vec_id AS vec_b,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))} AS cosine
-FROM buckets a
-JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))}
-      >= {COSINE_NEARDUP_THRESHOLD}
-"""
+def lsh_pairs(emb: DataFrame, flips: tuple[int, ...] = (0,)) -> DataFrame:
+    """Near-dup pairs, LSH-bucketed: only pairs whose buckets match up to
+    one of ``flips`` are scored — the equi-join on bucket id replaces the
+    quadratic cross join at scale (recall < 1 by design; the oracle
+    encodes the same bucketing, so the comparison is exact).
+    LSH_MULTIPROBE_FLIPS also scores every pair whose signatures differ
+    in ONE hyperplane bit. Each qualifying pair matches exactly once
+    (equal buckets only via the identity flip, Hamming-1 buckets only
+    via the single differing bit), so no dedup pass is needed beyond
+    the a < b canonicalization."""
+    return _cosine_pairs(
+        _with_buckets(_vectors(emb)), "bucket", COSINE_NEARDUP_THRESHOLD, flips
+    )
 
 
-def embedding_neardup_lsh_multiprobe(emb: DataFrame) -> DataFrame:
-    """Near-dup pairs with multi-probe recall: one side of the bucket
-    join is expanded into its own bucket PLUS every Hamming-1 flip, so
-    any pair whose signatures differ in at most ONE hyperplane bit is
-    scored — the pair-level analog of ann_lsh_topk_multiprobe (a true
-    near-duplicate loses recall exactly when it straddles one plane).
-
-    Each qualifying pair matches EXACTLY once (equal buckets match only
-    via the identity flip; Hamming-1 buckets only via the single
-    differing bit), so no dedup pass is needed beyond the a < b
-    canonicalization. Candidate volume is (1+bits)x the single-probe
-    join — still linear + collisions, never all-pairs."""
-    vecs = _vectors(emb)
-    with_norm = _with_norm(_with_buckets(vecs))
-    probe = with_norm.select(
+def _cosine_pairs(
+    rel: DataFrame, key: str, tau: float, flips: tuple[int, ...] = (0,)
+) -> DataFrame:
+    """(vec_a, vec_b, cosine) over ``rel`` (vec_id, v, ``key``): every
+    pair vec_a < vec_b with ``key(a) xor f == key(b)`` for some ``f`` in
+    ``flips`` and round6(cosine) >= ``tau``. The within-key self-join
+    shared by the LSH near-dup pairs and SemDeDup: candidate volume is
+    sum |key group|^2 (times |flips|), never all pairs. The pairwise dot
+    runs in the Arrow kernel over precomputed norms; rounding before the
+    threshold keeps the boundary pair set engine-identical."""
+    wn = _with_norm(rel)
+    a = wn.select(
         F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"),
         F.col("norm").alias("na"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                    for i in range(LSH_PLANES)
-                ],
-            )
-        ).alias("bucket"),
+        _probe_keys(F.col(key), flips).alias(key),
     )
-    b = with_norm.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("nb"), "bucket",
+    b = wn.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("v").alias("vb"),
+        F.col("norm").alias("nb"),
+        key,
     )
-    pairs = probe.join(
-        b, ["bucket"]
-    ).where(F.col("vec_a") < F.col("vec_b"))
-    return pairs.select(
-        "vec_a",
-        "vec_b",
-        _round6(
-            _dot_udf(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        ).alias("cosine"),
-    ).where(F.col("cosine") >= COSINE_NEARDUP_THRESHOLD)
+    return (
+        a.join(b, key)
+        .where(F.col("vec_a") < F.col("vec_b"))
+        .select(
+            "vec_a",
+            "vec_b",
+            _round6(
+                _dot_udf(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            ).alias("cosine"),
+        )
+        .where(F.col("cosine") >= tau)
+    )
 
 
-EMBEDDING_NEARDUP_LSH_MULTIPROBE_SQL = f"""
-WITH e AS (
-  SELECT vec_id, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-planes AS (
-  SELECT vec_id AS plane_id, v AS pv FROM e
-  WHERE vec_id IN ({", ".join(str(p) for p in PLANE_IDS)})
-),
-buckets AS (
-  SELECT e.vec_id,
-         ANY_VALUE(e.v) AS v,
-         CAST(SUM(
-           (CASE WHEN {_DOT_SQL.format(a='e.v', b='pv')} > 0 THEN 1 ELSE 0 END)
-           << (plane_id - {min(PLANE_IDS)})
-         ) AS BIGINT) AS bucket
-  FROM e, planes
-  GROUP BY e.vec_id
-),
-probes AS (
-  SELECT vec_id, v, xor(bucket, CAST(flip AS BIGINT)) AS bucket
-  FROM buckets,
-       (VALUES (0), {", ".join(f"({1 << i})" for i in range(LSH_PLANES))})
-       AS flips(flip)
-)
-SELECT a.vec_id AS vec_a,
-       b.vec_id AS vec_b,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))} AS cosine
-FROM probes a
-JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))}
-      >= {COSINE_NEARDUP_THRESHOLD}
+def _lsh_ctes(flips: tuple[int, ...]) -> list[str]:
+    """Oracle CTEs e -> planes -> buckets(vec_id, label, v, bucket) ->
+    flips(flip): the relational twin of :func:`_with_buckets` plus the
+    probed flip set."""
+    plane_list = ", ".join(str(p) for p in PLANE_IDS)
+    flip_list = ", ".join(f"({f})" for f in flips)
+    return [
+        _E_CTE,
+        "planes AS (\n"
+        f"  SELECT vec_id AS plane_id, v AS pv FROM e WHERE vec_id IN"
+        f" ({plane_list})\n)",
+        "buckets AS (\n"
+        "  SELECT e.vec_id,\n"
+        "         e.label,\n"
+        "         ANY_VALUE(e.v) AS v,\n"
+        "         CAST(SUM(\n"
+        f"           (CASE WHEN {_DOT_SQL.format(a='e.v', b='pv')} > 0"
+        " THEN 1 ELSE 0 END)\n"
+        f"           << (plane_id - {min(PLANE_IDS)})\n"
+        "         ) AS BIGINT) AS bucket\n"
+        "  FROM e, planes\n"
+        "  GROUP BY e.vec_id, e.label\n)",
+        f"flips AS (SELECT * FROM (VALUES {flip_list}) AS t(flip))",
+    ]
+
+
+def lsh_topk_sql(
+    query_id: int = 0, k: int = TOP_K, flips: tuple[int, ...] = (0,)
+) -> str:
+    ctes = _lsh_ctes(flips) + [
+        "q AS (SELECT bucket AS qbucket, v AS qv FROM buckets WHERE"
+        f" vec_id = {query_id})",
+        "probes AS (SELECT xor(qbucket, CAST(flip AS BIGINT)) AS bucket, qv"
+        " FROM q, flips)",
+    ]
+    return f"""
+WITH {_with(ctes)}
+SELECT b.vec_id,
+       b.label,
+       {_ROUND6_SQL.format(x=_COS_SQL.format(a='b.v', b='qv'))} AS cosine
+FROM buckets b JOIN probes p ON b.bucket = p.bucket
+WHERE b.vec_id != {query_id}
+ORDER BY cosine DESC, vec_id ASC
+LIMIT {k}
+"""
+
+
+def _pairs_sql(probes: str, base: str, key: str, tau: float) -> str:
+    """Oracle twin of :func:`_cosine_pairs`: (vec_a, vec_b, cosine) over
+    ``probes`` a JOIN ``base`` b on ``key``, a.vec_id < b.vec_id,
+    round6(cosine) >= ``tau``."""
+    cos = _ROUND6_SQL.format(x=_COS_SQL.format(a="a.v", b="b.v"))
+    return (
+        f"SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine\n"
+        f"FROM {probes} a\n"
+        f"JOIN {base} b ON a.{key} = b.{key} AND a.vec_id < b.vec_id\n"
+        f"WHERE {cos} >= {tau}"
+    )
+
+
+def lsh_pairs_sql(flips: tuple[int, ...] = (0,)) -> str:
+    ctes = _lsh_ctes(flips) + [
+        "probes AS (\n"
+        "  SELECT vec_id, v, xor(bucket, CAST(flip AS BIGINT)) AS bucket\n"
+        "  FROM buckets, flips\n)"
+    ]
+    return f"""
+WITH {_with(ctes)}
+{_pairs_sql("probes", "buckets", "bucket", COSINE_NEARDUP_THRESHOLD)}
 """
 
 
 # ---------------------------------------------------------------------------
-# IVF-style ANN: coarse quantization into centroid cells, exact rerank
-# within the probed cell (nprobe=1). Deterministic "centroids" are fixed
-# corpus vectors (CENTROID_IDS) — a seeded k-means would slot in the same
-# way, but fp-nondeterministic training would break the cross-engine oracle.
+# IVF ANN: coarse quantization into centroid cells, exact rerank within
+# the ``nprobe`` cells nearest the query. The seed centroids are fixed
+# corpus vectors (CENTROID_IDS); ``iters`` exact-decimal Lloyd iterations
+# refine them, and iters=0 is the seed quantizer itself. Float k-means
+# would break the cross-engine oracle, because per-dimension double sums
+# depend on partition/accumulation order. The Lloyd update sidesteps it:
+# components are pinned to integer NANO-units (decimal hop, HALF_UP — the
+# money discipline), per-cell sums are exact BIGINT, the mean is exact
+# truncating integer division (Spark `div` == DuckDB `//`, both
+# toward-zero, verified on negatives), and only the final /1e9 returns to
+# double — one exact-integer-by-constant IEEE division, bit-identical on
+# both engines. So the refined centroids, the assignment and the probe
+# are all engine-stable: real Lloyd, no float drift.
 # ---------------------------------------------------------------------------
 
-#: vec_ids whose embeddings act as the IVF coarse centroids
+#: vec_ids whose embeddings act as the IVF seed centroids
 CENTROID_IDS = tuple(range(1, 9))
+#: cells probed by the multi-probe IVF queries (top-m nearest centroids)
+IVF_NPROBE = 2
+#: nano-unit scale for exact centroid means
+_NANO = 1_000_000_000
 
 
 def _seed_centroids(
@@ -629,10 +562,10 @@ def _seed_centroids(
 ) -> dict[int, list[float]]:
     """The deterministic seed band: bounded collect of the corpus vectors
     ``vec_id 1..n`` (n rows, a plan constant — the IVF seed centroids
-    CENTROID_IDS by default, the first ``k`` ids when a caller sizes the
-    cell count to its corpus (see :func:`semdedup_cell_count`), and the
-    2**bits sub-codebook seeds of a :class:`ProductQuantizer`). A query
-    that needs the band twice collects it once and passes it on."""
+    CENTROID_IDS by default, the first ``k`` ids for a SemDeDup cell
+    count ``k``, and the 2**bits sub-codebook seeds of a
+    :class:`ProductQuantizer`). A query that needs the band twice
+    collects it once and passes it on."""
     cent_rows = (
         vecs.where(F.col("vec_id").between(1, n))
         .select("vec_id", "v")
@@ -663,17 +596,12 @@ def _cell_expr(cents: dict[int, list[float]]) -> Column:
     return F.element_at(cid_arr, idx.cast("int"))
 
 
-def _with_cells(
-    vecs: DataFrame, cents: dict[int, list[float]] | None = None
-) -> DataFrame:
+def _with_cells(vecs: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     """Assign each vector to its max-cosine centroid cell (ties -> lowest
     centroid id) as a single PROJECTION: centroids are tiny plan constants
     (collected once, inlined as array literals) and the argmax is an
     expression fold — no crossJoin, no window shuffle; at scale this is a
-    pure map over the corpus. ``cents`` overrides the seed centroids
-    (the Lloyd-refined assignment passes the updated means)."""
-    if cents is None:
-        cents = _seed_centroids(vecs)
+    pure map over the corpus."""
     # r10: assignment via the vectorized kernel (guide §4.2) — the
     # interpreted 8x(3-dot) argmax fold cost seconds per pass on the
     # single toy input split; values bit-identical (see the kernel
@@ -681,81 +609,6 @@ def _with_cells(
     return vecs.select(
         "vec_id", "label", "v", _cell_np_udf(cents).alias("cell")
     )
-
-
-def ann_ivf_topk(emb: DataFrame, query_id: int = 0, k: int = TOP_K) -> DataFrame:
-    """IVF ANN top-k: probe only the query's cell, exact cosine rerank
-    inside it. The candidate scan shrinks from N to ~N/len(CENTROID_IDS);
-    recall < 1 by construction and the oracle encodes the same cells."""
-    return _ivf_probe(_with_cells(_vectors(emb)), query_id, k)
-
-
-def _ivf_probe(cells: DataFrame, query_id: int, k: int) -> DataFrame:
-    """Exact cosine top-k inside the query's cell of ``cells`` (vec_id,
-    label, v, cell). The query row is resolved driver-side (1 row) and
-    inlined: a self-join of ``cells`` would add a join stage and trip
-    Spark's attribute dedup on the outer column captured by the
-    cell-assignment transform lambda (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
-    An id the corpus lacks raises ValueError naming it."""
-    qrow = cells.where(F.col("vec_id") == query_id).select("cell", "v").first()
-    if qrow is None:
-        raise ValueError(f"query vec_id {query_id} is not in the corpus")
-    qv = _dbl_arr_lit([float(x) for x in qrow["v"]])
-    return (
-        cells.where(
-            (F.col("vec_id") != query_id) & (F.col("cell") == F.lit(qrow["cell"]))
-        )
-        .select(
-            "vec_id",
-            "label",
-            _round6(cosine(F.col("v"), qv)).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_ivf_topk_sql(query_id: int = 0, k: int = TOP_K) -> str:
-    cid_list = ", ".join(str(c) for c in CENTROID_IDS)
-    return f"""
-WITH e AS (
-  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-cents AS (
-  SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id IN ({cid_list})
-),
-scored AS (
-  SELECT e.vec_id, e.label, e.v, cid,
-         {_DOT_SQL.format(a='e.v', b='cv')}
-           / sqrt({_DOT_SQL.format(a='e.v', b='e.v')})
-           / sqrt({_DOT_SQL.format(a='cv', b='cv')}) AS cs,
-         row_number() OVER (
-           PARTITION BY e.vec_id ORDER BY
-             {_DOT_SQL.format(a='e.v', b='cv')}
-               / sqrt({_DOT_SQL.format(a='e.v', b='e.v')})
-               / sqrt({_DOT_SQL.format(a='cv', b='cv')}) DESC,
-             cid ASC
-         ) AS rn
-  FROM e, cents
-),
-cells AS (
-  SELECT vec_id, label, v, cid AS cell FROM scored WHERE rn = 1
-),
-q AS (
-  SELECT cell AS qcell, v AS qv FROM cells WHERE vec_id = {query_id}
-)
-SELECT vec_id,
-       label,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='v', b='qv'))} AS cosine
-FROM cells, q
-WHERE vec_id != {query_id} AND cell = qcell
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
-
-
-#: cells probed by the multi-probe IVF variant (top-m nearest centroids)
-IVF_NPROBE = 2
 
 
 def _seq_dot(a: list, b: list) -> float:
@@ -775,8 +628,10 @@ def _probe_cells(
 ) -> list[int]:
     """The ``nprobe`` nearest centroid cell ids by cosine to the query
     (ties -> lowest cid) — the bounded driver-side probe-list step
-    shared by every IVF variant. Uses the sequential-fold dot so the
-    ranking agrees bit-for-bit with the oracle's relational form."""
+    shared by every IVF search. Uses the sequential-fold dot, so the
+    ranking agrees bit-for-bit with the oracle's relational form, and
+    its first entry is the cell the assignment kernel gives the query
+    (tests lock that over the whole corpus)."""
     import math
 
     qnorm = math.sqrt(_seq_dot(qv, qv))
@@ -790,93 +645,226 @@ def _probe_cells(
     return [cid for _, cid in ranked[:nprobe]]
 
 
-def ann_ivf_topk_multiprobe(
+def _lloyd_cents(
+    vecs: DataFrame,
+    iters: int,
+    seeds: dict[int, list[float]] | None = None,
+) -> dict[int, list[float]]:
+    """The centroid dict after ``iters`` Lloyd iterations from the seed
+    centroids (``seeds`` when the caller already holds them); iters=0
+    returns the seeds.
+
+    Each iteration's per-cell per-dimension mean is computed distributed
+    (posexplode -> groupBy(cell, dim) with exact BIGINT sums) and
+    collected as |cells| x dim bounded rows (8 x 64 — a plan constant,
+    the same class as the seed collect); the assignment feeding it is a
+    pure projection over inlined centroid literals, so the whole loop
+    is ``iters`` scan+aggregate passes, no iterative join state. A cell
+    that lost every member keeps its previous centroid (possible only
+    under duplicate seed vectors; the fallback keeps both engines
+    aligned)."""
+    cents = _seed_centroids(vecs) if seeds is None else seeds
+    nano = F.expr(
+        f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
+    )
+    for _ in range(iters):
+        assigned = _with_cells(vecs, cents=cents)
+        means = (
+            assigned.select(
+                "cell", F.posexplode(F.col("v")).alias("dim", "comp")
+            )
+            .select("cell", "dim", nano.alias("nv"))
+            .groupBy("cell", "dim")
+            .agg(
+                F.sum("nv").alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .select(
+                "cell", "dim", F.expr("s div n").cast("bigint").alias("m")
+            )
+            .collect()
+        )
+        by_cell: dict[int, dict[int, int]] = {}
+        for r in means:
+            by_cell.setdefault(r["cell"], {})[r["dim"]] = r["m"]
+        refined = {}
+        for cid, prev in cents.items():
+            got = by_cell.get(cid)
+            if got is None:
+                refined[cid] = list(prev)
+            else:
+                refined[cid] = [got[d] / _NANO for d in range(len(prev))]
+        cents = refined
+    return cents
+
+
+def ivf_topk(
     emb: DataFrame,
     query_id: int = 0,
     k: int = TOP_K,
-    nprobe: int = IVF_NPROBE,
+    iters: int = 0,
+    nprobe: int = 1,
 ) -> DataFrame:
-    """Multi-probe IVF ANN: rerank inside the ``nprobe`` centroid cells
-    NEAREST the query instead of only its own cell — the standard IVF
-    recall knob (a query near a cell boundary has true neighbors in the
-    runner-up cell; nprobe=2 recovers exactly those). Candidates are a
-    superset of ``ann_ivf_topk``'s, so recall@k can only improve, at
-    ~nprobe/len(CENTROID_IDS) of the corpus scanned.
+    """IVF ANN top-k: exact cosine rerank inside the ``nprobe`` cells
+    whose centroids are nearest the query, over the seed centroids
+    refined by ``iters`` Lloyd iterations.
+
+    - ``iters``: 0 is the seed quantizer (8 arbitrary members); refined
+      cells track the corpus distribution, so cell populations even out
+      and the probed fraction is closer to the ideal 1/|cells|.
+    - ``nprobe``: 1 probes the query's own cell (~N/|cells| scanned);
+      IVF_NPROBE=2 adds the runner-up cell, where a query near a cell
+      boundary has its true neighbors. Candidates are a superset of the
+      smaller nprobe's, so recall@k can only improve.
 
     The probe-cell list is resolved driver-side from bounded constants
-    (the 8 centroid vectors + the 1 query row — same footprint as the
-    single-probe ``first()``), ranked by the identical sequential-dot
+    (the centroids + the 1 query row), ranked by the sequential-dot
     cosine the relational cell assignment uses, then inlined as an IN
-    filter: the corpus-side plan stays a partition-prunable filter +
-    one scan of the probed cells, no joins added."""
+    filter: the corpus-side plan is a filter + one scan of the probed
+    cells, no joins. An id the corpus lacks raises ValueError naming
+    it."""
     vecs = _vectors(emb)
-    cents = _seed_centroids(vecs)
-    return _ivf_multiprobe(
-        vecs, _with_cells(vecs, cents), cents, query_id, k, nprobe
-    )
+    return _ivf_search(vecs, _lloyd_cents(vecs, iters), query_id, k, nprobe)
 
 
-def _ivf_multiprobe(
+def _ivf_search(
     vecs: DataFrame,
-    cells: DataFrame,
     cents: dict[int, list[float]],
     query_id: int,
     k: int,
     nprobe: int,
 ) -> DataFrame:
-    """Exact cosine top-k inside the ``nprobe`` cells of ``cells`` whose
-    ``cents`` are nearest the query vector (read from ``vecs``)."""
-    qv_list = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv_list, cents, nprobe)
-    qv = _dbl_arr_lit(qv_list)
+    """The search step of :func:`ivf_topk` over trained ``cents``, for a
+    caller that probes many query ids against one training."""
+    qv = _query_vec(vecs, query_id)
+    probe = _probe_cells(qv, cents, nprobe)
     return (
-        cells.where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
-        )
+        _with_cells(vecs, cents)
+        .where((F.col("vec_id") != query_id) & F.col("cell").isin(*probe))
         .select(
             "vec_id",
             "label",
-            _round6(cosine(F.col("v"), qv)).alias("cosine"),
+            _round6(cosine(F.col("v"), _dbl_arr_lit(qv))).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def ann_ivf_topk_multiprobe_sql(
-    query_id: int = 0, k: int = TOP_K, nprobe: int = IVF_NPROBE
+def _lloyd_cells_ctes(
+    iters: int, include_e: bool = True, ids: tuple[int, ...] = CENTROID_IDS
+) -> list[str]:
+    """The shared CTE chain e -> cents0 -> (scored/cells/comps/means/
+    cents)+ -> scored_fin -> cells_fin(vec_id, label, v, cell): the
+    relational assignment every cell-keyed oracle builds on (IVF,
+    IVF-PQ, SemDeDup), seeded by the vectors ``ids`` and refined by
+    ``iters`` Lloyd iterations, each (score vs current centroids ->
+    cells -> nano-unit component explode -> exact means -> next
+    centroids), exactly the Python loop. ``include_e=False`` leaves
+    ``e`` to the caller (the IVF-PQ oracle takes it from its
+    quantizer)."""
+    cid_list = ", ".join(str(c) for c in ids)
+
+    def cs(cent_col: str) -> str:
+        return (
+            f"{_DOT_SQL.format(a='e.v', b=cent_col)}"
+            f" / sqrt({_DOT_SQL.format(a='e.v', b='e.v')})"
+            f" / sqrt({_DOT_SQL.format(a=cent_col, b=cent_col)})"
+        )
+
+    ctes = [
+        *([_E_CTE] if include_e else []),
+        "cents0 AS (\n"
+        f"  SELECT vec_id AS cid, v AS cv0 FROM e WHERE vec_id IN"
+        f" ({cid_list})\n)",
+    ]
+    for i in range(iters):
+        cv, ncv = f"cv{i}", f"cv{i + 1}"
+        ctes.append(
+            f"scored{i} AS (\n"
+            f"  SELECT e.vec_id, e.v, cid,\n"
+            f"         row_number() OVER (\n"
+            f"           PARTITION BY e.vec_id ORDER BY {cs(cv)} DESC,"
+            f" cid ASC\n"
+            f"         ) AS rn\n"
+            f"  FROM e, cents{i}\n)"
+        )
+        ctes.append(
+            f"cells{i} AS (SELECT vec_id, v, cid AS cell FROM scored{i}"
+            " WHERE rn = 1)"
+        )
+        ctes.append(
+            f"comps{i} AS (\n"
+            "  -- parallel unnests in one SELECT zip positionally (DuckDB"
+            " 1.0 has no\n"
+            "  -- WITH ORDINALITY): dim i pairs with component i\n"
+            "  SELECT cell,\n"
+            "         unnest(range(len(v))) AS dim,\n"
+            f"         CAST(round(CAST(unnest(v) AS DECIMAL(30,15)) *"
+            f" {_NANO}, 0)\n"
+            f"              AS BIGINT) AS nv\n"
+            f"  FROM cells{i}\n)"
+        )
+        ctes.append(
+            f"means{i} AS (\n"
+            "  SELECT cell, dim,\n"
+            "         CAST(CAST(SUM(CAST(nv AS HUGEINT)) AS HUGEINT)\n"
+            "              // COUNT(*) AS BIGINT) AS m\n"
+            f"  FROM comps{i} GROUP BY 1, 2\n)"
+        )
+        ctes.append(
+            f"cents{i + 1} AS (\n"
+            f"  SELECT cents{i}.cid,\n"
+            f"         COALESCE(mm.rv, cents{i}.{cv}) AS {ncv}\n"
+            f"  FROM cents{i}\n"
+            "  LEFT JOIN (\n"
+            "    SELECT cell,\n"
+            f"           array_agg(CAST(m AS DOUBLE) / {_NANO} ORDER BY"
+            " dim) AS rv\n"
+            f"    FROM means{i} GROUP BY cell\n"
+            f"  ) mm ON mm.cell = cents{i}.cid\n)"
+        )
+    fin = f"cv{iters}"
+    ctes.append(
+        "scored_fin AS (\n"
+        "  SELECT e.vec_id, e.label, e.v, cid,\n"
+        "         row_number() OVER (\n"
+        f"           PARTITION BY e.vec_id ORDER BY {cs(fin)} DESC,"
+        " cid ASC\n"
+        "         ) AS rn\n"
+        f"  FROM e, cents{iters}\n)"
+    )
+    ctes.append(
+        "cells_fin AS (SELECT vec_id, label, v, cid AS cell FROM"
+        " scored_fin WHERE rn = 1)"
+    )
+    return ctes
+
+
+def _qcells_cte(query_id: int, nprobe: int) -> str:
+    """The query's ``nprobe`` nearest cells, straight from the final
+    assignment ranking (rn <= nprobe; rn = 1 is the query's own cell)."""
+    return (
+        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
+        f" vec_id = {query_id} AND rn <= {nprobe})"
+    )
+
+
+def ivf_topk_sql(
+    query_id: int = 0, k: int = TOP_K, iters: int = 0, nprobe: int = 1
 ) -> str:
-    cid_list = ", ".join(str(c) for c in CENTROID_IDS)
+    """Oracle twin of :func:`ivf_topk`: the lloyd-cells chain, the
+    query's probe cells, exact cosine rerank."""
+    ctes = _lloyd_cells_ctes(iters) + [
+        _qcells_cte(query_id, nprobe),
+        f"q AS (SELECT v AS qv FROM e WHERE vec_id = {query_id})",
+    ]
     return f"""
-WITH e AS (
-  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-cents AS (
-  SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id IN ({cid_list})
-),
-scored AS (
-  SELECT e.vec_id, e.label, e.v, cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id ORDER BY
-             {_DOT_SQL.format(a='e.v', b='cv')}
-               / sqrt({_DOT_SQL.format(a='e.v', b='e.v')})
-               / sqrt({_DOT_SQL.format(a='cv', b='cv')}) DESC,
-             cid ASC
-         ) AS rn
-  FROM e, cents
-),
-cells AS (
-  SELECT vec_id, label, v, cid AS cell FROM scored WHERE rn = 1
-),
-qcells AS (
-  SELECT cid AS cell FROM scored WHERE vec_id = {query_id} AND rn <= {nprobe}
-),
-q AS (SELECT v AS qv FROM e WHERE vec_id = {query_id})
+WITH {_with(ctes)}
 SELECT c.vec_id,
        c.label,
        {_ROUND6_SQL.format(x=_COS_SQL.format(a='c.v', b='qv'))} AS cosine
-FROM cells c JOIN qcells USING (cell), q
+FROM cells_fin c JOIN qcells USING (cell), q
 WHERE c.vec_id != {query_id}
 ORDER BY cosine DESC, vec_id ASC
 LIMIT {k}
@@ -1010,255 +998,6 @@ SELECT vec_id,
               ELSE CAST(floor((x - mn) / ((mx - mn) / 255.0) + 0.5)
                         AS BIGINT) END)) AS BIGINT) AS code_sum
 FROM mm
-"""
-
-
-# ---------------------------------------------------------------------------
-# IVF with one exact-decimal Lloyd refinement: the honest k-means upgrade.
-# The module-head caveat ("fp-nondeterministic training would break the
-# oracle") is about FLOAT means — per-dimension double sums depend on
-# partition/accumulation order. The refinement below sidesteps it entirely:
-# components are pinned to integer NANO-units (decimal hop, HALF_UP — the
-# money discipline), per-cell sums are exact BIGINT, the mean is exact
-# truncating integer division (Spark `div` == DuckDB `//`, both
-# toward-zero, verified on negatives), and only the final /1e9 returns to
-# double — one exact-integer-by-constant IEEE division, bit-identical on
-# both engines. So the refined centroids, the re-assignment, and the probe
-# are all engine-stable: real Lloyd, no float drift.
-# ---------------------------------------------------------------------------
-
-#: nano-unit scale for exact centroid means
-_NANO = 1_000_000_000
-
-
-def _lloyd_refined_cells(
-    vecs: DataFrame, iters: int = 1
-) -> tuple[DataFrame, dict[int, list[float]]]:
-    """``iters`` Lloyd iterations over the seed assignment: returns the
-    final re-assigned cells relation and the refined centroid dict.
-
-    Each iteration's per-cell per-dimension mean is computed distributed
-    (posexplode -> groupBy(cell, dim) with exact BIGINT sums) and
-    collected as |cells| x dim bounded rows (8 x 64 — a plan constant,
-    the same class as the seed collect); the assignment feeding it is a
-    pure projection over inlined centroid literals, so the whole loop
-    is ``iters`` scan+aggregate passes, no iterative join state. A cell
-    that lost every member keeps its previous centroid (possible only
-    under duplicate seed vectors; the fallback keeps both engines
-    aligned). The exact-integer mean (nano-unit components, truncating
-    div) makes every iteration engine-stable — see the section header."""
-    cents = _lloyd_cents(vecs, iters)
-    return _with_cells(vecs, cents=cents), cents
-
-
-def _lloyd_cents(
-    vecs: DataFrame,
-    iters: int,
-    seeds: dict[int, list[float]] | None = None,
-) -> dict[int, list[float]]:
-    """The Lloyd-refined centroid dict alone (the IVF-PQ index needs the
-    centroids, not the assignment relation). ``seeds`` are the IVF seed
-    centroids when the caller already holds them."""
-    cents = _seed_centroids(vecs) if seeds is None else seeds
-    nano = F.expr(
-        f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
-    )
-    for _ in range(iters):
-        assigned = _with_cells(vecs, cents=cents)
-        means = (
-            assigned.select(
-                "cell", F.posexplode(F.col("v")).alias("dim", "comp")
-            )
-            .select("cell", "dim", nano.alias("nv"))
-            .groupBy("cell", "dim")
-            .agg(
-                F.sum("nv").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cell", "dim", F.expr("s div n").cast("bigint").alias("m")
-            )
-            .collect()
-        )
-        by_cell: dict[int, dict[int, int]] = {}
-        for r in means:
-            by_cell.setdefault(r["cell"], {})[r["dim"]] = r["m"]
-        refined = {}
-        for cid, prev in cents.items():
-            got = by_cell.get(cid)
-            if got is None:
-                refined[cid] = list(prev)
-            else:
-                refined[cid] = [got[d] / _NANO for d in range(len(prev))]
-        cents = refined
-    return cents
-
-
-def ann_ivf_topk_lloyd(
-    emb: DataFrame, query_id: int = 0, k: int = TOP_K, iters: int = 1
-) -> DataFrame:
-    """IVF ANN top-k over Lloyd-REFINED centroids (``iters``
-    exact-decimal k-means iterations from the seed assignment), probing
-    the query's refined cell. Same probe/rerank machinery as
-    :func:`ann_ivf_topk`; only the quantizer improved — refined cells
-    track the corpus distribution instead of 8 arbitrary members, so
-    cell populations even out and the probed fraction is closer to the
-    ideal 1/|cells|."""
-    cells, _ = _lloyd_refined_cells(_vectors(emb), iters=iters)
-    return _ivf_probe(cells, query_id, k)
-
-
-def ann_ivf_topk_lloyd_multiprobe(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Multi-probe IVF over Lloyd-refined centroids: the two quantizer
-    upgrades composed — refined cells track the corpus distribution,
-    nprobe=2 recovers boundary queries' runner-up-cell neighbors.
-    Candidates are a superset of ``ann_ivf_topk_lloyd``'s, so recall@k
-    can only improve, at ~nprobe/|cells| of the corpus scanned.
-
-    The probe ranking runs driver-side over the refined centroid dict
-    with the same strict sequential dot (:func:`_seq_dot`) the SQL
-    twin's relational ranking evaluates — the refined components are
-    exact nano-unit quotients, identical doubles on both engines, so
-    the probe-cell list agrees bit-for-bit."""
-    vecs = _vectors(emb)
-    cells, cents = _lloyd_refined_cells(vecs, iters=iters)
-    return _ivf_multiprobe(vecs, cells, cents, query_id, k, nprobe)
-
-
-def _lloyd_cells_ctes(iters: int, include_e: bool = True) -> list[str]:
-    """The shared CTE chain e -> cents0 -> (scored/cells/comps/means/
-    cents)+ -> scored_fin -> cells_fin: the relational Lloyd assignment
-    every lloyd-flavored oracle builds on (single/multi-probe rerank,
-    IVF-PQ). ``include_e=False`` leaves ``e`` to the caller (the IVF-PQ
-    oracle takes it from its quantizer)."""
-    cid_list = ", ".join(str(c) for c in CENTROID_IDS)
-
-    def cs(cent_col: str) -> str:
-        return (
-            f"{_DOT_SQL.format(a='e.v', b=cent_col)}"
-            f" / sqrt({_DOT_SQL.format(a='e.v', b='e.v')})"
-            f" / sqrt({_DOT_SQL.format(a=cent_col, b=cent_col)})"
-        )
-
-    ctes = [
-        *([_E_CTE] if include_e else []),
-        "cents0 AS (\n"
-        f"  SELECT vec_id AS cid, v AS cv0 FROM e WHERE vec_id IN"
-        f" ({cid_list})\n)",
-    ]
-    for i in range(iters):
-        cv, ncv = f"cv{i}", f"cv{i + 1}"
-        ctes.append(
-            f"scored{i} AS (\n"
-            f"  SELECT e.vec_id, e.v, cid,\n"
-            f"         row_number() OVER (\n"
-            f"           PARTITION BY e.vec_id ORDER BY {cs(cv)} DESC,"
-            f" cid ASC\n"
-            f"         ) AS rn\n"
-            f"  FROM e, cents{i}\n)"
-        )
-        ctes.append(
-            f"cells{i} AS (SELECT vec_id, v, cid AS cell FROM scored{i}"
-            " WHERE rn = 1)"
-        )
-        ctes.append(
-            f"comps{i} AS (\n"
-            "  -- parallel unnests in one SELECT zip positionally (DuckDB"
-            " 1.0 has no\n"
-            "  -- WITH ORDINALITY): dim i pairs with component i\n"
-            "  SELECT cell,\n"
-            "         unnest(range(len(v))) AS dim,\n"
-            f"         CAST(round(CAST(unnest(v) AS DECIMAL(30,15)) *"
-            f" {_NANO}, 0)\n"
-            f"              AS BIGINT) AS nv\n"
-            f"  FROM cells{i}\n)"
-        )
-        ctes.append(
-            f"means{i} AS (\n"
-            "  SELECT cell, dim,\n"
-            "         CAST(CAST(SUM(CAST(nv AS HUGEINT)) AS HUGEINT)\n"
-            "              // COUNT(*) AS BIGINT) AS m\n"
-            f"  FROM comps{i} GROUP BY 1, 2\n)"
-        )
-        ctes.append(
-            f"cents{i + 1} AS (\n"
-            f"  SELECT cents{i}.cid,\n"
-            f"         COALESCE(mm.rv, cents{i}.{cv}) AS {ncv}\n"
-            f"  FROM cents{i}\n"
-            "  LEFT JOIN (\n"
-            "    SELECT cell,\n"
-            f"           array_agg(CAST(m AS DOUBLE) / {_NANO} ORDER BY"
-            " dim) AS rv\n"
-            f"    FROM means{i} GROUP BY cell\n"
-            f"  ) mm ON mm.cell = cents{i}.cid\n)"
-        )
-    fin = f"cv{iters}"
-    ctes.append(
-        "scored_fin AS (\n"
-        "  SELECT e.vec_id, e.label, e.v, cid,\n"
-        "         row_number() OVER (\n"
-        f"           PARTITION BY e.vec_id ORDER BY {cs(fin)} DESC,"
-        " cid ASC\n"
-        "         ) AS rn\n"
-        f"  FROM e, cents{iters}\n)"
-    )
-    ctes.append(
-        "cells_fin AS (SELECT vec_id, label, v, cid AS cell FROM"
-        " scored_fin WHERE rn = 1)"
-    )
-    return ctes
-
-
-def ann_ivf_topk_lloyd_sql(
-    query_id: int = 0, k: int = TOP_K, iters: int = 1, nprobe: int = 1
-) -> str:
-    """Oracle twin: the SAME seed assignment, exact nano-unit means
-    (HUGEINT sums, `//` toward-zero division — matches Spark `div`),
-    refined re-assignment per iteration, probe, rerank. The CTE chain
-    unrolls ``iters`` times — each iteration is (score vs current
-    centroids -> cells -> nano-unit component explode -> exact means ->
-    next centroids), exactly the Python loop."""
-    ctes = _lloyd_cells_ctes(iters)
-    if nprobe <= 1:
-        ctes.append(
-            "q AS (SELECT cell AS qcell, v AS qv FROM cells_fin WHERE"
-            f" vec_id = {query_id})"
-        )
-        body = ",\n".join(ctes)
-        return f"""
-WITH {body}
-SELECT vec_id,
-       label,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='v', b='qv'))} AS cosine
-FROM cells_fin, q
-WHERE vec_id != {query_id} AND cell = qcell
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
-    # multi-probe tail: the query's nprobe nearest refined cells come
-    # straight from the final assignment ranking (rn <= nprobe), the
-    # same relational form as ann_ivf_topk_multiprobe_sql
-    ctes.append(
-        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-        f" vec_id = {query_id} AND rn <= {nprobe})"
-    )
-    ctes.append(f"q AS (SELECT v AS qv FROM e WHERE vec_id = {query_id})")
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body}
-SELECT c.vec_id,
-       c.label,
-       {_ROUND6_SQL.format(x=_COS_SQL.format(a='c.v', b='qv'))} AS cosine
-FROM cells_fin c JOIN qcells USING (cell), q
-WHERE c.vec_id != {query_id}
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
 """
 
 
@@ -1442,7 +1181,7 @@ def _cell_np_udf(cents: dict[int, list[float]]) -> Column:
 # Rules every configuration shares:
 # 1. Seeds are the corpus vectors vec_id 1..2**bits (for 3 bits exactly
 #    the IVF CENTROID_IDS); Lloyd training is the exact nano-unit
-#    integer mean of the IVF lloyd family, run per subspace, so trained
+#    integer mean of the IVF Lloyd update, run per subspace, so trained
 #    books are engine-stable.
 # 2. The assignment distance follows from the codebook size. 8-entry
 #    books rank by the full 3-term expansion |v|^2 - 2<v,c> + |c|^2;
@@ -2139,10 +1878,6 @@ def pq_index_stats(index: PqIndex) -> DataFrame:
 # -- oracle twins ----------------------------------------------------------
 
 
-def _with(ctes: list[str]) -> str:
-    return ",\n".join(ctes)
-
-
 def pq_codes_sql(pq: ProductQuantizer) -> str:
     return f"""
 WITH {_with(pq.sql_e_ctes() + pq.sql_ctes())}
@@ -2169,8 +1904,7 @@ def pq_topk_sql(
     if iters is not None:
         ctes += _lloyd_cells_ctes(iters, include_e=False)
         ctes += [
-            "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-            f" vec_id = {query_id} AND rn <= {nprobe})",
+            _qcells_cte(query_id, nprobe),
             "cands AS (\n"
             "  SELECT cf.vec_id\n"
             "  FROM cells_fin cf JOIN qcells USING (cell)\n"
@@ -2282,129 +2016,68 @@ PQ_TOPK: dict[str, dict] = {
 # and each ε-duplicate pair keeps its lowest-id member — embedding-space
 # near-dup removal for training corpora, the semantic companion to the
 # lexical MinHash chain. At 100 TB the pair relation is bounded per cell
-# (sum of |cell|² over cells, never corpus²), the cell assignment is one
-# map pass, and the greedy min-id rule needs no iterative CC: one
-# bucketed self-join + one anti-join.
+# (sum of |cell|² over cells, never corpus²) only when the cell count k
+# grows with the corpus (the paper holds the expected cell population
+# constant, k ~= n / cell size); the cell assignment is one map pass, and
+# the greedy min-id rule needs no iterative CC: one bucketed self-join
+# (:func:`_cosine_pairs` keyed on the cell) + one anti-join.
 # ---------------------------------------------------------------------------
 
 
-#: SemDeDup cell sizing: the paper's regime holds the EXPECTED CELL
-#: POPULATION constant as the corpus grows (Abbas et al. 2023 use tens
-#: of thousands of clusters for hundreds of millions of embeddings), so
-#: per-cell pair work (sum |cell|^2) stays bounded. k must scale as
-#: n/target_cell_size — a FIXED k at a growing n makes the self-join
-#: quadratic again.
-SEMDEDUP_TARGET_CELL_SIZE = 64
-
-
-def semdedup_cell_count(
-    n_rows: int, target_cell_size: int = SEMDEDUP_TARGET_CELL_SIZE
-) -> int:
-    """k ~= ceil(n / target_cell_size), floored at 2: the cell count
-    that keeps expected per-cell pair work at ~target_cell_size^2/2
-    regardless of corpus size. The fixture default (500 rows, target
-    64) lands on the historical k=8."""
-    return max(2, -(-n_rows // target_cell_size))
-
-
-def _semdedup_cells(emb: DataFrame, k: int | None) -> DataFrame:
-    """Cell assignment for the SemDeDup family: the default
-    CENTROID_IDS seeds (k=None -> 8 cells, the fixture regime) or the
-    first ``k`` vec_ids as seeds. The assignment stays a pure
-    projection; only the number of folded centroid literals grows."""
+def _semdedup_cells(emb: DataFrame, k: int = len(CENTROID_IDS)) -> DataFrame:
+    """Cell assignment for the SemDeDup family: the first ``k`` vec_ids
+    as seed centroids (k=8, the fixture default, is CENTROID_IDS). The
+    assignment stays a pure projection; only the number of folded
+    centroid literals grows with k."""
     vecs = _vectors(emb)
-    if k is None:
-        return _with_cells(vecs)
     return _with_cells(vecs, cents=_seed_centroids(vecs, n=k))
+
+
+def _semdedup(
+    emb: DataFrame, tau: float, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """The cells relation and the ids it drops: a row is DROPPED iff
+    some lower-id row in the SAME cell has round6(cosine) >= ``tau``
+    (SemDeDup's within-cluster ε-rule with the deterministic
+    keep-lowest-id tiebreak)."""
+    cells = _semdedup_cells(emb, k)
+    dropped = (
+        _cosine_pairs(cells, "cell", tau)
+        .select(F.col("vec_b").alias("vec_id"))
+        .distinct()
+    )
+    return cells, dropped
 
 
 def semdedup_keep(
     emb: DataFrame,
     tau: float = COSINE_NEARDUP_THRESHOLD,
-    k: int | None = None,
+    k: int = len(CENTROID_IDS),
 ) -> DataFrame:
-    """Kept rows (vec_id, label, cell) after semantic dedup: a row is
-    DROPPED iff some lower-id row in the SAME centroid cell has
-    round6(cosine) >= ``tau`` (SemDeDup's within-cluster ε-rule with
-    the deterministic keep-lowest-id tiebreak). Rounding before the
-    threshold keeps the boundary pair set engine-identical.
-
-    ``k`` sizes the cell count (None -> the 8-cell fixture default);
-    production sizing is :func:`semdedup_cell_count` — k grows with
-    the corpus so per-cell pair volume stays bounded."""
-    cells = _semdedup_cells(emb, k)
-    wn = _with_norm(cells)
-    a = wn.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-        F.col("norm").alias("na"), "cell",
-    )
-    b = wn.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("nb"), F.col("cell").alias("cell_b"),
-    )
-    dropped = (
-        a.join(
-            b,
-            (F.col("cell") == F.col("cell_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .where(
-            _round6(
-                _dot_udf(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb"))
-            )
-            >= tau
-        )
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
+    """Kept rows (vec_id, label, cell) after semantic dedup over ``k``
+    cells (see :func:`_semdedup`)."""
+    cells, dropped = _semdedup(emb, tau, k)
     return cells.join(dropped, "vec_id", "left_anti").select(
         "vec_id", "label", "cell"
     )
 
 
-def _seed_cells_ctes(k: int | None = None) -> str:
-    """The e/cents/scored/cells CTE chain assigning every vector to its
-    max-cosine seed-centroid cell (ties -> lowest cid), shared by the
-    SemDeDup oracles; mirrors ann_ivf_topk_sql's assignment exactly.
-    ``k`` sizes the seed set like :func:`_semdedup_cells`."""
-    ids = CENTROID_IDS if k is None else tuple(range(1, k + 1))
-    cid_list = ", ".join(str(c) for c in ids)
-    return f"""e AS (
-  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),
-cents AS (
-  SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id IN ({cid_list})
-),
-scored AS (
-  SELECT e.vec_id, e.label, e.v, cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id ORDER BY
-             {_DOT_SQL.format(a='e.v', b='cv')}
-               / sqrt({_DOT_SQL.format(a='e.v', b='e.v')})
-               / sqrt({_DOT_SQL.format(a='cv', b='cv')}) DESC,
-             cid ASC
-         ) AS rn
-  FROM e, cents
-),
-cells AS (
-  SELECT vec_id, label, v, cid AS cell FROM scored WHERE rn = 1
-)"""
+def _semdedup_ctes(tau: float, k: int) -> list[str]:
+    """Oracle twin of :func:`_semdedup`: the seed-cell chain over vec_id
+    1..k (cells_fin) and the ``dropped`` ids of its within-cell pairs."""
+    pairs = _pairs_sql("cells_fin", "cells_fin", "cell", tau)
+    return _lloyd_cells_ctes(0, ids=tuple(range(1, k + 1))) + [
+        f"dropped AS (\n  SELECT DISTINCT vec_b AS vec_id FROM (\n{pairs}\n  )\n)"
+    ]
 
 
 def semdedup_keep_sql(
-    tau: float = COSINE_NEARDUP_THRESHOLD, k: int | None = None
+    tau: float = COSINE_NEARDUP_THRESHOLD, k: int = len(CENTROID_IDS)
 ) -> str:
     return f"""
-WITH {_seed_cells_ctes(k)},
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM cells a
-  JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))} >= {tau}
-)
+WITH {_with(_semdedup_ctes(tau, k))}
 SELECT c.vec_id, c.label, c.cell
-FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
+FROM cells_fin c LEFT JOIN dropped d ON c.vec_id = d.vec_id
 WHERE d.vec_id IS NULL
 """
 
@@ -2412,40 +2085,14 @@ WHERE d.vec_id IS NULL
 def semdedup_rate_by_label(
     emb: DataFrame,
     tau: float = COSINE_NEARDUP_THRESHOLD,
-    k: int | None = None,
+    k: int = len(CENTROID_IDS),
 ) -> DataFrame:
     """Per-label semantic-dedup health: (label, n_docs, n_dropped,
     drop_ppm) with drop_ppm = exact integer 1e6 * dropped / docs — the
     monitoring twin of :func:`semdedup_keep` (labels stand in for the
-    per-source feed monitor on the embeddings table)."""
-    # ONE cells build shared by the census and the drop relation (the
-    # keep-list variant would rebuild the assignment a second time)
-    cells = _semdedup_cells(emb, k)
-    wn = _with_norm(cells)
-    a = wn.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-        F.col("norm").alias("na"), "cell",
-    )
-    b = wn.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("nb"), F.col("cell").alias("cell_b"),
-    )
-    dropped_ids = (
-        a.join(
-            b,
-            (F.col("cell") == F.col("cell_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .where(
-            _round6(
-                _dot_udf(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb"))
-            )
-            >= tau
-        )
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
+    per-source feed monitor on the embeddings table). ONE cells build
+    serves the census and the drop relation."""
+    cells, dropped_ids = _semdedup(emb, tau, k)
     per = cells.groupBy("label").agg(F.count(F.lit(1)).alias("n_docs"))
     dropped = (
         cells.join(dropped_ids, "vec_id")
@@ -2470,21 +2117,15 @@ def semdedup_rate_by_label(
 
 
 def semdedup_rate_by_label_sql(
-    tau: float = COSINE_NEARDUP_THRESHOLD, k: int | None = None
+    tau: float = COSINE_NEARDUP_THRESHOLD, k: int = len(CENTROID_IDS)
 ) -> str:
     return f"""
-WITH {_seed_cells_ctes(k)},
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM cells a
-  JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_ROUND6_SQL.format(x=_COS_SQL.format(a='a.v', b='b.v'))} >= {tau}
-)
+WITH {_with(_semdedup_ctes(tau, k))}
 SELECT c.label,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(COUNT(d.vec_id) AS BIGINT) AS n_dropped,
        CAST((COUNT(d.vec_id) * 1000000) // COUNT(*) AS BIGINT) AS drop_ppm
-FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
+FROM cells_fin c LEFT JOIN dropped d ON c.vec_id = d.vec_id
 GROUP BY c.label
 ORDER BY c.label
 """

@@ -315,11 +315,10 @@ def ann_ivfpq16_serve_rerank_topk(
 def semdedup_keep_k32(spark: SparkSession, sf_dir: str) -> DataFrame:
     """semdedup_keep at a PRODUCTION-SHAPED cell count: k=32 cells over
     the 500-row fixture corpus instead of the 8-cell default —
-    exercising the paper's k ~= n/target_cell_size regime
-    (semdedup_cell_count) where k grows with the corpus so per-cell
-    pair volume stays bounded. The pair relation stays cell-bucketed
-    (plan-tested) at any k; only the folded centroid-literal count in
-    the assignment projection grows."""
+    exercising the paper's k ~= n/target_cell_size regime, where k
+    grows with the corpus so per-cell pair volume stays bounded. The
+    pair relation stays cell-bucketed (plan-tested) at any k; only the
+    folded centroid-literal count in the assignment projection grows."""
     return sim.semdedup_keep(fx._read(spark, sf_dir, "embeddings"), k=32)
 
 

@@ -566,52 +566,57 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.cosine_topk(fx._read(spark, sf_dir, "embeddings"))
 
 
-@_register("ann_lsh_topk", sim.ann_lsh_topk_sql())
+@_register("ann_lsh_topk", sim.lsh_topk_sql())
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k: random-hyperplane LSH bucket, exact rerank in-bucket."""
-    return sim.ann_lsh_topk(fx._read(spark, sf_dir, "embeddings"))
+    return sim.lsh_topk(fx._read(spark, sf_dir, "embeddings"))
 
 
-@_register("ann_lsh_topk_multiprobe", sim.ann_lsh_topk_multiprobe_sql())
+@_register(
+    "ann_lsh_topk_multiprobe",
+    sim.lsh_topk_sql(flips=sim.LSH_MULTIPROBE_FLIPS),
+)
 def ann_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH ANN: query bucket + all Hamming-1 neighbor
     buckets (flip each hyperplane bit once), exact rerank over the
     union — the recall knob on ann_lsh_topk (candidate superset, so
     recall@k >= single-probe; pinned by test_similarity recall test)."""
-    return sim.ann_lsh_topk_multiprobe(fx._read(spark, sf_dir, "embeddings"))
+    return sim.lsh_topk(
+        fx._read(spark, sf_dir, "embeddings"), flips=sim.LSH_MULTIPROBE_FLIPS
+    )
 
 
-@_register("ann_ivf_topk_lloyd", sim.ann_ivf_topk_lloyd_sql())
+@_register("ann_ivf_topk_lloyd", sim.ivf_topk_sql(iters=1))
 def ann_ivf_topk_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over centroids refined by ONE exact-decimal Lloyd
     iteration (operators/similarity.py — nano-unit integer means, so
     the k-means update is engine-stable; the honest clustering upgrade
     over the seeded quantizer)."""
-    return sim.ann_ivf_topk_lloyd(fx._read(spark, sf_dir, "embeddings"))
+    return sim.ivf_topk(fx._read(spark, sf_dir, "embeddings"), iters=1)
 
 
-@_register("ann_ivf_topk_lloyd2", sim.ann_ivf_topk_lloyd_sql(iters=2))
+@_register("ann_ivf_topk_lloyd2", sim.ivf_topk_sql(iters=2))
 def ann_ivf_topk_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over centroids refined by TWO exact-decimal Lloyd
     iterations — one more unroll of the same engine-stable k-means
     update (VERDICT r6 item 4); the measured recall@k of every ANN
     variant against cosine_topk ground truth is recorded in SCALE.md."""
-    return sim.ann_ivf_topk_lloyd(
-        fx._read(spark, sf_dir, "embeddings"), iters=2
-    )
+    return sim.ivf_topk(fx._read(spark, sf_dir, "embeddings"), iters=2)
 
 
-@_register("ann_ivf_topk_multiprobe", sim.ann_ivf_topk_multiprobe_sql())
+@_register("ann_ivf_topk_multiprobe", sim.ivf_topk_sql(nprobe=sim.IVF_NPROBE))
 def ann_ivf_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF ANN: rerank inside the nprobe=2 nearest centroid
     cells (boundary queries keep their runner-up cell's neighbors) —
     the recall knob on ann_ivf_topk."""
-    return sim.ann_ivf_topk_multiprobe(fx._read(spark, sf_dir, "embeddings"))
+    return sim.ivf_topk(
+        fx._read(spark, sf_dir, "embeddings"), nprobe=sim.IVF_NPROBE
+    )
 
 
 @_register(
     "ann_ivf_topk_lloyd_multiprobe",
-    sim.ann_ivf_topk_lloyd_sql(iters=1, nprobe=sim.IVF_NPROBE),
+    sim.ivf_topk_sql(iters=1, nprobe=sim.IVF_NPROBE),
 )
 def ann_ivf_topk_lloyd_multiprobe(
     spark: SparkSession, sf_dir: str
@@ -621,8 +626,8 @@ def ann_ivf_topk_lloyd_multiprobe(
     the corpus scanned (measured recall table in SCALE.md). The probe
     list ranks against the REFINED centroids with the same sequential
     dot the oracle's relational ranking evaluates."""
-    return sim.ann_ivf_topk_lloyd_multiprobe(
-        fx._read(spark, sf_dir, "embeddings")
+    return sim.ivf_topk(
+        fx._read(spark, sf_dir, "embeddings"), iters=1, nprobe=sim.IVF_NPROBE
     )
 
 
@@ -830,15 +835,15 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.embedding_neardup(fx._read(spark, sf_dir, "embeddings"))
 
 
-@_register("embedding_neardup_lsh", sim.EMBEDDING_NEARDUP_LSH_SQL)
+@_register("embedding_neardup_lsh", sim.lsh_pairs_sql())
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs, LSH-bucketed (the scale path)."""
-    return sim.embedding_neardup_lsh(fx._read(spark, sf_dir, "embeddings"))
+    return sim.lsh_pairs(fx._read(spark, sf_dir, "embeddings"))
 
 
 @_register(
     "embedding_neardup_lsh_multiprobe",
-    sim.EMBEDDING_NEARDUP_LSH_MULTIPROBE_SQL,
+    sim.lsh_pairs_sql(flips=sim.LSH_MULTIPROBE_FLIPS),
 )
 def embedding_neardup_lsh_multiprobe(
     spark: SparkSession, sf_dir: str
@@ -847,8 +852,8 @@ def embedding_neardup_lsh_multiprobe(
     bucket + Hamming-1 flips, so pairs straddling ONE hyperplane are
     recovered (each qualifying pair matches exactly once — identity
     flip for equal buckets, the single differing bit otherwise)."""
-    return sim.embedding_neardup_lsh_multiprobe(
-        fx._read(spark, sf_dir, "embeddings")
+    return sim.lsh_pairs(
+        fx._read(spark, sf_dir, "embeddings"), flips=sim.LSH_MULTIPROBE_FLIPS
     )
 
 
@@ -1064,11 +1069,11 @@ def returnflag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("ann_ivf_topk", sim.ann_ivf_topk_sql())
+@_register("ann_ivf_topk", sim.ivf_topk_sql())
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: coarse centroid cells, exact rerank in the probed
     cell (the k-means-cell join shape with deterministic centroids)."""
-    return sim.ann_ivf_topk(fx._read(spark, sf_dir, "embeddings"))
+    return sim.ivf_topk(fx._read(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,10 @@
 """Round-10 operator tests: the IVF-PQ16 index lifecycle (train -> add
 -> search) and the pins it owns, the similarity family's build-phase
-job counts, SemDeDup cell-count parameterization, and the CCNet
-staged-mix composition — each checked against an independent reference
-(the one-shot twins, a brute-force recompute, or composing the
-constituent operators separately), never against its own oracle SQL."""
+job counts and driver-side probe ranking, SemDeDup at a larger cell
+count, and the CCNet staged-mix composition — each checked against an
+independent reference (the one-shot twins, a brute-force recompute, or
+composing the constituent operators separately), never against its own
+oracle SQL."""
 
 from __future__ import annotations
 
@@ -80,7 +81,7 @@ def test_clear_trained_state_releases_only_index_pins(spark):
     mine = spark.range(50).selectExpr("id * 3 AS x")
     mine = mine.localCheckpoint(eager=True)
     emb = fx._read(spark, SF0001, "embeddings")
-    sim.ann_ivf_topk_multiprobe(emb).collect()
+    sim.ivf_topk(emb, nprobe=sim.IVF_NPROBE).collect()
     coded = _ivfpq16_index(emb).coded
     pinned = coded._jdf.queryExecution().analyzed().rdd().id()
     assert pinned in persistent()
@@ -95,11 +96,18 @@ def test_clear_trained_state_releases_only_index_pins(spark):
 #: needs twice is collected once and passed on, so a count above its
 #: bound is a collect that ran twice.
 BUILD_JOBS = {
+    "ann_ivf_topk": 3,
+    "ann_ivf_topk_lloyd": 5,
+    "ann_ivf_topk_lloyd_multiprobe": 5,
     "ann_ivf_topk_multiprobe": 3,
     "ann_ivfpq16_topk": 8,
+    "ann_lsh_topk": 2,
+    "ann_lsh_topk_multiprobe": 2,
     "ann_opq16_adc_topk": 7,
     "ann_pq8_adc_topk": 3,
+    "embedding_neardup_lsh": 2,
     "semdedup_keep": 2,
+    "semdedup_keep_k32": 2,
 }
 
 
@@ -117,6 +125,32 @@ def test_similarity_build_jobs_within_bound(spark, name):
     finally:
         sc._jsc.clearJobGroup()
     assert n <= BUILD_JOBS[name]
+
+
+@pytest.mark.parametrize("cents_of", ["seed", "lloyd1", "lloyd2", "seed32"])
+def test_probe_ranking_first_cell_is_the_assigned_cell(spark, cents_of):
+    """The driver-side probe ranking's first cell is the cell the
+    assignment kernel gives the same vector, for every corpus vector:
+    the single-probe IVF queries probe ``_probe_cells(q, cents, 1)``
+    and rely on it being the query's own cell. Covers the seed, Lloyd-1
+    and Lloyd-2 centroids and the k=32 seed band."""
+    emb = fx._read(spark, SF0001, "embeddings")
+    vecs = sim._vectors(emb)
+    cents = {
+        "seed": lambda: sim._seed_centroids(vecs),
+        "lloyd1": lambda: sim._lloyd_cents(vecs, 1),
+        "lloyd2": lambda: sim._lloyd_cents(vecs, 2),
+        "seed32": lambda: sim._seed_centroids(vecs, 32),
+    }[cents_of]()
+    rows = sim._with_cells(vecs, cents).select("vec_id", "v", "cell").collect()
+    assert len(rows) == emb.count() > 0
+    mismatched = [
+        r["vec_id"]
+        for r in rows
+        if sim._probe_cells([float(x) for x in r["v"]], cents, 1)
+        != [r["cell"]]
+    ]
+    assert mismatched == []
 
 
 def test_index_write_read_roundtrip_partition_pruning(spark, tmp_path):
@@ -167,32 +201,14 @@ def test_missing_query_id_fails_by_name(spark, entry):
         elif entry == "serve":
             sim.pq_search(_ivfpq16_index(emb), query_id=missing)
         elif entry == "ivf":
-            sim.ann_ivf_topk(emb, query_id=missing)
+            sim.ivf_topk(emb, query_id=missing)
         else:
-            sim.ann_ivf_topk_lloyd(emb, query_id=missing)
+            sim.ivf_topk(emb, query_id=missing, iters=1)
 
 
 # ---------------------------------------------------------------------------
-# SemDeDup cell-count parameterization
+# SemDeDup at a larger cell count
 # ---------------------------------------------------------------------------
-
-
-def test_semdedup_cell_count_rule():
-    """k ~= ceil(n/target), floored at 2 — the paper's constant-
-    expected-cell-population regime: 10x the corpus -> 10x the cells."""
-    assert sim.semdedup_cell_count(500) == 8  # the fixture default
-    assert sim.semdedup_cell_count(5_000) == 79
-    assert sim.semdedup_cell_count(5_000_000) == 78_125
-    # proportional within ceiling slack: 10x corpus -> ~10x cells
-    assert (
-        abs(
-            sim.semdedup_cell_count(5_000_000)
-            - 10 * sim.semdedup_cell_count(500_000)
-        )
-        <= 10
-    )
-    assert sim.semdedup_cell_count(1) == 2
-    assert sim.semdedup_cell_count(100, target_cell_size=10) == 10
 
 
 def test_semdedup_k32_plan_stays_cell_bucketed(spark):

@@ -152,7 +152,8 @@ def test_semdedup_keep_rule_matches_numpy_brute(spark, sf_dir):
     from retail_etl_pipeline_spark.operators import similarity as sim
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cells_df = sim._with_cells(sim._vectors(emb))
+    vecs = sim._vectors(emb)
+    cells_df = sim._with_cells(vecs, sim._seed_centroids(vecs))
     rows = cells_df.select("vec_id", "v", "cell").collect()
     ids = np.array([r["vec_id"] for r in rows])
     mat = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])

@@ -23,8 +23,10 @@ def _recall(approx: list[int], exact: list[int]) -> float:
 def test_lsh_multiprobe_recall_geq_single_probe(spark, sf_dir):
     emb = fx._read(spark, sf_dir, "embeddings")
     exact = _ids(sim.cosine_topk(emb))
-    single = _recall(_ids(sim.ann_lsh_topk(emb)), exact)
-    multi = _recall(_ids(sim.ann_lsh_topk_multiprobe(emb)), exact)
+    single = _recall(_ids(sim.lsh_topk(emb)), exact)
+    multi = _recall(
+        _ids(sim.lsh_topk(emb, flips=sim.LSH_MULTIPROBE_FLIPS)), exact
+    )
     assert multi >= single
     # the probe union must cover the query's own bucket: every
     # single-probe RESULT that survives the larger candidate pool's
@@ -36,8 +38,8 @@ def test_lsh_multiprobe_recall_geq_single_probe(spark, sf_dir):
 def test_ivf_multiprobe_recall_geq_single_probe(spark, sf_dir):
     emb = fx._read(spark, sf_dir, "embeddings")
     exact = _ids(sim.cosine_topk(emb))
-    single = _recall(_ids(sim.ann_ivf_topk(emb)), exact)
-    multi = _recall(_ids(sim.ann_ivf_topk_multiprobe(emb)), exact)
+    single = _recall(_ids(sim.ivf_topk(emb)), exact)
+    multi = _recall(_ids(sim.ivf_topk(emb, nprobe=sim.IVF_NPROBE)), exact)
     assert multi >= single
 
 
@@ -47,8 +49,8 @@ def test_lsh_multiprobe_candidates_superset(spark, sf_dir):
     the superset relation is testable directly."""
     emb = fx._read(spark, sf_dir, "embeddings")
     n = emb.count()
-    single = set(_ids(sim.ann_lsh_topk(emb, k=n)))
-    multi = set(_ids(sim.ann_lsh_topk_multiprobe(emb, k=n)))
+    single = set(_ids(sim.lsh_topk(emb, k=n)))
+    multi = set(_ids(sim.lsh_topk(emb, k=n, flips=sim.LSH_MULTIPROBE_FLIPS)))
     assert single <= multi
     # Hamming-1 flips add at least the 4 adjacent buckets' vectors on
     # this fixture (non-degenerate corpus)
@@ -58,8 +60,8 @@ def test_lsh_multiprobe_candidates_superset(spark, sf_dir):
 def test_ivf_multiprobe_candidates_superset(spark, sf_dir):
     emb = fx._read(spark, sf_dir, "embeddings")
     n = emb.count()
-    single = set(_ids(sim.ann_ivf_topk(emb, k=n)))
-    multi = set(_ids(sim.ann_ivf_topk_multiprobe(emb, k=n)))
+    single = set(_ids(sim.ivf_topk(emb, k=n)))
+    multi = set(_ids(sim.ivf_topk(emb, k=n, nprobe=sim.IVF_NPROBE)))
     assert single <= multi
     assert len(multi) > len(single)
 
@@ -72,7 +74,7 @@ def test_lsh_multiprobe_plan_broadcasts_probes(spark, sf_dir):
     spark.catalog.clearCache()
     emb = fx._read(spark, sf_dir, "embeddings")
     plan = (
-        sim.ann_lsh_topk_multiprobe(emb)
+        sim.lsh_topk(emb, flips=sim.LSH_MULTIPROBE_FLIPS)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan
@@ -88,9 +90,9 @@ def test_neardup_multiprobe_pairs_superset(spark, sf_dir):
     emb = fx._read(spark, sf_dir, "embeddings")
     single = {
         (r["vec_a"], r["vec_b"])
-        for r in sim.embedding_neardup_lsh(emb).collect()
+        for r in sim.lsh_pairs(emb).collect()
     }
-    rows = sim.embedding_neardup_lsh_multiprobe(emb).collect()
+    rows = sim.lsh_pairs(emb, flips=sim.LSH_MULTIPROBE_FLIPS).collect()
     multi = {(r["vec_a"], r["vec_b"]) for r in rows}
     assert len(rows) == len(multi)  # no pair emitted twice
     assert single <= multi
@@ -129,14 +131,16 @@ def test_ivf_lloyd_refinement_properties(spark, sf_dir):
     cell); (c) recall@k against exact brute force is computable and the
     probed cell is non-trivial (neither empty nor the whole corpus)."""
     from retail_etl_pipeline_spark.operators.similarity import (
-        _lloyd_refined_cells,
+        _lloyd_cents,
         _seed_centroids,
         _vectors,
+        _with_cells,
     )
 
     emb = fx._read(spark, sf_dir, "embeddings")
     vecs = _vectors(emb)
-    cells, refined = _lloyd_refined_cells(vecs)
+    refined = _lloyd_cents(vecs, 1)
+    cells = _with_cells(vecs, refined)
     seeds = _seed_centroids(vecs)
     assert set(refined) == set(seeds)
     moved = 0
@@ -150,7 +154,7 @@ def test_ivf_lloyd_refinement_properties(spark, sf_dir):
     n = emb.count()
     assert cells.count() == n
     exact = _ids(sim.cosine_topk(emb))
-    lloyd = _recall(_ids(sim.ann_ivf_topk_lloyd(emb)), exact)
+    lloyd = _recall(_ids(sim.ivf_topk(emb, iters=1)), exact)
     assert 0.0 <= lloyd <= 1.0
     probed = cells.where(
         cells.cell

@@ -2,12 +2,15 @@
 ground truth (VERDICT r6 item 4: turn the recall-ORDERING test into a
 recall NUMBER).
 
-Trains each variant's cells or PQ index once, then runs the engine's
-own probe per query id — the measured candidates are the engine's
-bucket/cell probes and ADC scans, not a reimplementation — and reports
-mean recall@k plus the mean fraction of the corpus scanned (the
-candidate-set size the probe admits, i.e. the work saved vs brute
-force). Results are committed to SCALE.md.
+Trains each IVF variant's cells and each PQ index once, then runs the
+engine's own search per query id — ``lsh_topk`` and the IVF search step
+with each registered variant's parameters, ``pq_search`` over each PQ
+index — so the measured candidates are the engine's bucket/cell probes
+and ADC scans, not a reimplementation. Reports mean recall@k plus the mean
+fraction of the corpus scanned (the candidate-set size the probe
+admits, i.e. the work saved vs brute force). Query ids are evenly
+spaced over the corpus ids that are not plane or centroid constants.
+Results are committed to SCALE.md.
 
 Usage: python tools/ann_recall.py [--sf-dir /root/testdata/sf0.1]
        [--k 10] [--queries 16]
@@ -45,51 +48,16 @@ def main(argv: list[str]) -> int:
     spark = get_spark(app_name="ann_recall", shuffle_partitions=8)
     emb = fx._read(spark, args.sf_dir, "embeddings").cache()
     n = emb.count()
-    # evenly spaced query ids, skipping the plane/centroid constant rows
+    # --queries ids evenly spaced over the ids that are not the
+    # plane/centroid constant rows
     reserved = set(sim.PLANE_IDS) | set(sim.CENTROID_IDS) | {0}
-    step = max(1, n // args.queries)
-    qids = [q for q in range(0, n, step) if q not in reserved][
-        : args.queries
-    ]
-
-    # candidate-set size per variant (probe selectivity): how many
-    # corpus vectors the probe ACTUALLY admits per query — the query's
-    # own bucket/cell (plus probes), from the same assignment relations
-    # the variants build, averaged over qids.
-    import math
-
-    def _cell_info(cells_df):
-        sizes = {
-            r["cell"]: r["n"]
-            for r in cells_df.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        qcells = {
-            r["vec_id"]: (r["cell"], list(r["v"]))
-            for r in cells_df.where(F.col("vec_id").isin(qids)).collect()
-        }
-        return sizes, qcells
-
-    def _ivf_mean_cands(sizes, qcells, cents, nprobe):
-        total = 0
-        for q in qids:
-            cell, v = qcells[q]
-            if nprobe == 1:
-                total += sizes.get(cell, 0)
-            else:
-                vn = math.sqrt(sim._seq_dot(v, v))
-                ranked = sorted(
-                    cents,
-                    key=lambda cid: (
-                        -sim._seq_dot(v, cents[cid])
-                        / vn
-                        / math.sqrt(sim._seq_dot(cents[cid], cents[cid])),
-                        cid,
-                    ),
-                )[:nprobe]
-                total += sum(sizes.get(c, 0) for c in ranked)
-        return total / len(qids)
+    pool = sorted(
+        r["vec_id"]
+        for r in emb.select("vec_id").collect()
+        if r["vec_id"] not in reserved
+    )
+    nq = min(args.queries, len(pool))
+    qids = [pool[i * len(pool) // nq] for i in range(nq)]
 
     truth = {}
     for q in qids:
@@ -98,67 +66,68 @@ def main(argv: list[str]) -> int:
             for r in sim.cosine_topk(emb, query_id=q, k=args.k).collect()
         }
 
-    vecs = sim._vectors(emb)
-    seed_cents = sim._seed_centroids(vecs)
-    cells_s = sim._with_cells(vecs, seed_cents)
-    cells_l1, cents_l1 = sim._lloyd_refined_cells(vecs, iters=1)
-    cells_l2, cents_l2 = sim._lloyd_refined_cells(vecs, iters=2)
-    s0, q0 = _cell_info(cells_s)
-    s1, q1 = _cell_info(cells_l1)
-    s2, q2 = _cell_info(cells_l2)
-    buckets = sim._with_buckets(vecs)
-    bucket_sizes = {
-        r["bucket"]: r["n"]
-        for r in buckets.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+    # each registered LSH/IVF variant: its entry point's parameters
+    k, nprobe = args.k, sim.IVF_NPROBE
+    flips = sim.LSH_MULTIPROBE_FLIPS
+    lsh = {"ann_lsh_topk": (0,), "ann_lsh_topk_multiprobe": flips}
+    ivf = {
+        "ann_ivf_topk": (0, 1),
+        "ann_ivf_topk_multiprobe": (0, nprobe),
+        "ann_ivf_topk_lloyd": (1, 1),
+        "ann_ivf_topk_lloyd2": (2, 1),
+        "ann_ivf_topk_lloyd_multiprobe": (1, nprobe),
     }
+    vecs = sim._vectors(emb)
+    cents = {name: sim._lloyd_cents(vecs, it) for name, (it, _) in ivf.items()}
+    variants = {
+        **{
+            name: lambda q, f=f: sim.lsh_topk(emb, q, k, flips=f)
+            for name, f in lsh.items()
+        },
+        **{
+            name: lambda q, c=cents[name], npr=npr: sim._ivf_search(
+                vecs, c, q, k, npr
+            )
+            for name, (_, npr) in ivf.items()
+        },
+    }
+
+    # candidate-set size per variant (probe selectivity): how many
+    # corpus vectors the probe ACTUALLY admits per query — the query's
+    # probed buckets/cells, sized from the same assignment relations
+    # the entry points build, averaged over qids.
+    def _sizes(df, key):
+        return {
+            r[key]: r["n"]
+            for r in df.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+
+    qvecs = {
+        r["vec_id"]: [float(x) for x in r["v"]]
+        for r in vecs.where(F.col("vec_id").isin(qids)).collect()
+    }
+    buckets = sim._with_buckets(vecs)
+    bucket_sizes = _sizes(buckets, "bucket")
     qbuckets = {
         r["vec_id"]: r["bucket"]
         for r in buckets.where(F.col("vec_id").isin(qids)).collect()
     }
     mean_cands = {
-        "ann_lsh_topk": sum(
-            bucket_sizes.get(qbuckets[q], 0) for q in qids
+        name: sum(
+            bucket_sizes.get(qbuckets[q] ^ fl, 0) for q in qids for fl in f
         )
-        / len(qids),
-        "ann_lsh_topk_multiprobe": sum(
-            bucket_sizes.get(qbuckets[q], 0)
-            + sum(
-                bucket_sizes.get(qbuckets[q] ^ (1 << i), 0)
-                for i in range(sim.LSH_PLANES)
-            )
+        / len(qids)
+        for name, f in lsh.items()
+    }
+    for name, (_, npr) in ivf.items():
+        sizes = _sizes(sim._with_cells(vecs, cents[name]), "cell")
+        mean_cands[name] = sum(
+            sizes.get(c, 0)
             for q in qids
-        )
-        / len(qids),
-        "ann_ivf_topk": _ivf_mean_cands(s0, q0, seed_cents, 1),
-        "ann_ivf_topk_multiprobe": _ivf_mean_cands(
-            s0, q0, seed_cents, sim.IVF_NPROBE
-        ),
-        "ann_ivf_topk_lloyd": _ivf_mean_cands(s1, q1, cents_l1, 1),
-        "ann_ivf_topk_lloyd2": _ivf_mean_cands(s2, q2, cents_l2, 1),
-        "ann_ivf_topk_lloyd_multiprobe": _ivf_mean_cands(
-            s1, q1, cents_l1, sim.IVF_NPROBE
-        ),
-    }
-
-    # each variant's probe over the cells trained above, per query id
-    k, nprobe = args.k, sim.IVF_NPROBE
-    variants = {
-        "ann_lsh_topk": lambda q: sim.ann_lsh_topk(emb, q, k),
-        "ann_lsh_topk_multiprobe": lambda q: sim.ann_lsh_topk_multiprobe(
-            emb, q, k
-        ),
-        "ann_ivf_topk": lambda q: sim._ivf_probe(cells_s, q, k),
-        "ann_ivf_topk_multiprobe": lambda q: sim._ivf_multiprobe(
-            vecs, cells_s, seed_cents, q, k, nprobe
-        ),
-        "ann_ivf_topk_lloyd": lambda q: sim._ivf_probe(cells_l1, q, k),
-        "ann_ivf_topk_lloyd2": lambda q: sim._ivf_probe(cells_l2, q, k),
-        "ann_ivf_topk_lloyd_multiprobe": lambda q: sim._ivf_multiprobe(
-            vecs, cells_l1, cents_l1, q, k, nprobe
-        ),
-    }
+            for c in sim._probe_cells(qvecs[q], cents[name], npr)
+        ) / len(qids)
 
     print(f"# recall@{args.k} over {len(qids)} queries, corpus n={n}")
     print(

@@ -1,17 +1,23 @@
 """Dump .explain("formatted") for registered queries into plans/<tag>/.
 
 Usage: python tools/dump_plans.py --tag r10 --suffix before q1 q2 ...
-       python tools/dump_plans.py --tag r10 --suffix after --all-touched f
+       python tools/dump_plans.py --tag r10 --suffix after q1 q2 ...
 
 Writes plans/<tag>/<query>_<suffix>.txt — the judge-checkable plan
-evidence for every query touched in an optimization round.
+evidence for every query touched in an optimization round. Each query
+is dumped in its own child process (one JVM per name), so expression
+ids and Expand column order do not depend on what was built before:
+a query dumped after others and dumped alone gives the same text.
 """
 
 from __future__ import annotations
 
 import argparse
+import multiprocessing
 import os
 import sys
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -23,9 +29,23 @@ def main() -> None:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    outdir = os.path.join(_ROOT, "plans", args.tag)
+    os.makedirs(outdir, exist_ok=True)
+    ctx = multiprocessing.get_context("spawn")
+    failed = []
+    for name in args.names:
+        path = os.path.join(outdir, f"{name}_{args.suffix}.txt")
+        child = ctx.Process(target=_dump_one, args=(name, args.sf, path))
+        child.start()
+        child.join()
+        if child.exitcode != 0:
+            failed.append(name)
+    if failed:
+        raise SystemExit(f"no plan dumped for: {', '.join(failed)}")
+
+
+def _dump_one(name: str, sf: str, path: str) -> None:
+    sys.path.insert(0, _ROOT)
     from retail_etl_pipeline_spark.registry import QUERIES
     from retail_etl_pipeline_spark.session import get_spark
 
@@ -33,22 +53,13 @@ def main() -> None:
         app_name="dump_plans",
         shuffle_partitions=int(os.environ["SPARK_GRAFT_CPUS"]),
     )
-    outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        args.tag,
-    )
-    os.makedirs(outdir, exist_ok=True)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    for name in args.names:
-        df = QUERIES[name](spark, args.sf)
-        txt = df._jdf.queryExecution().explainString(mode)
-        path = os.path.join(outdir, f"{name}_{args.suffix}.txt")
-        with open(path, "w") as f:
-            f.write(txt)
-        print(f"wrote {path} ({len(txt)} chars)")
+    txt = QUERIES[name](spark, sf)._jdf.queryExecution().explainString(mode)
+    with open(path, "w") as f:
+        f.write(txt)
+    print(f"wrote {path} ({len(txt)} chars)", flush=True)
     spark.stop()
 
 

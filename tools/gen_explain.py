@@ -151,11 +151,23 @@ SHOW = {
         "forwards at most 20 rows per source before the shuffle."
     ),
     "ann_lsh_topk_multiprobe": (
-        "Multi-probe LSH: the (1+bits)-bucket probe set is derived "
-        "relationally from the one query row (Generate/explode of the "
-        "xor array) and BroadcastHashJoin-ed into the bucketed corpus — "
-        "the scan stays an equi-lookup of a handful of buckets; the "
-        "final top-k is TakeOrderedAndProject."
+        "Multi-probe LSH, the one LSH search (lsh_topk) with the "
+        "identity + Hamming-1 flip set: the (1+bits)-bucket probe set is "
+        "derived relationally from the one query row (Generate/explode "
+        "of the xor array) and BroadcastHashJoin-ed into the bucketed "
+        "corpus — the scan stays an equi-lookup of a handful of "
+        "buckets; the final top-k is TakeOrderedAndProject. "
+        "Single-probe ann_lsh_topk is the same plan without the "
+        "Generate."
+    ),
+    "ann_ivf_topk_lloyd_multiprobe": (
+        "The one IVF search (ivf_topk) at its most general registered "
+        "parameters, iters=1 and nprobe=2: Lloyd training and the probe "
+        "ranking are bounded driver-side constants, so the plan is one "
+        "scan, the cell-assignment Arrow kernel, the probe-cell IN "
+        "filter and TakeOrderedAndProject — no join. The seed and "
+        "single-probe variants differ only in the centroid literals and "
+        "the IN list."
     ),
     "suppliers_sole_blame_late": (
         "TPC-H Q21 de-correlated: the textbook EXISTS / NOT EXISTS pair "
@@ -239,10 +251,11 @@ SHOW = {
         "key-fetch, exactly the faiss IndexIVFPQ+refine cost model."
     ),
     "semdedup_keep": (
-        "Semantic dedup: the pair relation rides a cell EQUI-join "
-        "(sum |cell|^2 work, never corpus^2), the drop rule is a "
-        "min-id predicate needing no iteration, and the keep list is "
-        "one broadcast anti-join."
+        "Semantic dedup: the pair relation is the within-key cosine "
+        "pair join the LSH near-dup pairs also use, keyed on the cell "
+        "(an EQUI-join, sum |cell|^2 work, never corpus^2), the drop "
+        "rule is a min-id predicate needing no iteration, and the keep "
+        "list is one broadcast anti-join."
     ),
     "ann_ivfpq16_serve_topk": (
         "The SEARCH step over a BUILT index (round 10): the serving "

@@ -109,6 +109,12 @@ QUERIES = [
     "ivfpq16_index_stats",
     "semdedup_keep_k32",
     "ccnet_staged_mix",
+    # the folded LSH/IVF searches at their most general registered
+    # parameters (Hamming-1 flip set; Lloyd cells probed at nprobe=2)
+    # and the LSH pair join SemDeDup shares
+    "ann_lsh_topk_multiprobe",
+    "ann_ivf_topk_lloyd_multiprobe",
+    "embedding_neardup_lsh_multiprobe",
 ]
 
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
